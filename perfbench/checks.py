@@ -4,23 +4,16 @@ batches against independent counts, and counts that must repeat.
 A query's Spark result is compared by ``tools.oracle_check.frame_sig``
 (row count, sorted column names, order-insensitive value hash) with
 the result of its ``__spark_entry__.oracle_sql()`` twin in DuckDB.
-The twins' signatures for the benchmark's own tables are recorded in
-``expected.json`` under a digest of the generated parquet files; when
-the digest matches, the recorded signature is used, otherwise the
-twin runs live.
+Every run executes the twins live in DuckDB over the run's tables.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import sys
 
 import numpy as np
-
-HERE = os.path.dirname(os.path.abspath(__file__))
-EXPECTED = os.path.join(HERE, "expected.json")
 
 
 def _frame_sig():
@@ -38,16 +31,7 @@ def signature(pdf) -> list:
     return [rows, cols, digest]
 
 
-def data_digest(sf_dir: str) -> str:
-    h = hashlib.sha256()
-    for name in sorted(os.listdir(sf_dir)):
-        h.update(name.encode())
-        with open(os.path.join(sf_dir, name), "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:16]
-
-
-def live_signatures(sf_dir: str, names: list[str]) -> dict[str, list]:
+def duckdb_signatures(sf_dir: str, names: list[str]) -> dict[str, list]:
     """Run the DuckDB twin of each query over the tables in ``sf_dir``."""
     import duckdb
 
@@ -64,17 +48,6 @@ def live_signatures(sf_dir: str, names: list[str]) -> dict[str, list]:
         return {n: signature(con.execute(oracles[n]).fetchdf()) for n in names}
     finally:
         con.close()
-
-
-def expected_signatures(sf_dir: str, sf: float, names: list[str]) -> dict[str, list]:
-    """Recorded twin signatures when the tables match the recording,
-    live DuckDB results otherwise."""
-    with open(EXPECTED) as fh:
-        recorded = json.load(fh).get(str(sf), {})
-    sigs = recorded.get("queries", {})
-    if recorded.get("data_digest") == data_digest(sf_dir) and all(n in sigs for n in names):
-        return {n: sigs[n] for n in names}
-    return live_signatures(sf_dir, names)
 
 
 def vector_pair_bound(base: np.ndarray, batch: np.ndarray, threshold: float) -> int:

@@ -10,14 +10,15 @@ per-layer metrics with ``--trace 1``. The line before it is a JSON
 report with provenance, set-up parts, failures and drifting counts.
 
 Everything the run writes stays under ``.perfbench/`` at the root of
-the checkout: tables, artifact store, Spark local dirs and warehouse
-per run (deleted at exit), span files and repeat-count records across
-runs.
+the checkout: Spark local dirs, warehouse and the ingest corpus and its
+artifact store per run (deleted at exit); the query workloads' tables
+and artifact store, span files and repeat-count records across runs.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shlex
@@ -29,9 +30,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, ".perfbench")
-# the tables are the same for every seed; the seed picks the query
-# order and the ingest batches
-DATA_SEED = 20240101
 ENGINE_FILES = ("dbt_eamples_spark/__init__.py", "__spark_entry__.py", "tools/oracle_check.py")
 
 
@@ -41,7 +39,7 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    p.add_argument("--sf", type=float, default=0.1, help="table scale factor (0.001, 0.01 or 0.1)")
+    p.add_argument("--sf", type=float, default=0.1, help="table scale factor of the query workloads (0.001 or 0.1)")
     return p.parse_args(argv)
 
 
@@ -51,7 +49,6 @@ def configure_env(work: str) -> None:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
     os.environ["SPARK_GRAFT_ARTIFACTS"] = os.path.join(work, "artifacts")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
     os.environ["TMPDIR"] = tmp
@@ -117,7 +114,7 @@ def retained_heap_mb(spark) -> float:
 
 def end_to_end(ctx) -> dict:
     return {
-        "setup_s": {"value": sum(ctx.setup_parts.values()), "unit": "s"},
+        "setup_s": {"value": ctx.setup_parts["session_s"] + ctx.setup_parts["prep_s"], "unit": "s"},
         "latency_p50_s": {"value": statistics.median(ctx.latencies), "unit": "s"},
         "throughput_ops_per_s": {"value": len(ctx.latencies) / ctx.timed_elapsed, "unit": "1/s"},
     }
@@ -193,8 +190,10 @@ def run(args, work: str) -> tuple[dict, dict]:
     import workloads
     from tools.treehash import engine_tree_hash
 
-    sf_dir = os.path.join(work, "data", f"sf{args.sf}")
-    datagen.write_tables(sf_dir, args.sf, DATA_SEED)
+    # tables are kept across runs; a change to datagen.py writes new ones
+    with open(datagen.__file__, "rb") as fh:
+        tables_tag = hashlib.sha256(fh.read()).hexdigest()[:12]
+    sf_dir = os.path.join(STATE, "data", f"sf{args.sf}-{tables_tag}")
     tracer = tracing.Tracer() if args.trace else None
     tree = engine_tree_hash()
     nproc = len(os.sched_getaffinity(0))
@@ -202,7 +201,7 @@ def run(args, work: str) -> tuple[dict, dict]:
         os.path.join(STATE, "records", f"{args.workload}-sf{args.sf}-seed{args.seed}.json"),
         {"engine_tree": tree, "nproc": nproc},
     )
-    ctx = workloads.Context(args, sf_dir, work, tracer, records)
+    ctx = workloads.Context(args, sf_dir, work, STATE, tracer, records)
     workload = workloads.WORKLOADS[args.workload]()
     try:
         workload.run(ctx)
@@ -229,6 +228,7 @@ def run(args, work: str) -> tuple[dict, dict]:
         "java": java,
         "engine_tree": tree,
         "setup_parts_s": ctx.setup_parts,
+        "prep_query_s": ctx.prep_query_s,
         "latency": percentile_report(ctx.latencies),
         "steps_s": ctx.steps_s,
         "query_p50_s": {k: statistics.median(v) for k, v in ctx.op_latencies.items()},

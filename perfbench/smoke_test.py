@@ -35,9 +35,7 @@ def _run(cwd: str, *args: str) -> subprocess.CompletedProcess:
 
 
 @pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize(
-    "workload", [w["name"] for w in SPEC["workloads"]] + ["ingest_batches"]
-)
+@pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]])
 def test_workload_smoke(workload: str, trace: int) -> None:
     proc = _run(ROOT, "--workload", workload, "--seed", "7", "--seconds", "1",
                 "--trace", str(trace), "--sf", "0.001")

@@ -11,7 +11,6 @@ operation is one batch.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import traceback
 
@@ -22,49 +21,52 @@ import datagen
 import checks
 import tracing
 
-# Both query sets hold an odd number of queries, so that over whole
-# passes the median latency is the median query's own latency instead
-# of jumping between its two neighbours.
+# Both query sets hold an odd number of queries, so that the median
+# latency of a pass is the median query's own latency instead of
+# jumping between its two neighbours.
 
-# Semantic-layer and relational queries: compiled metric requests,
-# relational metric shapes, TPC-H shapes and join/window primitives.
-# Small outputs; none touches artifacts or session caches, so a cache
-# or kernel change should leave this workload unchanged.
+# Both sets are kept to seven queries because every run executes each
+# query once in set-up before it times two passes, and the 70 runs of
+# the benchmark must fit in 57 minutes.
+
+# Semantic-layer and relational queries: compiled metric requests (one
+# of them a dimension sweep), a relational metric rollup, TPC-H shapes,
+# and join and window primitives. Small outputs; none touches artifacts
+# or session caches, so a cache or kernel change should leave this
+# workload unchanged.
 METRIC_QUERIES = [
     "metric_compiled_star",
-    "metric_compiled_filtered",
-    "metric_compiled_monthly",
-    "metric_compiled_topk",
     "metric_compiled_dim_sweep",
     "metric_rollup",
     "revenue_change_forecast",  # TPC-H Q6
-    "returned_item_customers",  # TPC-H Q10
     "lineitem_disjunctive_scan",  # TPC-H Q19
     "join_star_3way",
     "window_topk_per_group",
 ]
 
-# At least one query of each of operators.dedup, similarity, text, graph
-# and multimodal, chosen for eager construction jobs, session caches and
-# artifact reuse within the per-run time budget.
+# One or two queries of each of operators.dedup, similarity, text, graph
+# and multimodal. dedup_minhash runs six eager jobs in construction;
+# the graph query reads the shared graph artifact. dedup_clusters (11
+# eager jobs) is left out: its first execution alone took 10-12 s of
+# set-up and a pass 2.5-4 s on a 4-core machine.
 CURATION_QUERIES = [
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "corpus_keep_list",
+    "dedup_minhash",
     "similarity_topk",
     "embedding_norm_stats",
     "text_token_stats",
     "text_quality_score",
-    "corpus_mix_entropy",
     "graph_degree_powerlaw",
     "multimodal_meta",
-    "multimodal_features_flat",
 ]
 
-# vectors per ingest micro-batch, fixed at every scale
+# vectors in the base corpus ingest starts from, at every scale: the
+# size of the fixture embeddings table. The founding batch is fixed
+# cost: about 35 s on a 4-core machine from 200 or 500 vectors alike.
+BASE_VECTORS = 500
+# vectors per ingest micro-batch
 BATCH_VECTORS = 100
 # batches generated per run: the founding batch plus the timed ones
-MAX_BATCHES = 48
+MAX_BATCHES = 16
 
 OPERATOR_MODULES = ["dedup", "graph", "multimodal", "relational", "similarity", "text"]
 
@@ -94,10 +96,11 @@ class Context:
     """What a workload needs from the run: the session, the tables,
     the tracer, and where it records operations."""
 
-    def __init__(self, args, sf_dir: str, work: str, tracer: tracing.Tracer | None, records) -> None:
+    def __init__(self, args, sf_dir: str, work: str, state: str, tracer: tracing.Tracer | None, records) -> None:
         self.args = args
         self.sf_dir = sf_dir
         self.work = work
+        self.state = state  # kept across runs in the checkout
         self.tracer = tracer
         self.records = records
         self.spark = None
@@ -107,7 +110,9 @@ class Context:
         self.attempted = 0
         self.failed = 0
         self.failures: list[str] = []
+        # session_s and prep_s make setup_s; the rest is reported only
         self.setup_parts: dict[str, float] = {}
+        self.prep_query_s: dict[str, float] = {}
         self.timed_elapsed = 0.0
         self.steps_s: list[float] = []
         self.op_latencies: dict[str, list[float]] = {}
@@ -133,19 +138,20 @@ class Context:
         self.spark.sparkContext.setLogLevel("ERROR")
         return self.spark
 
-    def timed(self, step_untraced, step_traced) -> None:
-        """The measured loop. Untraced: steps for ``--seconds``. Traced:
-        untraced and traced steps alternate for twice as long, so that
+    def timed(self, step_untraced, step_traced, min_steps: int) -> None:
+        """The measured loop. Untraced: steps for ``--seconds`` and at
+        least ``min_steps``. Traced: untraced and traced steps alternate
+        for twice as long and at least ``min_steps`` of each, so that
         tracing overhead is measured in the same run."""
         seconds = self.args.seconds
         if self.tracer is None:
-            self.steps_s, self.timed_elapsed = closed_loop(seconds, step_untraced)
+            self.steps_s, self.timed_elapsed = closed_loop(seconds, step_untraced, min_steps)
             return
 
         def step(i: int) -> None:
             (step_traced if i % 2 else step_untraced)(i)
 
-        self.steps_s, self.timed_elapsed = closed_loop(2 * seconds, step, min_steps=2)
+        self.steps_s, self.timed_elapsed = closed_loop(2 * seconds, step, 2 * min_steps)
 
     def traced(self, op_id: str, fn):
         """Run ``fn`` with the tracer's wrappers installed; returns its
@@ -164,18 +170,28 @@ class Context:
 
 
 class QueryWorkload:
-    def __init__(self, names: list[str], warmup_passes: int) -> None:
+    # Passes timed at the least. A single pass left the median latency
+    # to one execution of one query, whose latency moved by 20-30 %
+    # from run to run on a 4-core machine. A third pass would not fit
+    # the benchmark's time budget.
+    MIN_PASSES = 2
+
+    def __init__(self, names: list[str]) -> None:
         self.names = names
-        self.warmup_passes = warmup_passes
 
     def run(self, ctx: Context) -> None:
         import __spark_entry__ as entry
 
+        # The tables and the artifact store persist in the checkout, so
+        # only the first run of a checkout builds the artifacts; the first
+        # executions of later runs read them, as a new session over a
+        # standing corpus does. Artifact builds are timed on ingest_batches.
+        datagen.write_tables(ctx.sf_dir, ctx.args.sf, datagen.DATA_SEED)
+        os.environ["SPARK_GRAFT_ARTIFACTS"] = os.path.join(ctx.state, "artifacts")
         spark = ctx.start_session()
         builders = entry.queries()
         order = seeded_order(self.names, ctx.args.seed)
         got: dict[str, list | None] = {}
-        prep = 0.0
         for name in order:
             # first execution of each query: warm-up, collected for the check
             ctx.attempted += 1
@@ -187,24 +203,10 @@ class QueryWorkload:
                 got[name] = None
                 continue
             finally:
-                prep += time.perf_counter() - t0
+                ctx.prep_query_s[name] = time.perf_counter() - t0
             got[name] = checks.signature(pdf)
-        ctx.setup_parts["prep_s"] = prep
-        want = checks.expected_signatures(ctx.sf_dir, ctx.args.sf, order)
-        for name in order:
-            if got[name] != want[name]:
-                ctx.fail(f"{name}: spark {got[name]} != duckdb {want[name]}")
+        ctx.setup_parts["prep_s"] = sum(ctx.prep_query_s.values())
         rows = {n: (got[n] or [0])[0] for n in order}
-        # untimed passes while the JVM keeps compiling: without them the
-        # timed passes still sped up by 5-10 % each
-        t0 = time.perf_counter()
-        for _ in range(self.warmup_passes):
-            for name in order:
-                try:
-                    builders[name](spark, ctx.sf_dir).write.format("noop").mode("overwrite").save()
-                except Exception:
-                    traceback.print_exc()
-        ctx.setup_parts["warmup_s"] = time.perf_counter() - t0
 
         def untraced(i: int) -> None:
             for name in order:
@@ -233,7 +235,15 @@ class QueryWorkload:
                 ctx.traced_latencies.append(latency)
                 ctx.traced_ops.append(op_id)
 
-        ctx.timed(untraced, traced)
+        ctx.timed(untraced, traced, self.MIN_PASSES)
+
+        # after the timed loop, so that DuckDB's threads do not disturb it
+        t0 = time.perf_counter()
+        want = checks.duckdb_signatures(ctx.sf_dir, order)
+        ctx.setup_parts["check_s"] = time.perf_counter() - t0
+        for name in order:
+            if got[name] != want[name]:
+                ctx.fail(f"{name}: spark {got[name]} != duckdb {want[name]}")
 
     @staticmethod
     def _traced_query(ctx: Context, builder, name: str, op_id: str) -> None:
@@ -263,8 +273,9 @@ class QueryWorkload:
 
 
 class IngestWorkload:
-    """Embeddings micro-batches appended to a fresh copy of the base
-    corpus, every embedding artifact delta-maintained and published."""
+    """Embeddings micro-batches appended to a fresh base corpus of
+    ``BASE_VECTORS`` vectors, every embedding artifact delta-maintained
+    and published. ``--sf`` does not apply."""
 
     def run(self, ctx: Context) -> None:
         from dbt_eamples_spark.catalog import table_path
@@ -273,11 +284,8 @@ class IngestWorkload:
 
         corpus = os.path.join(ctx.work, "corpus")
         os.makedirs(table_path(corpus, "embeddings"))
-        shutil.copy(
-            table_path(ctx.sf_dir, "embeddings"),
-            os.path.join(table_path(corpus, "embeddings"), "part-00000.parquet"),
-        )
-        base = pq.read_table(table_path(ctx.sf_dir, "embeddings"))
+        base = datagen.embeddings(np.random.default_rng(datagen.DATA_SEED), BASE_VECTORS)
+        pq.write_table(base, os.path.join(table_path(corpus, "embeddings"), "part-00000.parquet"))
         rng = np.random.default_rng(ctx.args.seed)
         first = int(base.column("vec_id").to_numpy().max()) + 1
         batch_dir = os.path.join(ctx.work, "batches")
@@ -366,14 +374,11 @@ class IngestWorkload:
             ctx.traced_latencies.append(latency)
             ctx.traced_ops.append(op_id)
 
-        ctx.timed(untraced, traced)
+        ctx.timed(untraced, traced, min_steps=1)
 
 
-# Warm-up passes per query workload: the short metric queries are
-# dominated by driver-side planning code, which the JIT compiles over
-# more passes than the executor-heavy curation queries need.
 WORKLOADS = {
-    "metric_queries": lambda: QueryWorkload(METRIC_QUERIES, warmup_passes=2),
-    "curation_queries": lambda: QueryWorkload(CURATION_QUERIES, warmup_passes=1),
+    "metric_queries": lambda: QueryWorkload(METRIC_QUERIES),
+    "curation_queries": lambda: QueryWorkload(CURATION_QUERIES),
     "ingest_batches": IngestWorkload,
 }
