@@ -19,6 +19,10 @@ unchanged whether an index was built or loaded).
 
 ``ARTIFACT_EVENTS`` records (kind, "build" | "reuse") per call — the
 observability hook the reuse tests assert on.
+
+Artifacts are immutable, so :func:`publish` lands a frame that is an
+unchanged stored generation under a new fingerprint by hard-linking
+its files instead of rewriting them.
 """
 
 from __future__ import annotations
@@ -39,9 +43,14 @@ ARTIFACT_EVENTS: list[tuple[str, str]] = []
 
 def artifacts_root() -> str:
     """Resolved per call so tests (and deployments) can point the
-    store elsewhere via SPARK_GRAFT_ARTIFACTS."""
+    store elsewhere via SPARK_GRAFT_ARTIFACTS; the default is
+    ``_artifacts/`` next to the package, wherever it is checked out."""
     return os.environ.get(
-        "SPARK_GRAFT_ARTIFACTS", "/root/repo/_artifacts"
+        "SPARK_GRAFT_ARTIFACTS",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "_artifacts",
+        ),
     )
 
 
@@ -113,15 +122,46 @@ def load_or_build(
     the winner's identical (same-fingerprint) artifact. Hits read the
     parquet back — at scale that read is the bucketed/pruned scan the
     index exists to provide."""
+    return _land(
+        spark, kind, fingerprint,
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
+    )
+
+
+def publish(
+    spark: SparkSession, kind: str, fingerprint: str, df: DataFrame
+) -> DataFrame:
+    """Land an already-planned ``df`` as the ``kind`` artifact for
+    ``fingerprint``. A frame that IS a stored generation of the same
+    kind — the unchanged scan :func:`load_or_build` returned, e.g. the
+    IVF quantizer an append carries forward — is republished by
+    hard-linking that generation's files into the temp sibling
+    instead of re-writing them through Spark; the rename, the
+    ``build`` event and the manifest stamp are the same either way.
+    Artifacts are immutable, so shared inodes are safe, and GC of the
+    older generation leaves the links intact."""
+    src = getattr(df, "_artifact_generation", None)
+    if src is None or src[0] != kind:
+        return load_or_build(spark, kind, fingerprint, lambda: df)
+    return _land(
+        spark, kind, fingerprint,
+        lambda tmp: shutil.copytree(
+            artifact_path(*src), tmp, copy_function=os.link
+        ),
+    )
+
+
+def _land(spark: SparkSession, kind: str, fingerprint: str, write) -> DataFrame:
+    """The publish-by-rename contract shared by :func:`load_or_build`
+    and :func:`publish`: reuse a complete artifact, else ``write(tmp)``
+    a temp sibling and rename it into place."""
     path = artifact_path(kind, fingerprint)
-    marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
         ARTIFACT_EVENTS.append((kind, "reuse"))
         _manifest_touch(kind, fingerprint, built=False)
-        return spark.read.parquet(path)
-    df = build()
+        return _scan(spark, kind, fingerprint)
     tmp = f"{path}.build.{os.getpid()}.{time.time_ns()}"
-    df.write.mode("overwrite").parquet(tmp)
+    write(tmp)
     published = True
     try:
         os.rename(tmp, path)
@@ -133,7 +173,15 @@ def load_or_build(
         published = False
     ARTIFACT_EVENTS.append((kind, "build" if published else "reuse"))
     _manifest_touch(kind, fingerprint, built=published)
-    return spark.read.parquet(path)
+    return _scan(spark, kind, fingerprint)
+
+
+def _scan(spark: SparkSession, kind: str, fingerprint: str) -> DataFrame:
+    """Read a stored generation back, tagged with its (kind,
+    fingerprint) so :func:`publish` can recognise it unchanged."""
+    df = spark.read.parquet(artifact_path(kind, fingerprint))
+    df._artifact_generation = (kind, fingerprint)
+    return df
 
 
 def load_or_build_bucketed(

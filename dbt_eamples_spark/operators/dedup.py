@@ -923,17 +923,20 @@ def lsh_candidate_pairs(
     any corpus size (the production path sizes ``nplanes`` with
     :func:`similarity.lsh_planes`; the fixture default keeps the
     static oracle)."""
-    from dbt_eamples_spark.operators.similarity import (
-        probe_key_pairs,
-        with_lsh_probes,
-    )
+    from dbt_eamples_spark.operators.similarity import with_lsh_probes
 
     pk = with_lsh_probes(v, "vec", tables, flips, nplanes=nplanes)
     pkc = pk.select(
         "vec_id", *[f"p{t}" for t in range(tables)]
     ).localCheckpoint(eager=True)
-    ka = pkc.select(
-        F.col("vec_id").alias("vec_a"),
+    return _probe_pairs(pkc, tables)
+
+
+def _base_keys(keyed: DataFrame, tables: int, id_alias: str) -> DataFrame:
+    """(id_alias, t, bucket): one row per table, bucket = element 1 of
+    the probe array ``p{t}`` — the base (no-flip) key."""
+    return keyed.select(
+        F.col("vec_id").alias(id_alias),
         F.explode(
             F.array(
                 *[
@@ -945,13 +948,21 @@ def lsh_candidate_pairs(
                 ]
             )
         ).alias("tb"),
-    ).select("vec_a", "tb.t", "tb.bucket")
-    kb = pkc.select(
+    ).select(id_alias, "tb.t", "tb.bucket")
+
+
+def _probe_pairs(keyed: DataFrame, tables: int) -> DataFrame:
+    """Distinct (vec_a < vec_b) pairs of a keyed frame: base keys of
+    one side equi-joined to every probe key of the other."""
+    from dbt_eamples_spark.operators.similarity import probe_key_pairs
+
+    kb = keyed.select(
         F.col("vec_id").alias("vec_b"),
         F.explode(probe_key_pairs(tables)).alias("tb"),
     ).select("vec_b", "tb.t", "tb.bucket")
     return (
-        ka.join(kb, ["t", "bucket"])
+        _base_keys(keyed, tables, "vec_a")
+        .join(kb, ["t", "bucket"])
         .filter(F.col("vec_a") != F.col("vec_b"))
         .select(
             F.least("vec_a", "vec_b").alias("pa"),
@@ -959,6 +970,50 @@ def lsh_candidate_pairs(
         )
         .select(F.col("pa").alias("vec_a"), F.col("pb").alias("vec_b"))
         .distinct()
+    )
+
+
+def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
+    """Exact-cosine verify of PINNED candidate pairs (vec_a, vec_b)
+    over ``v(vec_id, vec)``: (vec_a, vec_b, cosine) with cosine ≥
+    COSINE_NEAR_DUP."""
+    ids = (
+        cands.select(F.col("vec_a").alias("vec_id"))
+        .union(cands.select(F.col("vec_b").alias("vec_id")))
+        .distinct()
+    )
+    # norms once per vector on the (small) broadcast side — the
+    # per-pair verify then pays a single 64-element fold; same float
+    # ops in the same order as the oracle's dot/(na*nb)
+    nrm = F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x))
+    cand_vecs = v.join(F.broadcast(ids), "vec_id").select(
+        "vec_id", "vec", nrm.alias("nrm")
+    )
+    a = cand_vecs.select(
+        F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"),
+        F.col("nrm").alias("na"),
+    )
+    b = cand_vecs.select(
+        F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"),
+        F.col("nrm").alias("nb"),
+    )
+    dot = F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    # Catalyst substitutes the cosine alias into the filter and pushes
+    # it into the join condition — benign here (unlike the
+    # CollapseProject pitfall at `_shingles`): the fold runs once per
+    # candidate in the join condition and is re-evaluated only for
+    # the few rows that pass the threshold.
+    return (
+        cands.join(F.broadcast(a), "vec_a")
+        .join(F.broadcast(b), "vec_b")
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= COSINE_NEAR_DUP)
     )
 
 
@@ -1034,46 +1089,7 @@ def dedup_embedding_cosine(
         flips=DEDUP_PROBE_FLIPS,
         nplanes=nplanes,
     )
-    cands = pairs.localCheckpoint(eager=True)
-
-    ids = (
-        cands.select(F.col("vec_a").alias("vec_id"))
-        .union(cands.select(F.col("vec_b").alias("vec_id")))
-        .distinct()
-    )
-    # norms once per vector on the (small) broadcast side — the
-    # per-pair verify then pays a single 64-element fold; same float
-    # ops in the same order as the oracle's dot/(na*nb)
-    nrm = F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x))
-    cand_vecs = v.join(F.broadcast(ids), "vec_id").select(
-        "vec_id", "vec", nrm.alias("nrm")
-    )
-    a = cand_vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = cand_vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    # Catalyst substitutes the cosine alias into the filter and pushes
-    # it into the join condition — benign here (unlike the
-    # CollapseProject pitfall at `_shingles`): the fold runs once per
-    # candidate in the join condition and is re-evaluated only for
-    # the few rows that pass the threshold.
-    return (
-        cands.join(F.broadcast(a), "vec_a")
-        .join(F.broadcast(b), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= COSINE_NEAR_DUP)
-    )
+    return _cosine_verify(v, pairs.localCheckpoint(eager=True))
 
 
 def corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2893,42 +2909,65 @@ def cosine_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_fingerprint,
         load_or_build,
     )
-    from dbt_eamples_spark.operators.similarity import (
-        DEDUP_LSH_TABLES,
-        _as_double_vec,
-        lsh_planes,
-        with_lsh_probes,
-    )
+    from dbt_eamples_spark.operators.similarity import lsh_planes
 
     def build() -> DataFrame:
-        emb = load_table(
-            spark, sf_dir, "embeddings", parallelize=True
-        ).select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
-        )
-        corpus = emb.filter(F.col("vec_id") % INCR_MOD != 0)
-        np_ = lsh_planes(corpus.count())
-        keyed = with_lsh_probes(
-            corpus, "vec", DEDUP_LSH_TABLES, 0, nplanes=np_
-        )
-        parts = [
-            keyed.select(
-                F.col("vec_id").alias("corpus_vec"),
-                F.lit(t).cast("int").alias("t"),
-                F.element_at(f"p{t}", 1).alias("bucket"),
-            )
-            for t in range(DEDUP_LSH_TABLES)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        corpus = _standing_vecs(spark, sf_dir)
+        return _cosine_index_rows(corpus, lsh_planes(corpus.count()))
 
     return load_or_build(
         spark,
         "cosine_base_index",
         corpus_fingerprint(sf_dir, "embeddings"),
         build,
+    )
+
+
+def _standing_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, vec) of the standing corpus, the rows the index holds."""
+    from dbt_eamples_spark.operators.similarity import _as_double_vec
+
+    return load_table(spark, sf_dir, "embeddings", parallelize=True).select(
+        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+    ).filter(F.col("vec_id") % INCR_MOD != 0)
+
+
+def _cosine_index_rows(corpus: DataFrame, nplanes: int) -> DataFrame:
+    """Index rows of ``corpus`` (vec_id, vec) keyed from scratch."""
+    from dbt_eamples_spark.operators.similarity import (
+        DEDUP_LSH_TABLES,
+        with_lsh_probes,
+    )
+
+    keyed = with_lsh_probes(corpus, "vec", DEDUP_LSH_TABLES, 0, nplanes=nplanes)
+    return _base_keys(keyed, DEDUP_LSH_TABLES, "corpus_vec")
+
+
+def standing_count(spark: SparkSession, sf_dir: str) -> int:
+    """Standing-corpus row count, which sizes ``lsh_planes`` — on the
+    RAW scan: no repartition shuffle for a scalar (r15)."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % INCR_MOD != 0)
+        .count()
+    )
+
+
+def cosine_delta_keys(vecs: DataFrame, nplanes: int) -> DataFrame:
+    """``vecs`` (vec_id, vec, ...) plus the multi-probe arrays
+    ``p0..p{DEDUP_LSH_TABLES-1}`` at ``nplanes`` — the ONE keying of
+    an embeddings delta. Element 1 of each array is the base bucket
+    the index stores, the whole array the probe into it; so one
+    pinned keyed frame feeds the index append, the delta×base probe
+    and the delta×delta pairs."""
+    from dbt_eamples_spark.operators.similarity import (
+        DEDUP_LSH_TABLES,
+        DEDUP_PROBE_FLIPS,
+        with_lsh_probes,
+    )
+
+    return with_lsh_probes(
+        vecs, "vec", DEDUP_LSH_TABLES, DEDUP_PROBE_FLIPS, nplanes=nplanes
     )
 
 
@@ -2943,7 +2982,7 @@ def cosine_base_index_apply_delta(
     the ``delta_embeddings`` (vec_id, embedding) ONLY and append,
     filtered with the same %INCR_MOD corpus convention the
     from-scratch build applies (the ADVICE-r9 fingerprint→content
-    invariant).
+    invariant). A thin wrapper over :func:`_cosine_index_delta`.
 
     RESIZE RULE: ``lsh_planes`` is sized by corpus count, so an
     append that pushes the corpus across a plane-count step CANNOT
@@ -2954,63 +2993,55 @@ def cosine_base_index_apply_delta(
     are ×2 in corpus size — and detected exactly, never silently
     wrong). Both paths are pytest-locked row-identical to a
     from-scratch build over the union."""
-    from dbt_eamples_spark.artifacts import load_or_build
+    from dbt_eamples_spark.artifacts import publish
     from dbt_eamples_spark.operators.similarity import (
-        DEDUP_LSH_TABLES,
         _as_double_vec,
         lsh_planes,
-        with_lsh_probes,
     )
 
-    def keys_for(corpus: DataFrame, np_: int) -> DataFrame:
-        keyed = with_lsh_probes(
-            corpus, "vec", DEDUP_LSH_TABLES, 0, nplanes=np_
-        )
-        parts = [
-            keyed.select(
-                F.col("vec_id").alias("corpus_vec"),
-                F.lit(t).cast("int").alias("t"),
-                F.element_at(f"p{t}", 1).alias("bucket"),
-            )
-            for t in range(DEDUP_LSH_TABLES)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    emb = load_table(
-        spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
-    base_corpus = emb.filter(F.col("vec_id") % INCR_MOD != 0)
-    d = delta_embeddings.select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
-    ).filter(F.col("vec_id") % INCR_MOD != 0)
-    base_n = base_corpus.count()
-    delta_n = d.count()
-    np_base = lsh_planes(base_n)
-    np_union = lsh_planes(base_n + delta_n)
-    if np_union != np_base:
-        # index resize: every existing bucket id changes — rebuild.
-        # Pinned eagerly: the rebuild scans the LIVE embeddings
-        # table, and the two-phase ingest shape publishes AFTER
-        # appending the delta to that table — a lazy plan evaluated
-        # at publish time would re-read the grown table and
-        # duplicate the delta rows (matching the checkpoint
-        # discipline of the document-side apply_delta functions)
-        merged = keys_for(base_corpus.unionByName(d), np_union).localCheckpoint(
-            eager=True
-        )
-    else:
-        merged = cosine_base_index(spark, sf_dir).unionByName(
-            keys_for(d, np_base)
-        )
+    base_n = standing_count(spark, sf_dir)
+    keyed = cosine_delta_keys(
+        delta_embeddings.select(
+            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        ),
+        lsh_planes(base_n),
+    )
+    delta_n = keyed.filter(F.col("vec_id") % INCR_MOD != 0).count()
+    merged = _cosine_index_delta(spark, sf_dir, keyed, base_n, delta_n)
     if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "cosine_base_index", publish_fingerprint,
-            lambda: merged,
-        )
+        merged = publish(spark, "cosine_base_index", publish_fingerprint, merged)
     return merged
+
+
+def _cosine_index_delta(
+    spark: SparkSession, sf_dir: str, keyed: DataFrame, base_n: int,
+    delta_n: int,
+) -> DataFrame:
+    """The merged index for a delta keyed at ``lsh_planes(base_n)``;
+    ``base_n`` / ``delta_n`` count the standing rows of the corpus /
+    of the delta."""
+    from dbt_eamples_spark.operators.similarity import (
+        DEDUP_LSH_TABLES,
+        lsh_planes,
+    )
+
+    d = keyed.filter(F.col("vec_id") % INCR_MOD != 0)
+    np_union = lsh_planes(base_n + delta_n)
+    if np_union == lsh_planes(base_n):
+        return cosine_base_index(spark, sf_dir).unionByName(
+            _base_keys(d, DEDUP_LSH_TABLES, "corpus_vec")
+        )
+    # index resize: every existing bucket id changes — rebuild.
+    # Pinned eagerly: the rebuild scans the LIVE embeddings table,
+    # and the two-phase ingest shape publishes AFTER appending the
+    # delta to that table — a lazy plan evaluated at publish time
+    # would re-read the grown table and duplicate the delta rows
+    # (matching the checkpoint discipline of the document-side
+    # apply_delta functions)
+    return _cosine_index_rows(
+        _standing_vecs(spark, sf_dir).unionByName(d.select("vec_id", "vec")),
+        np_union,
+    ).localCheckpoint(eager=True)
 
 
 def dedup_incremental_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3032,47 +3063,34 @@ def dedup_incremental_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
     ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
-    # count on the RAW scan — no repartition shuffle for a scalar
-    # (r15; same value, the filter is the only non-metadata part)
-    corpus_n = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % INCR_MOD != 0)
-        .count()
-    )
-    np_ = lsh_planes(corpus_n)  # scalar: index-build param
+    np_ = lsh_planes(standing_count(spark, sf_dir))  # index-build param
     delta = emb.filter(F.col("vec_id") % INCR_MOD == 0)
-    return _cosine_delta_vs_base(spark, sf_dir, delta, np_)
+    return _cosine_delta_vs_base(spark, sf_dir, cosine_delta_keys(delta, np_))
 
 
 def _cosine_delta_vs_base(
-    spark: SparkSession, sf_dir: str, delta_vecs: DataFrame, np_: int
+    spark: SparkSession, sf_dir: str, keyed: DataFrame
 ) -> DataFrame:
     """The delta×base probe shared by :func:`dedup_incremental_cosine`
-    (delta = the table's %INCR_MOD convention rows) and
-    :func:`cosine_pairs_delta_new` (delta = an arbitrary not-yet-
-    appended ingest batch). ``delta_vecs`` is (vec_id, vec); the
-    a-side verify vectors are drawn from it (NOT the table — an
-    ingest batch is probed before its append), the b-side from the
-    persisted index's standing corpus. Same float expressions in the
-    same order as the pre-refactor inline body, so the driver-checked
-    hash contract of dedup_incremental_cosine is unchanged."""
+    (delta = the table's %INCR_MOD convention rows),
+    :func:`cosine_pairs_delta_new` and the ingest loop (delta = a
+    not-yet-appended batch), keyed by :func:`cosine_delta_keys` at
+    the index's plane count. The a-side verify vectors are drawn
+    from the delta (NOT the table — an ingest batch is probed before
+    its append), the b-side from the persisted index's standing
+    corpus. Same float expressions in the same order as the
+    pre-refactor inline body, so the driver-checked hash contract of
+    dedup_incremental_cosine is unchanged."""
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
-        DEDUP_PROBE_FLIPS,
+        _as_double_vec,
         probe_key_pairs,
-        with_lsh_probes,
     )
-
-    from dbt_eamples_spark.operators.similarity import _as_double_vec
 
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
     ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
-    delta = delta_vecs
-    dk = with_lsh_probes(
-        delta, "vec", DEDUP_LSH_TABLES, DEDUP_PROBE_FLIPS, nplanes=np_
-    )
-    probe = dk.select(
+    probe = keyed.select(
         F.col("vec_id").alias("new_vec"),
         F.explode(probe_key_pairs(DEDUP_LSH_TABLES)).alias("tb"),
     ).select("new_vec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
@@ -3089,7 +3107,7 @@ def _cosine_delta_vs_base(
     # a-side vectors from the DELTA frame (for an ingest batch they
     # are not in the table yet); b-side from the table — same rows /
     # same float fold either way for the convention delta
-    a = delta.join(
+    a = keyed.join(
         F.broadcast(cands.select(F.col("new_vec").alias("vec_id")).distinct()),
         "vec_id",
     ).select(
@@ -3149,15 +3167,11 @@ def cosine_pairs_delta_new(
 
     d = delta_embeddings.select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
-    ).localCheckpoint(eager=True)  # delta-sized; probed and verified
-    # against the PRE-append corpus state, must survive the append
-    emb_ids = load_table(
-        spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id")
+    )
     if not assume_new_ids:
         overlap = (
             d.select("vec_id")
-            .join(emb_ids, "vec_id", "left_semi")
+            .join(load_table(spark, sf_dir, "embeddings"), "vec_id", "left_semi")
             .limit(1)
             .collect()
         )
@@ -3167,9 +3181,11 @@ def cosine_pairs_delta_new(
                 f"already in the base corpus (e.g. {overlap[0].vec_id})"
                 " — the delta contract is new-ids-only"
             )
-    base_n = emb_ids.filter(F.col("vec_id") % INCR_MOD != 0).count()
-    np_ = lsh_planes(base_n)  # scalar: MUST match the index build
-    return _cosine_delta_vs_base(spark, sf_dir, d, np_)
+    np_ = lsh_planes(standing_count(spark, sf_dir))  # MUST match the index
+    # pinned: delta-sized; probed and verified against the PRE-append
+    # corpus state, must survive the append
+    keyed = cosine_delta_keys(d, np_).localCheckpoint(eager=True)
+    return _cosine_delta_vs_base(spark, sf_dir, keyed)
 
 
 def cosine_pairs_delta_within(
@@ -3178,56 +3194,23 @@ def cosine_pairs_delta_within(
     """LSH self-pairs WITHIN an ingest batch — the delta x delta leg
     of the embedding ingest probe (delta x base being
     :func:`cosine_pairs_delta_new`): :func:`lsh_candidate_pairs`
-    over the batch alone, then dedup_embedding_cosine's exact-cosine
-    verify. Output (vec_a, vec_b, cosine), vec_a < vec_b. Cost is
-    batch-sized (plane dots) + collision-bounded (verify), never
-    corpus-touching."""
-    from dbt_eamples_spark.operators.similarity import (
-        DEDUP_LSH_TABLES,
-        DEDUP_PROBE_FLIPS,
-        _as_double_vec,
-    )
+    blocking over the batch alone, then dedup_embedding_cosine's
+    exact-cosine verify. Output (vec_a, vec_b, cosine), vec_a <
+    vec_b. Cost is batch-sized (plane dots) + collision-bounded
+    (verify), never corpus-touching."""
+    from dbt_eamples_spark.operators.similarity import _as_double_vec
 
     v = delta_embeddings.select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
-    ).localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(
-        v, tables=DEDUP_LSH_TABLES, flips=DEDUP_PROBE_FLIPS,
-        nplanes=nplanes,
-    ).localCheckpoint(eager=True)
-    ids = (
-        cands.select(F.col("vec_a").alias("vec_id"))
-        .union(cands.select(F.col("vec_b").alias("vec_id")))
-        .distinct()
     )
-    nrm = F.sqrt(
-        F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)
+    return _cosine_delta_within(
+        cosine_delta_keys(v, nplanes).localCheckpoint(eager=True)
     )
-    cand_vecs = v.join(F.broadcast(ids), "vec_id").select(
-        "vec_id", "vec", nrm.alias("nrm")
-    )
-    a = cand_vecs.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = cand_vecs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cands.join(F.broadcast(a), "vec_a")
-        .join(F.broadcast(b), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= COSINE_NEAR_DUP)
-    )
+
+
+def _cosine_delta_within(keyed: DataFrame) -> DataFrame:
+    """Verified within-delta pairs of a PINNED keyed delta frame."""
+    from dbt_eamples_spark.operators.similarity import DEDUP_LSH_TABLES
+
+    cands = _probe_pairs(keyed, DEDUP_LSH_TABLES)
+    return _cosine_verify(keyed, cands.localCheckpoint(eager=True))

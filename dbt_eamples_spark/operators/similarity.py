@@ -3399,17 +3399,34 @@ def ivf_assign_apply_delta(
     corpus. The %INCR_MOD convention rows of the delta are excluded
     (fingerprint→content invariant) and COUNTED in the report, per
     the no-silent-caps rule (ADVICE r11 on the cosine twin)."""
-    from dbt_eamples_spark.artifacts import load_or_build
+    from dbt_eamples_spark.artifacts import publish
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     d_all = delta_embeddings.select(
         "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
     )
-    d = d_all.filter(F.col("vec_id") % INCR_MOD != 0)
-    n_delta_all = d_all.count()
-    n_delta = d.count()
-    report: dict = {"convention_excluded": n_delta_all - n_delta}
+    n_excluded = d_all.filter(F.col("vec_id") % INCR_MOD == 0).count()
+    cent, merged, occ_ref, report = _ivf_delta(spark, sf_dir, d_all)
+    report["convention_excluded"] = n_excluded
+    if publish_fingerprint is not None:
+        kinds = ("ivf_centroids", "ivf_assign_index", "ivf_occupancy_ref")
+        cent, merged, occ_ref = (
+            publish(spark, k, publish_fingerprint, df)
+            for k, df in zip(kinds, (cent, merged, occ_ref))
+        )
+    return cent, merged, occ_ref, report
 
+
+def _ivf_delta(
+    spark: SparkSession, sf_dir: str, delta_vecs: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
+    """:func:`ivf_assign_apply_delta` over a (vec_id, vec, ...) delta,
+    without the publish; on the append path the quantizer and the
+    occupancy reference come back as the stored scans they were read
+    as, so :func:`artifacts.publish` republishes them by link."""
+    from dbt_eamples_spark.operators.dedup import INCR_MOD
+
+    d = delta_vecs.select("vec_id", "vec").filter(F.col("vec_id") % INCR_MOD != 0)
     cent = ivf_centroids(spark, sf_dir)
     base_assign = ivf_assign_index(spark, sf_dir)
     occ_ref = ivf_occupancy_ref(spark, sf_dir)
@@ -3419,28 +3436,23 @@ def ivf_assign_apply_delta(
     merged = base_assign.unionByName(delta_assign)
 
     # occupancy drift: per-cell counts are ≤ ncells rows — bounded
-    # model-state collects, the dq_distribution_drift PSI recipe.
-    # The reference side is the TRAIN-TIME distribution, not the
-    # per-append index (ADVICE r12 — see docstring).
-    ref_counts = {r.cell: r.n for r in occ_ref.collect()}
-    base_counts = {
-        r.cell: r.n
-        for r in base_assign.groupBy("cell")
-        .agg(F.count("*").alias("n"))
+    # model-state collects, the dq_distribution_drift PSI recipe,
+    # both sides in ONE job. The reference side is the TRAIN-TIME
+    # distribution, not the per-append index (ADVICE r12 — see
+    # ivf_assign_apply_delta); the current side is the union's.
+    occ = (
+        occ_ref.select("cell", "n", F.lit(True).alias("ref"))
+        .unionByName(
+            merged.groupBy("cell")
+            .agg(F.count("*").alias("n"))
+            .select("cell", "n", F.lit(False).alias("ref"))
+        )
         .collect()
-    }
-    delta_counts = {
-        r.cell: r.n
-        for r in delta_assign.groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    union_counts = {
-        c: base_counts.get(c, 0) + delta_counts.get(c, 0)
-        for c in set(base_counts) | set(delta_counts)
-    }
+    )
+    ref_counts = {r.cell: r.n for r in occ if r.ref}
+    union_counts = {r.cell: r.n for r in occ if not r.ref}
     psi = _occupancy_psi(ref_counts, union_counts)
-    report["occupancy_psi"] = round(psi, 6)
+    report = {"occupancy_psi": round(psi, 6)}
     report["retrained"] = psi > IVF_RETRAIN_PSI
 
     if report["retrained"]:
@@ -3466,19 +3478,6 @@ def ivf_assign_apply_delta(
             merged.groupBy("cell")
             .agg(F.count("*").alias("n"))
             .localCheckpoint(eager=True)
-        )
-
-    if publish_fingerprint is not None:
-        cent = load_or_build(
-            spark, "ivf_centroids", publish_fingerprint, lambda: cent
-        )
-        merged = load_or_build(
-            spark, "ivf_assign_index", publish_fingerprint,
-            lambda: merged,
-        )
-        occ_ref = load_or_build(
-            spark, "ivf_occupancy_ref", publish_fingerprint,
-            lambda: occ_ref,
         )
     return cent, merged, occ_ref, report
 

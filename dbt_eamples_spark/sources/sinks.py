@@ -11,6 +11,7 @@ Re-expresses the reference's three result egress paths:
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +64,10 @@ def sink_csv_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: write a small result to CSV and read
     it back with an explicit schema — proves header/quoting/type
     fidelity through the sink."""
-    out = "/root/repo/.tmp/sink_csv_query"
+    checkout = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    out = os.path.join(checkout, ".tmp", "sink_csv_query")
     src = (
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")

@@ -27,6 +27,12 @@ pre-append state (delta-sized inputs are eagerly checkpointed inside
 the apply_delta functions; base sides are on-disk artifact scans,
 both stable across the append), appends, fingerprints, and only
 then publishes.
+
+The embeddings loop makes ONE delta pass per batch: the batch is
+keyed, pinned and counted once, and every plan and probe reads that
+frame; an artifact the batch leaves unchanged (the IVF quantizer and
+its occupancy reference between retrains) is republished by hard
+link, not rewritten. A steady batch runs ~46 Spark jobs.
 """
 
 from __future__ import annotations
@@ -105,14 +111,14 @@ def publish_artifacts(
     """Phase 2: land every planned frame in the artifact store under
     the (post-append) union fingerprint. Idempotent: an existing
     artifact at (kind, fingerprint) is left alone (load_or_build's
-    publish-by-rename contract)."""
-    from dbt_eamples_spark.artifacts import load_or_build
+    publish-by-rename contract). A frame that is an unchanged stored
+    generation (the IVF quantizer and occupancy reference on an
+    append) is republished by hard link, not rewritten."""
+    from dbt_eamples_spark.artifacts import publish
 
-    published = []
     for kind, df in frames.items():
-        load_or_build(spark, kind, fingerprint, lambda df=df: df)
-        published.append(kind)
-    return published
+        publish(spark, kind, fingerprint, df)
+    return list(frames)
 
 
 def run_housekeeping(
@@ -213,10 +219,9 @@ def ingest_documents_batch(
         frames = plan_document_artifact_deltas(spark, corpus_dir, fresh)
         # the batch's near-dup probe: verified pairs the batch gained
         # against the corpus and within itself (collision-bounded)
-        probe = D.minhash_pairs_delta_new(
+        n_pairs = D.minhash_pairs_delta_new(
             spark, corpus_dir, fresh, assume_new_ids=True
-        ).localCheckpoint(eager=True)
-        n_pairs = probe.count()
+        ).count()
     fresh.write.mode("append").parquet(docs_path)
     report = {"rows_appended": n, "near_dup_pairs": n_pairs}
     if compact_target_file_bytes is not None:
@@ -305,40 +310,37 @@ EMBEDDING_ARTIFACT_KINDS = [
 
 
 def plan_embedding_artifact_deltas(
-    spark: SparkSession, corpus_dir: str, fresh_vecs: DataFrame
+    spark: SparkSession, corpus_dir: str, keyed: DataFrame, base_n: int,
+    delta_n: int,
 ) -> tuple[dict[str, DataFrame], dict]:
     """Phase 1 of the embeddings loop: the merged frame for every
     persisted embedding-side artifact, planned against the CURRENT
     (pre-append) embeddings state; returns ``(frames, info)`` where
     ``info`` carries the IVF maintenance telemetry
     (``occupancy_psi``/``ivf_retrained``) for the batch report.
-    ``fresh_vecs`` must already be anti-joined against the corpus.
-    Each apply_delta handles its own rebuild rule internally —
-    ``cosine_base_index`` the lsh_planes resize step, the IVF pair
-    the occupancy-drift retrain trigger (both rebuild paths eagerly
-    checkpointed; the common append paths read delta-sized inputs
-    plus on-disk artifact scans, all stable across the append)."""
+    ``keyed`` is the batch's pinned keyed delta (see
+    :func:`ingest_embeddings_batch`); ``base_n`` / ``delta_n`` count
+    the standing rows of the corpus / the batch. Each kernel handles
+    its own rebuild rule — ``cosine_base_index`` the lsh_planes
+    resize step, the IVF pair the occupancy-drift retrain trigger
+    (both rebuild paths eagerly checkpointed; the append paths read
+    the pinned delta plus on-disk artifact scans, all stable across
+    the append)."""
     from dbt_eamples_spark.operators import dedup as D
-    from dbt_eamples_spark.operators.similarity import (
-        ivf_assign_apply_delta,
-    )
+    from dbt_eamples_spark.operators.similarity import _ivf_delta
 
+    cent, assign, occ_ref, ivf = _ivf_delta(spark, corpus_dir, keyed)
     frames = {
-        "cosine_base_index": D.cosine_base_index_apply_delta(
-            spark, corpus_dir, fresh_vecs
-        )
+        "cosine_base_index": D._cosine_index_delta(
+            spark, corpus_dir, keyed, base_n, delta_n
+        ),
+        "ivf_centroids": cent,
+        "ivf_assign_index": assign,
+        "ivf_occupancy_ref": occ_ref,
     }
-    cent, assign, occ_ref, ivf_report = ivf_assign_apply_delta(
-        spark, corpus_dir, fresh_vecs
-    )
-    frames["ivf_centroids"] = cent
-    frames["ivf_assign_index"] = assign
-    frames["ivf_occupancy_ref"] = occ_ref
-    info = {
-        "occupancy_psi": ivf_report["occupancy_psi"],
-        "ivf_retrained": ivf_report["retrained"],
+    return frames, {
+        "occupancy_psi": ivf["occupancy_psi"], "ivf_retrained": ivf["retrained"]
     }
-    return frames, info
 
 
 def ingest_embeddings_batch(
@@ -356,11 +358,18 @@ def ingest_embeddings_batch(
     delta-maintained and published under the union embeddings
     fingerprint → per-batch near-dup probe report. The probe has two
     legs, reported separately: ``near_dup_pairs`` = batch×corpus
-    (:func:`~dbt_eamples_spark.operators.dedup.cosine_pairs_delta_new`
-    — the dedup_incremental_cosine contract over the not-yet-appended
-    batch) and ``within_batch_pairs`` = batch-internal LSH self-pairs.
-    Same two-phase shape as the document loop: plan + probe against
-    the pre-append state, append, fingerprint, publish.
+    (the :func:`~dbt_eamples_spark.operators.dedup.cosine_pairs_delta_new`
+    contract over the not-yet-appended batch) and
+    ``within_batch_pairs`` = batch-internal LSH self-pairs. Same
+    two-phase shape as the document loop: plan + probe against the
+    pre-append state, append, fingerprint, publish.
+
+    ONE delta pass: the standing corpus is counted once; the batch is
+    converted, LSH-keyed at ``lsh_planes(base_n)`` and pinned once
+    (:func:`~dbt_eamples_spark.operators.dedup.cosine_delta_keys`) and
+    counted by one aggregate; the index append, both probe legs and
+    the IVF assignment all read that frame. A steady batch runs ~46
+    Spark jobs (locked in tests/test_plan_regressions.py).
 
     ``convention_excluded`` in the report counts appended vectors
     with ``vec_id % INCR_MOD == 0`` — the %INCR_MOD corpus convention
@@ -369,20 +378,26 @@ def ingest_embeddings_batch(
     them arriving later are not reported as near-dup pairs."""
     from dbt_eamples_spark.artifacts import corpus_fingerprint
     from dbt_eamples_spark.operators import dedup as D
+    from dbt_eamples_spark.operators.similarity import _as_double_vec
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
     emb_path = table_path(corpus_dir, "embeddings")
     corpus = spark.read.parquet(emb_path)
-    fresh = (
+    base_n = D.standing_count(spark, corpus_dir)
+    keyed = D.cosine_delta_keys(
         batch.select(*corpus.columns)
         # same at-least-once guard as the document loop: duplicate
         # vec_ids WITHIN one micro-batch must collapse before the
         # anti-join (which only strips already-persisted ids)
         .dropDuplicates(["vec_id"])
         .join(corpus.select("vec_id"), "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n = fresh.count()
+        .withColumn("vec", _as_double_vec(F.col("embedding"))),
+        lsh_planes(base_n),
+    ).localCheckpoint(eager=True)  # pinned: read by every plan, both
+    # probes and the append — and must survive the append
+    n, n_excluded = keyed.agg(
+        F.count("*"), F.count(F.when(F.col("vec_id") % D.INCR_MOD == 0, 1))
+    ).first()
     if n == 0:
         report = {
             "rows_appended": 0,
@@ -407,39 +422,23 @@ def ingest_embeddings_batch(
     frames: dict[str, DataFrame] = {}
     info: dict = {}
     n_pairs = n_within = 0
-    # COVERAGE GAP, made visible per the no-silent-caps rule (ADVICE
-    # r11): cosine_base_index_apply_delta keeps the %INCR_MOD
-    # convention of the from-scratch build (vec_id % INCR_MOD == 0
-    # rows model the "incoming batch" and are NEVER indexed), so
-    # ~1/INCR_MOD of appended vectors are excluded from the persisted
-    # index — a later batch duplicating one of them will not be
-    # reported as a near-dup pair. The count is in the batch report
-    # so an operator can see the excluded mass instead of inferring
-    # it from the convention.
-    n_excluded = fresh.filter(
-        F.col("vec_id") % D.INCR_MOD == 0
-    ).count() if maintain_artifacts else 0
     if maintain_artifacts:
         frames, info = plan_embedding_artifact_deltas(
-            spark, corpus_dir, fresh
+            spark, corpus_dir, keyed, base_n, n - n_excluded
         )
-        probe = D.cosine_pairs_delta_new(
-            spark, corpus_dir, fresh, assume_new_ids=True
-        ).localCheckpoint(eager=True)
-        n_pairs = probe.count()
-        base_n = corpus.filter(
-            F.col("vec_id") % D.INCR_MOD != 0
-        ).count()
-        within = D.cosine_pairs_delta_within(
-            spark, fresh, lsh_planes(base_n)
-        ).localCheckpoint(eager=True)
-        n_within = within.count()
-    fresh.write.mode("append").parquet(emb_path)
+        n_pairs = D._cosine_delta_vs_base(spark, corpus_dir, keyed).count()
+        n_within = D._cosine_delta_within(keyed).count()
+    keyed.select(*corpus.columns).write.mode("append").parquet(emb_path)
     report = {
         "rows_appended": n,
         "near_dup_pairs": n_pairs,
         "within_batch_pairs": n_within,
-        "convention_excluded": n_excluded,
+        # COVERAGE GAP, made visible per the no-silent-caps rule
+        # (ADVICE r11): the index never holds vec_id % INCR_MOD == 0
+        # rows (the from-scratch convention), so a later duplicate of
+        # one is not reported as a near-dup pair; the report shows
+        # the excluded mass instead of leaving it to be inferred
+        "convention_excluded": n_excluded if maintain_artifacts else 0,
         **info,
     }
     if compact_target_file_bytes is not None:

@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_eamples_spark.session import get_spark
 
@@ -54,3 +54,71 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def embeddings_ingest_replay(spark, sf_dir, tmp_path_factory):
+    """Two embeddings batches through the composed ingest loop over
+    the fixture, run once per session and shared by the default-lane
+    equivalence test (tests/test_ingest_embeddings.py) and the
+    job-count lock (tests/test_plan_regressions.py). The corpus is
+    the vec_id % 10 in 1..7 rows; batch 1 the % 10 in {8, 9} rows,
+    batch 2 the % 10 == 0 convention class. Returns the corpus dir,
+    the artifact store, the corpus fingerprint before each batch and
+    after the last, and per batch its report, its Spark job count and
+    its artifact build events."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from dbt_eamples_spark import artifacts as A
+    from dbt_eamples_spark.catalog import load_table
+    from dbt_eamples_spark.streaming.ingest import ingest_embeddings_batch
+
+    work = tmp_path_factory.mktemp("embeddings_ingest_replay")
+    corpus_dir = str(work / "corpus")
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb.filter(
+        (F.col("vec_id") % 10 >= 1) & (F.col("vec_id") % 10 <= 7)
+    ).write.parquet(os.path.join(corpus_dir, "embeddings.parquet"))
+    batches = [
+        emb.filter(F.col("vec_id") % 10 >= 8),
+        emb.filter(F.col("vec_id") % 10 == 0),
+    ]
+    out = {
+        "corpus_dir": corpus_dir,
+        "store": str(work / "arts"),
+        "fps": [],
+        "reports": [],
+        "jobs": [],
+        "builds": [],
+    }
+    sc = spark.sparkContext
+    saved = os.environ.get("SPARK_GRAFT_ARTIFACTS")
+    os.environ["SPARK_GRAFT_ARTIFACTS"] = out["store"]
+    try:
+        for i, batch in enumerate(batches):
+            out["fps"].append(A.corpus_fingerprint(corpus_dir, "embeddings"))
+            n_events = len(A.ARTIFACT_EVENTS)
+            group = f"embeddings_ingest_replay_{i}"
+            sc.setJobGroup(group, "embeddings ingest replay")
+            try:
+                out["reports"].append(ingest_embeddings_batch(
+                    spark, batch, corpus_dir, maintain_artifacts=True
+                ))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            out["jobs"].append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
+            out["builds"].append(Counter(
+                k for k, e in A.ARTIFACT_EVENTS[n_events:] if e == "build"
+            ))
+        out["fps"].append(A.corpus_fingerprint(corpus_dir, "embeddings"))
+    finally:
+        if saved is None:
+            os.environ.pop("SPARK_GRAFT_ARTIFACTS", None)
+        else:
+            os.environ["SPARK_GRAFT_ARTIFACTS"] = saved
+    return out

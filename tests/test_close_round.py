@@ -4,9 +4,10 @@ and must preserve the hand-written prose above it."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.close_round import EVIDENCE_MARKER, replace_evidence_block
 

@@ -513,3 +513,23 @@ class TestShuffleBudgets:
         for name in ("join_star_3way", "metric_compiled_star"):
             plan = _plan(spark, name, sf_dir)
             assert "CartesianProduct" not in plan
+
+
+class TestJobBudgets:
+    """Spark jobs per operation. Like exchange counts, job counts do
+    not drift with load, and each job pays the scheduling floor no
+    matter how small its data — so CI locks them."""
+
+    # a steady embeddings ingest batch (base artifacts warm) at fixture
+    # scale: the standing corpus counted once; the batch keyed, pinned
+    # and counted once; the two probe legs; the IVF assignment and its
+    # one occupancy collect; the append; two Spark-written publishes
+    # (the unchanged quantizer and occupancy reference are linked)
+    STEADY_EMBEDDINGS_BATCH_JOBS = 46
+
+    def test_steady_embeddings_batch(self, embeddings_ingest_replay):
+        jobs = embeddings_ingest_replay["jobs"][1]
+        assert jobs <= self.STEADY_EMBEDDINGS_BATCH_JOBS, (
+            f"steady embeddings batch ran {jobs} Spark jobs (budget "
+            f"{self.STEADY_EMBEDDINGS_BATCH_JOBS})"
+        )
