@@ -32,7 +32,8 @@ The embeddings loop makes ONE delta pass per batch: the batch is
 keyed, pinned and counted once, and every plan and probe reads that
 frame; an artifact the batch leaves unchanged (the IVF quantizer and
 its occupancy reference between retrains) is republished by hard
-link, not rewritten. A steady batch runs ~46 Spark jobs.
+link, not rewritten. A steady 100-vector batch runs about 47 Spark
+jobs.
 """
 
 from __future__ import annotations
@@ -368,8 +369,8 @@ def ingest_embeddings_batch(
     converted, LSH-keyed at ``lsh_planes(base_n)`` and pinned once
     (:func:`~dbt_eamples_spark.operators.dedup.cosine_delta_keys`) and
     counted by one aggregate; the index append, both probe legs and
-    the IVF assignment all read that frame. A steady batch runs ~46
-    Spark jobs (locked in tests/test_plan_regressions.py).
+    the IVF assignment all read that frame. A steady batch runs 46
+    Spark jobs at fixture scale (locked in test_plan_regressions.py).
 
     ``convention_excluded`` in the report counts appended vectors
     with ``vec_id % INCR_MOD == 0`` — the %INCR_MOD corpus convention
