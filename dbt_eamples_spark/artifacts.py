@@ -35,7 +35,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_eamples_spark.catalog import table_path
+from dbt_eamples_spark.catalog import (
+    file_state,
+    read_parquet,
+    remember_schema,
+    table_path,
+)
 
 # (kind, "build"|"reuse") log, newest last — test/debug observability
 ARTIFACT_EVENTS: list[tuple[str, str]] = []
@@ -65,17 +70,9 @@ def corpus_fingerprint(sf_dir: str, *tables: str) -> str:
     h = hashlib.md5()
     for t in sorted(tables):
         p = os.path.abspath(table_path(sf_dir, t))
-        if os.path.isdir(p):
-            for d, _, fs in sorted(os.walk(p)):
-                for f in sorted(fs):
-                    fp = os.path.join(d, f)
-                    st = os.stat(fp)
-                    h.update(
-                        f"{fp}:{st.st_size}:{st.st_mtime_ns};".encode()
-                    )
-        else:
-            st = os.stat(p)
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
+        for rel, size, mtime_ns in file_state(p):
+            fp = os.path.join(p, rel) if rel else p
+            h.update(f"{fp}:{size}:{mtime_ns};".encode())
     return h.hexdigest()[:16]
 
 
@@ -148,13 +145,19 @@ def publish(
         lambda tmp: shutil.copytree(
             artifact_path(*src), tmp, copy_function=os.link
         ),
+        # the links are the source generation's own files, so its
+        # schema is the new generation's: the scan infers nothing
+        schema=df.schema,
     )
 
 
-def _land(spark: SparkSession, kind: str, fingerprint: str, write) -> DataFrame:
+def _land(
+    spark: SparkSession, kind: str, fingerprint: str, write, schema=None
+) -> DataFrame:
     """The publish-by-rename contract shared by :func:`load_or_build`
     and :func:`publish`: reuse a complete artifact, else ``write(tmp)``
-    a temp sibling and rename it into place."""
+    a temp sibling and rename it into place. A caller that knows the
+    landed files' ``schema`` passes it so the scan does not infer it."""
     path = artifact_path(kind, fingerprint)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         ARTIFACT_EVENTS.append((kind, "reuse"))
@@ -173,13 +176,15 @@ def _land(spark: SparkSession, kind: str, fingerprint: str, write) -> DataFrame:
         published = False
     ARTIFACT_EVENTS.append((kind, "build" if published else "reuse"))
     _manifest_touch(kind, fingerprint, built=published)
+    if published and schema is not None:
+        remember_schema(spark, path, schema)
     return _scan(spark, kind, fingerprint)
 
 
 def _scan(spark: SparkSession, kind: str, fingerprint: str) -> DataFrame:
     """Read a stored generation back, tagged with its (kind,
     fingerprint) so :func:`publish` can recognise it unchanged."""
-    df = spark.read.parquet(artifact_path(kind, fingerprint))
+    df = read_parquet(spark, artifact_path(kind, fingerprint))
     df._artifact_generation = (kind, fingerprint)
     return df
 
@@ -278,7 +283,7 @@ def _attach_bucketed(
         if loc and _uri_path(loc[0]) == os.path.abspath(path):
             return spark.table(table)
         spark.sql(f"DROP TABLE `{table}`")
-    ddl = spark.read.parquet(path).schema.toDDL()
+    ddl = read_parquet(spark, path).schema.toDDL()
     spark.sql(
         f"CREATE TABLE `{table}` ({ddl}) USING parquet "
         f"CLUSTERED BY (`{bucket_key}`) INTO {n_buckets} BUCKETS "

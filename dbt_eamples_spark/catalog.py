@@ -6,6 +6,16 @@ tables, e.g. ``omni.self_testnet_transactions`` at
 here a table name resolves to a parquet path and is exposed to Spark
 SQL as a temp view. At cluster scale these would be external tables
 over partitioned parquet/iceberg; the API is identical.
+
+Every parquet read in the engine goes through :func:`read_parquet`.
+A parquet read without a schema runs a one-task Spark job to read a
+footer and infer the schema; :func:`read_parquet` does that once per
+file state and hands the remembered schema to every later read of the
+same state, which then runs no Spark job. The memo is keyed on the
+application id, the absolute path, the (relative path, size,
+``mtime_ns``) of every file under it (:func:`file_state`) and the
+session confs that change parquet inference (``_INFERENCE_CONFS``), so
+an append, a rewrite or a conf flip re-infers.
 """
 
 from __future__ import annotations
@@ -14,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,6 +42,90 @@ TABLES = (
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def file_state(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(path relative to ``path``, size, ``mtime_ns``) of every file
+    under ``path``, recursively and in sorted walk order; a plain file
+    is one entry with relative path ``""``. Metadata only, and
+    rewrite-sensitive: an in-place part rewrite that leaves the
+    directory entry unchanged still changes its file's entry. Raises
+    ``FileNotFoundError`` for a missing path."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, _, fs in sorted(os.walk(path)):
+        for f in sorted(fs):
+            fp = os.path.join(d, f)
+            st = os.stat(fp)
+            out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+# session confs whose values change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    # partitionBy directories: partition column types
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (applicationId, abs path, file state, conf values) -> inferred schema;
+# one entry per (application, path): a new state evicts the old one
+_PARQUET_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of ``path``'s current file state, or None when there
+    is nothing to infer from (missing path, empty directory)."""
+    path = os.path.abspath(path)
+    try:
+        state = file_state(path)
+    except FileNotFoundError:
+        return None
+    if not state:
+        return None
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    return (spark.sparkContext.applicationId, path, state, confs)
+
+
+def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Record ``schema`` as what inference returns for ``path``'s
+    current file state, evicting the path's superseded states. For
+    callers that already hold the schema of exactly these files (a
+    generation republished by hard link)."""
+    key = _schema_key(spark, path)
+    if key is not None:
+        _remember(key, schema)
+
+
+def _remember(key: tuple, schema: StructType) -> None:
+    for k in [k for k in _PARQUET_SCHEMAS if k[:2] == key[:2]]:
+        del _PARQUET_SCHEMAS[k]
+    _PARQUET_SCHEMAS[key] = schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    file state (see the module docstring). A known state reads with
+    the remembered schema and runs no Spark job; an unknown one runs
+    the plain read and remembers its schema. A missing path or an
+    empty directory falls through to the plain read, so it raises the
+    same ``AnalysisException`` as before."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    schema = _PARQUET_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _remember(key, df.schema)
+    return df
 
 
 # parquet TIMESTAMP(NANOS) columns (read as long via nanosAsLong,
@@ -88,6 +183,9 @@ def load_table(
 ) -> DataFrame:
     """Columnar parquet scan — Catalyst prunes columns and pushes
     predicates into it (verify with ``.explain``: ``PushedFilters``).
+    Read through :func:`read_parquet`: once the table's file state is
+    known in this application (same files, sizes and ``mtime_ns``,
+    same inference confs), loading it runs no Spark job.
 
     ``parallelize=True`` adds a round-robin repartition to the
     session's core count. Use it ONLY in compute-heavy operators
@@ -111,7 +209,7 @@ def load_table(
     # save/restore is not an option because the cast evaluates
     # lazily, long after this function returns.
     _require_utc_session(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     for col in _NANOS_TS_COLS.get(name, ()):
         if col in df.columns and dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
@@ -132,22 +230,25 @@ def load_table(
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every fixture table as a temp view named after itself.
 
-    Idempotent per (session, sf_dir): repeated calls for the same
-    dir are a no-op (compiled metric queries call this on every
-    execution; re-planning 10 parquet reads each time is pure
-    overhead)."""
+    Idempotent per (session, sf_dir, tables' file state): repeated
+    calls for the same unchanged dir are a no-op (compiled metric
+    queries call this on every execution; re-planning 10 parquet
+    reads each time is pure overhead), and a table rewritten in the
+    session re-registers instead of serving its old view."""
+    names = [n for n in TABLES if os.path.exists(table_path(sf_dir, n))]
     # single-slot: views are session-global, so only the most recent
     # (session, dir) registration is valid — a different dir MUST
     # re-register or views would point at the wrong scale factor
-    key = (id(spark), sf_dir)
+    key = (
+        id(spark),
+        sf_dir,
+        tuple((n, file_state(table_path(sf_dir, n))) for n in names),
+    )
     slot = getattr(register_tables, "_slot", None)
     if slot is not None and slot[0] == key:
         return slot[1]
     out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
+    for name in names:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.catalog import load_table, read_parquet
 
 AUDIT_COL = "insert_dt"
 
@@ -231,7 +231,7 @@ def compact_small_files(
     )
     n_files = max(1, math.ceil(total / target_file_bytes))
     tmp = path.rstrip("/") + "._compact_tmp"
-    spark.read.parquet(path).coalesce(n_files).write.mode(
+    read_parquet(spark, path).coalesce(n_files).write.mode(
         "overwrite"
     ).parquet(tmp)
     old = path.rstrip("/") + "._compact_old"

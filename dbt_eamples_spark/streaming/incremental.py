@@ -29,7 +29,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.catalog import load_table, read_parquet
 from dbt_eamples_spark.sources.sinks import with_audit_col
 
 
@@ -65,7 +65,7 @@ def idempotent_append(
     # only the missing-sink first run may skip the guard — other
     # read errors must propagate or re-runs would append duplicates
     try:
-        sink_keys = spark.read.parquet(sink_path).select(key)
+        sink_keys = read_parquet(spark, sink_path).select(key)
         new_rows = delta.join(sink_keys, on=key, how="left_anti")
     except AnalysisException:  # first run: sink does not exist yet
         new_rows = delta
@@ -92,7 +92,7 @@ def run_increment(
 ) -> IncrementResult:
     """One watermark→delta→append micro-batch."""
     try:
-        sink = spark.read.parquet(sink_path)
+        sink = read_parquet(spark, sink_path)
         wm = read_watermark(sink, key)
     except AnalysisException:  # first run: sink does not exist yet
         wm = 0

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbt_eamples_spark.catalog import load_table, table_path
+from dbt_eamples_spark.catalog import load_table, read_parquet, table_path
 
 TUMBLE = "1 hour"
 WATERMARK = "2 hours"
@@ -116,7 +116,7 @@ def _events_stream(
     # NTZ→TIMESTAMP below reads naive values in the session tz —
     # pin UTC so any session (driver's vanilla one included) agrees
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     # file-stream source requires a directory: stream the sf dir,
     # glob-filtered to the events file
     stream = (
@@ -302,7 +302,7 @@ def stream_incremental_append(
         # — silently appending without the guard is exactly the
         # duplication this operator exists to prevent.
         try:
-            existing = batch.sparkSession.read.parquet(sink_path).select(
+            existing = read_parquet(batch.sparkSession, sink_path).select(
                 "event_id"
             )
             out = batch.join(existing, "event_id", "left_anti")
@@ -752,8 +752,8 @@ def late_data_streaming_audit(
         shutil.move(part, os.path.join(staging_dir, f"batch_{i:05d}.parquet"))
         shutil.rmtree(tmp)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    schema = spark.read.parquet(
-        os.path.join(staging_dir, "batch_00000.parquet")
+    schema = read_parquet(
+        spark, os.path.join(staging_dir, "batch_00000.parquet")
     ).schema
     stream = (
         spark.readStream.schema(schema)

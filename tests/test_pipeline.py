@@ -5,8 +5,10 @@ batch ≡ streaming equivalence of the tumbling-window aggregate."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -115,9 +117,10 @@ class TestBucketing:
         )
         suffix = uuid.uuid4().hex[:8]
         t_o, t_li = f"b_orders_{suffix}", f"b_lineitem_{suffix}"
+        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         for t in (t_o, t_li):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
         # disable broadcast: at real scale both sides are fact-sized
         # (a broadcastable side wouldn't need bucketing) — the claim
         # under test is that bucketed SMJ needs NO shuffle exchange

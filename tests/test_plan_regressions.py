@@ -524,8 +524,40 @@ class TestJobBudgets:
     # scale: the standing corpus counted once; the batch keyed, pinned
     # and counted once; the two probe legs; the IVF assignment and its
     # one occupancy collect; the append; two Spark-written publishes
-    # (the unchanged quantizer and occupancy reference are linked)
-    STEADY_EMBEDDINGS_BATCH_JOBS = 46
+    # (the unchanged quantizer and occupancy reference are linked).
+    # Reads of files whose schema is already known infer nothing: the
+    # remaining schema inferences are the appended corpus and the two
+    # Spark-written publishes.
+    STEADY_EMBEDDINGS_BATCH_JOBS = 37
+
+    @staticmethod
+    def _jobs(spark, group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_warm_load_table_runs_no_job(self, spark, sf_dir):
+        from dbt_eamples_spark.catalog import load_table
+
+        load_table(spark, sf_dir, "lineitem")  # warm the schema memo
+        jobs = self._jobs(
+            spark, "warm_load_table",
+            lambda: load_table(spark, sf_dir, "lineitem"),
+        )
+        assert jobs == 0, f"warm load_table ran {jobs} Spark jobs"
+
+    def test_join_star_construction_runs_no_job(self, spark, sf_dir):
+        build = entrymod.queries()["join_star_3way"]
+        build(spark, sf_dir)  # warm the schema memo
+        jobs = self._jobs(
+            spark, "construct_join_star_3way", lambda: build(spark, sf_dir)
+        )
+        assert jobs == 0, f"constructing join_star_3way ran {jobs} Spark jobs"
 
     def test_steady_embeddings_batch(self, embeddings_ingest_replay):
         jobs = embeddings_ingest_replay["jobs"][1]

@@ -17,13 +17,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_eamples_spark.session import get_spark  # noqa: E402
 from dbt_eamples_spark.catalog import TABLES, table_path  # noqa: E402
