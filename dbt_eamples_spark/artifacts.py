@@ -23,6 +23,10 @@ observability hook the reuse tests assert on.
 Artifacts are immutable, so :func:`publish` lands a frame that is an
 unchanged stored generation under a new fingerprint by hard-linking
 its files instead of rewriting them.
+
+Above the disk tier sits the session store (:func:`session_artifact`,
+:func:`session_state`): the one place operators keep state for the
+life of a SparkContext, keyed and invalidated by the same fingerprint.
 """
 
 from __future__ import annotations
@@ -74,27 +78,6 @@ def corpus_fingerprint(sf_dir: str, *tables: str) -> str:
             fp = os.path.join(p, rel) if rel else p
             h.update(f"{fp}:{size}:{mtime_ns};".encode())
     return h.hexdigest()[:16]
-
-
-def session_cache_key(
-    cache: dict, spark: SparkSession, sf_dir: str, fingerprint: str
-) -> tuple[str, str, str]:
-    """Key for the operators' L1 session-dict caches: (applicationId,
-    sf_dir, corpus fingerprint). Including the fingerprint means an
-    in-session rewrite of a fixture table misses the cache and falls
-    through to the L2 artifact layer, which already rebuilds on
-    fingerprint change (ADVICE r8: the old (app, dir) key served
-    stale persisted frames across a rewrite). Stale same-(app, dir)
-    entries are evicted and unpersisted so a rewrite doesn't leak
-    the superseded frame's storage."""
-    key = (spark.sparkContext.applicationId, sf_dir, fingerprint)
-    for k in [k for k in cache if k[:2] == key[:2] and k != key]:
-        old = cache.pop(k)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # non-DataFrame payloads (codebook lists) or dead contexts
-    return key
 
 
 def artifact_path(kind: str, fingerprint: str) -> str:
@@ -290,6 +273,79 @@ def _attach_bucketed(
         f"LOCATION '{path}'"
     )
     return spark.table(table)
+
+
+# ---- session store ----------------------------------------------------------
+# Operator state that outlives one query but not the SparkContext: the
+# persisted or checkpointed scan of an artifact, and trained model
+# state (codebooks, centroids, spectra, audit legs) that never touches
+# the disk tier. One entry per (applicationId, sf_dir, name), stamped
+# with the corpus fingerprint of its source tables: a rewrite of those
+# tables rebuilds the entry on its next use and releases the superseded
+# value, and leaves entries over other tables alone.
+
+_SESSION: dict[tuple[str, str, str], tuple[str, object]] = {}
+
+
+def session_state(
+    spark: SparkSession, sf_dir: str, name: str, tables: tuple, build
+):
+    """``build()``'s value, kept under ``name`` for as long as the
+    session runs and ``tables`` of ``sf_dir`` stay unchanged."""
+    return _remember(spark, sf_dir, name, tables, lambda fp: build())
+
+
+def session_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    tables: tuple,
+    build,
+    keep=DataFrame.persist,
+    bucket_key: str | None = None,
+):
+    """The ``kind`` artifact of ``tables`` (:func:`load_or_build`, or
+    :func:`load_or_build_bucketed` on ``bucket_key``), held in the
+    session as ``keep(scan)``: persisted by default, or whatever the
+    caller materialises it to."""
+
+    def make(fp: str):
+        if bucket_key is None:
+            return keep(load_or_build(spark, kind, fp, build))
+        return keep(load_or_build_bucketed(spark, kind, fp, bucket_key, build))
+
+    return _remember(spark, sf_dir, kind, tables, make)
+
+
+def _remember(spark: SparkSession, sf_dir: str, name: str, tables, make):
+    fp = corpus_fingerprint(sf_dir, *tables)
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    held = _SESSION.get(key)
+    if held is not None:
+        if held[0] == fp:
+            return held[1]
+        del _SESSION[key]
+        _release(held[1])
+    value = make(fp)
+    _SESSION[key] = (fp, value)
+    return value
+
+
+def _release(value) -> None:
+    """Unpersist the frames of a superseded entry (a frame or a tuple
+    holding frames); other values are simply dropped."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            try:
+                v.unpersist()
+            except Exception:
+                pass  # its SparkContext is already gone
+
+
+def clear_session_state() -> None:
+    """Drop every session entry, so the next use rebuilds or reloads."""
+    while _SESSION:
+        _release(_SESSION.popitem()[1][1])
 
 
 # ---- manifest + GC ----------------------------------------------------------

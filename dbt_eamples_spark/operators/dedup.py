@@ -29,8 +29,6 @@ the DuckDB oracle exact.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -79,35 +77,17 @@ def _shingles(df: DataFrame, *carry: str) -> DataFrame:
 # md5) instead of a full re-tokenize. At 100 TB the tokenize pass
 # is the dominant scan cost — paying it once per corpus instead of
 # once per query is the entire point of the artifact layer.
-_DOC_SHINGLES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, shingles) — each document's DISTINCT
     word-3-shingle array with its source attached, artifact-backed
-    per documents fingerprint (L1 session dict over the L2 parquet
-    store, the span_profile two-tier shape)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    per documents fingerprint and persisted in the session store."""
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_DOC_SHINGLES_CACHE, spark, sf_dir, fp)
-    df = _DOC_SHINGLES_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            docs = load_table(
-                spark, sf_dir, "documents", parallelize=True
-            )
-            return _shingles(
-                docs.select("doc_id", "source", "text"), "source"
-            )
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents", parallelize=True)
+        return _shingles(docs.select("doc_id", "source", "text"), "source")
 
-        df = load_or_build(spark, "doc_shingles", fp, build).persist()
-        _DOC_SHINGLES_CACHE[key] = df
-    return df
+    return session_artifact(spark, sf_dir, "doc_shingles", ("documents",), build)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,28 +391,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_pairs(spark, sf_dir)
 
 
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_NGRAM_PAIRS_CACHE, spark, sf_dir, fp)
-    df = _NGRAM_PAIRS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "ngram_jaccard_pairs",
-            fp,
-            lambda: _ngram_jaccard_pairs_build(spark, sf_dir),
-        ).persist()
-        _NGRAM_PAIRS_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "ngram_jaccard_pairs", ("documents",),
+        lambda: _ngram_jaccard_pairs_build(spark, sf_dir),
+    )
 
 
 NGRAM_PAIR_TAU = 0.3  # pair-table floor: keep candidates down to weak-dup
@@ -462,34 +427,19 @@ def _pair_jaccard():
     )
 
 
-_NGRAM_BLOCK_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _ngram_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, blk) — the persisted corpus-side blocking index of
     the ngram-Jaccard pair graph (round 9): an ingest delta probes
     it with delta-side keys only, never re-hashing the corpus (the
     minhash_band_index pattern at one hash per doc)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    return session_artifact(
+        spark, sf_dir, "ngram_block_index", ("documents",),
+        lambda: doc_shingles(spark, sf_dir).select(
+            "doc_id", _blk_col().alias("blk")
+        ),
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_NGRAM_BLOCK_INDEX_CACHE, spark, sf_dir, fp)
-    df = _NGRAM_BLOCK_INDEX_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return doc_shingles(spark, sf_dir).select(
-                "doc_id", _blk_col().alias("blk")
-            )
-
-        df = load_or_build(
-            spark, "ngram_block_index", fp, build
-        ).persist()
-        _NGRAM_BLOCK_INDEX_CACHE[key] = df
-    return df
 
 
 def _ngram_jaccard_pairs_build(
@@ -670,155 +620,35 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _min_label_propagation(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Connected components over an undirected pair list via
-    min-label propagation WITH pointer jumping -> (node, comp).
+    """Connected components over an undirected pair list -> (node,
+    comp), comp = the component's minimum node id.
 
-    Round structure (r14 — the O(diameter) pure neighbor-min loop
-    made chain-shaped near-dup graphs pay ~17 checkpointed rounds on
-    the semantic pair graph; guide §1.2: fix the distributed
-    algorithm first):
+    Below QUOTIENT_DRIVER_CC_MAX edges the components are solved with
+    the driver union-find ``_quotient_components`` uses: the size
+    probe IS the collect (one LIMIT-bounded job, ~10 MB driver
+    ceiling), versus O(rounds) checkpointed joins whose per-round job
+    latency dominates at fixture scale.
 
-     - seed: each node starts at min(self, direct neighbors) — the
-       old loop's first round folded into one aggregate over the
-       checkpointed edge list, no node⋈label join;
-     - per round: neighbor-min (edges ⋈ labels, one groupBy) THEN a
-       pointer jump (labels ⋈ labels: v adopts its label's label).
-       Labels only ever decrease and never leave the component, so
-       the fixpoint — every node at its component MINIMUM — is
-       IDENTICAL to the pure neighbor-min loop's; the jump merely
-       doubles how far a small label travels per round, turning
-       convergence from O(diameter) into O(log diameter) rounds
-       (hash-to-min, Rastogi et al. 2013). Each round is
-       checkpointed so lineage stays flat (the classic iterative-
-       algorithm trap), and the convergence count is a narrow scan
-       of the materialized frame.
-
-    Raises after 20 rounds exactly as before — with the jump that
-    now covers component diameters ~2^20 rather than 20, so the
-    guard is strictly safer at the same cap.
-
-    ``SPARK_GRAFT_CC_KERNEL`` selects the round structure; all
-    variants reach the identical fixpoint (component minimum):
-
-     - ``seeded`` (DEFAULT, r15): the r14 seed + every-2nd-round
-       convergence count WITHOUT the pointer jump. The r15 fresh-JVM
-       interleaved solo A/B (tools/ab_kernel.py, VERDICT r14 #1)
-       measured the jump a net LOSS on every pair graph (its
-       labels⋈labels self-join re-executes the un-persisted
-       neighbor-min subtree on both sides — ADVICE r14 — so each
-       round costs ~2× for <2× fewer rounds): jump/plain/seeded
-       solo mins — dedup_clusters 2.44/2.00/1.82 s, phash
-       3.10/2.46/2.28 s, semantic 3.14/3.03–3.25/3.03 s.
-     - ``plain``: the r13 O(diameter) loop (identity seed, count
-       every round) — the adjudication baseline.
-     - ``jump``: the r14 kernel, kept selectable for
-       re-adjudication."""
-    kernel = os.environ.get("SPARK_GRAFT_CC_KERNEL", "seeded")
+    Past the bound — a real corpus's near-dup graph — seeded min-label
+    propagation: each node starts at min(self, direct neighbors), one
+    aggregate straight off the checkpointed edge list; each round is
+    one neighbor-min join, checkpointed so lineage stays flat (the
+    classic iterative-algorithm trap); the convergence count runs
+    every SECOND round and always on the cap round (a converged
+    labeling is a fixpoint, so one unchecked extra round cannot change
+    values). This kernel won the fresh-JVM A/B against the identity-
+    seeded loop and the pointer-jump variant (OPTIMIZATION_r15.md).
+    Raises if a component is still moving after 20 rounds."""
     base = pairs.select(F.col(a).alias("doc_a"), F.col(b).alias("doc_b"))
-
-    # r15 (VERDICT r14 #3, by the simpler blessed route): below
-    # QUOTIENT_DRIVER_CC_MAX edges the components are solved with the
-    # SAME driver union-find `_quotient_components` has used since
-    # r9 — the size probe IS the collect (one LIMIT-bounded job,
-    # ~10 MB driver ceiling), versus O(rounds) checkpointed joins
-    # whose per-round AQE job latency dominates at fixture scale
-    # (dedup_semantic_clusters: ~89 jobs → ~5). Past the bound — a
-    # real corpus's near-dup graph — the distributed kernel below
-    # takes over unchanged. The historical baselines stay pure for
-    # A/B comparability (plain/jump never take the fast path).
-    if kernel not in ("plain", "jump"):
-        rows = base.limit(QUOTIENT_DRIVER_CC_MAX + 1).collect()
-        if len(rows) <= QUOTIENT_DRIVER_CC_MAX:
-            return _driver_union_find_df(
-                pairs.sparkSession, [(r[0], r[1]) for r in rows]
-            )
+    rows = base.limit(QUOTIENT_DRIVER_CC_MAX + 1).collect()
+    if len(rows) <= QUOTIENT_DRIVER_CC_MAX:
+        return _driver_union_find_df(
+            pairs.sparkSession, [(r[0], r[1]) for r in rows]
+        )
 
     edges = base.union(
         base.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).localCheckpoint(eager=True)
-
-    if kernel == "plain":
-        return _mlp_plain(edges)
-    if kernel == "seeded":
-        return _mlp_seeded(edges)
-
-    # seed = identity labels after one neighbor-min step: min(self,
-    # neighbors) straight off the edge list (every node of the
-    # symmetric edge list appears as doc_a)
-    comp = (
-        edges.groupBy("doc_a")
-        .agg(F.min("doc_b").alias("mn"))
-        .select(
-            F.col("doc_a").alias("node"),
-            F.least(F.col("doc_a"), F.col("mn")).alias("comp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    changed = 1
-    for it in range(20):
-        nbr_min = (
-            edges.join(comp, edges.doc_b == comp.node)
-            .groupBy("doc_a")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        m = comp.join(nbr_min, comp.node == nbr_min.doc_a, "left").select(
-            "node",
-            F.col("comp").alias("old_comp"),
-            F.least(
-                F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-            ).alias("m"),
-        )
-        # pointer jump: v adopts its label's label (labels are node
-        # ids of the same component, so the lookup side is m itself;
-        # the left join tolerates a label whose node row is absent,
-        # which cannot happen for min-ids but costs nothing to allow)
-        lbl = m.select(F.col("node").alias("lnode"), F.col("m").alias("lm"))
-        stepped = (
-            m.join(lbl, m.m == lbl.lnode, "left")
-            .select(
-                "node",
-                "old_comp",
-                F.least(F.col("m"), F.coalesce("lm", F.col("m"))).alias(
-                    "comp"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        comp = stepped.select("node", "comp")
-        # convergence check every SECOND round (each check is its
-        # own job; a converged labeling is a fixpoint, so one
-        # unchecked extra round cannot change values — it only
-        # defers detection by one cheap pass) and always on the
-        # cap round so the non-convergence guard still fires.
-        if it % 2 == 1 or it == 19:
-            changed = stepped.filter(
-                F.col("comp") != F.col("old_comp")
-            ).count()
-            if changed == 0:
-                break
-    if changed != 0:
-        raise RuntimeError(
-            "label propagation did not converge in 20 iterations "
-            f"({changed} labels still moving) -- graph has a component "
-            "with diameter > 20; raise the iteration cap or tighten "
-            "the pair threshold"
-        )
-    return comp
-
-
-def _mlp_seeded(edges: DataFrame) -> DataFrame:
-    """r14's seed + sparse-convergence-count WITHOUT the pointer
-    jump: the seed (min of self and direct neighbors, one aggregate
-    straight off the checkpointed edge list) replaces both the
-    identity-label build and the first neighbor-min round; rounds
-    are the plain single-join neighbor-min (the jump's second join
-    per round is what the r15 solo A/B measured as a net loss —
-    each jump round re-executes the un-persisted neighbor-min
-    subtree on both sides of the self-join); the convergence count
-    runs every SECOND round and always on the cap round (a
-    converged labeling is a fixpoint, so one unchecked extra round
-    cannot change values). Same fixpoint as the other kernels: the
-    component minimum."""
     comp = (
         edges.groupBy("doc_a")
         .agg(F.min("doc_b").alias("mn"))
@@ -853,50 +683,6 @@ def _mlp_seeded(edges: DataFrame) -> DataFrame:
             ).count()
             if changed == 0:
                 break
-    if changed != 0:
-        raise RuntimeError(
-            "label propagation did not converge in 20 iterations "
-            f"({changed} labels still moving) -- graph has a component "
-            "with diameter > 20; raise the iteration cap or tighten "
-            "the pair threshold"
-        )
-    return comp
-
-
-def _mlp_plain(edges: DataFrame) -> DataFrame:
-    """The r13 kernel, verbatim: identity seed + pure neighbor-min
-    rounds, convergence count every round. O(diameter) rounds; kept
-    selectable for the solo A/B adjudication."""
-    comp = (
-        edges.select(F.col("doc_a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 0
-    for _ in range(20):
-        nbr_min = (
-            edges.join(comp, edges.doc_b == comp.node)
-            .groupBy("doc_a")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        stepped = (
-            comp.join(nbr_min, comp.node == nbr_min.doc_a, "left")
-            .select(
-                "node",
-                F.col("comp").alias("old_comp"),
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.filter(
-            F.col("comp") != F.col("old_comp")
-        ).count()
-        comp = stepped.select("node", "comp")
-        if changed == 0:
-            break
     if changed != 0:
         raise RuntimeError(
             "label propagation did not converge in 20 iterations "
@@ -1351,9 +1137,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_delta_artifacts.py, incl. the two-existing-clusters
 # merge fixture).
 
-_MINHASH_BAND_INDEX_FULL_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def minhash_band_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band, bucket) over ALL docs of the dir — the
     persisted index backing incremental CLUSTER maintenance. Unlike
@@ -1361,28 +1144,14 @@ def minhash_band_index_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture batch to model an ingest), the cluster pair graph covers
     the whole corpus, so its delta probe needs keys for every base
     doc."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(
-        _MINHASH_BAND_INDEX_FULL_CACHE, spark, sf_dir, fp
+    return session_artifact(
+        spark, sf_dir, "minhash_band_index_full", ("documents",),
+        lambda: _band_keys(
+            doc_shingles(spark, sf_dir).select("doc_id", "shingles")
+        ),
     )
-    df = _MINHASH_BAND_INDEX_FULL_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return _band_keys(
-                doc_shingles(spark, sf_dir).select("doc_id", "shingles")
-            )
-
-        df = load_or_build(
-            spark, "minhash_band_index_full", fp, build
-        ).persist()
-        _MINHASH_BAND_INDEX_FULL_CACHE[key] = df
-    return df
 
 
 def dedup_incremental_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1872,9 +1641,6 @@ def _band_self_pairs(keys: DataFrame) -> DataFrame:
     )
 
 
-_CLUSTER_LABELS_BASE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _cluster_labels_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) — the persisted CC labeling of the
     BASE-corpus (doc_id % INCR_MOD != 0) pair graph, the warm label
@@ -1884,33 +1650,23 @@ def _cluster_labels_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental query's WARM cost is two artifact scans plus
     delta-sized work — the production shape, like the band index
     behind dedup_incremental_minhash."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    def build() -> DataFrame:
+        keys = minhash_band_index(spark, sf_dir).select(
+            F.col("corpus_doc").alias("doc_id"), "band", "bucket"
+        )
+        pairs = _verify_pairs(
+            spark, sf_dir, _band_self_pairs(keys)
+        ).localCheckpoint(eager=True)
+        return _min_label_propagation(pairs, "doc_a", "doc_b").select(
+            F.col("node").alias("doc_id"),
+            F.col("comp").alias("cluster_id"),
+        )
+
+    return session_artifact(
+        spark, sf_dir, "cluster_labels_base", ("documents",), build
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_CLUSTER_LABELS_BASE_CACHE, spark, sf_dir, fp)
-    df = _CLUSTER_LABELS_BASE_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            keys = minhash_band_index(spark, sf_dir).select(
-                F.col("corpus_doc").alias("doc_id"), "band", "bucket"
-            )
-            pairs = _verify_pairs(
-                spark, sf_dir, _band_self_pairs(keys)
-            ).localCheckpoint(eager=True)
-            return _min_label_propagation(pairs, "doc_a", "doc_b").select(
-                F.col("node").alias("doc_id"),
-                F.col("comp").alias("cluster_id"),
-            )
-
-        df = load_or_build(
-            spark, "cluster_labels_base", fp, build
-        ).persist()
-        _CLUSTER_LABELS_BASE_CACHE[key] = df
-    return df
 
 
 def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2140,35 +1896,20 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # verified-pair cache: the near-dup pair graph is an INDEX — built
 # once, consumed by both the pairwise query and the cluster closure.
-# Two tiers (round 5): an in-session dict holding the checkpointed
-# frame, over the PERSISTED parquet artifact keyed by corpus
-# fingerprint (dbt_eamples_spark.artifacts) — so a second session or
-# process reuses the index instead of re-running the LSH blocking +
-# exact verify, which is the 100 TB operating model.
-_COSINE_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# The PERSISTED parquet artifact keyed by corpus fingerprint lets a
+# second session or process reuse the index instead of re-running the
+# LSH blocking + exact verify (the 100 TB operating model); within a
+# session the store holds its checkpointed scan.
 def _cosine_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "embeddings")
-    key = session_cache_key(_COSINE_PAIRS_CACHE, spark, sf_dir, fp)
-    df = _COSINE_PAIRS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "cosine_pairs",
-            fp,
-            lambda: dedup_embedding_cosine(spark, sf_dir).select(
-                "vec_a", "vec_b"
-            ),
-        ).localCheckpoint(eager=True)
-        _COSINE_PAIRS_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "cosine_pairs", ("embeddings",),
+        lambda: dedup_embedding_cosine(spark, sf_dir).select(
+            "vec_a", "vec_b"
+        ),
+        keep=lambda df: df.localCheckpoint(eager=True),
+    )
 
 
 def text_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,12 +1985,9 @@ def _doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-hash distinct-doc exchange are the dominant cost of all three
 # span consumers (dedup_substring_spans, dedup_top_spans, and the
 # cascade's stage-3 tier), so both derived tables persist once per
-# documents-corpus fingerprint — L2 parquet artifact + L1 session
-# cache, the minhash-band-index precedent. A production cascade
-# reads persisted per-stage verdict tables; this is that shape.
-_SPAN_PROFILE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_SPAN_DUP_STATS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_CLUSTER_VERDICTS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# documents-corpus fingerprint — parquet artifacts held in the
+# session store, the minhash-band-index precedent. A production
+# cascade reads persisted per-stage verdict tables; this is that shape.
 
 
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2262,26 +2000,14 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`cluster_verdicts_apply_delta` relabel touched components
     without a rebuild. (New artifact kind — the old 2-column
     ``cluster_verdicts`` dirs are orphans the GC reclaims.)"""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_CLUSTER_VERDICTS_CACHE, spark, sf_dir, fp)
-    df = _CLUSTER_VERDICTS_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark,
-            "cluster_labels",
-            fp,
-            lambda: dedup_clusters(spark, sf_dir).select(
-                "doc_id", "cluster_id", "keep"
-            ),
-        ).persist()
-        _CLUSTER_VERDICTS_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "cluster_labels", ("documents",),
+        lambda: dedup_clusters(spark, sf_dir).select(
+            "doc_id", "cluster_id", "keep"
+        ),
+    )
 
 
 def _cluster_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2293,63 +2019,39 @@ def _cluster_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_spans, n_dup_spans) for every doc with ≥1 span —
     the persisted per-doc span verdict table."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_PROFILE_CACHE, spark, sf_dir, fp)
-    df = _SPAN_PROFILE_CACHE.get(key)
-    if df is None:
-
-        def build() -> DataFrame:
-            # rides the persisted span indexes (round 9): one
-            # tokenize pass serves all four span artifacts
-            spans = _doc_span_index(spark, sf_dir)
-            stats = _span_hash_index(spark, sf_dir).select(
-                "h", F.col("n_docs").alias("nd")
+    def build() -> DataFrame:
+        # rides the persisted span indexes (round 9): one
+        # tokenize pass serves all four span artifacts
+        spans = _doc_span_index(spark, sf_dir)
+        stats = _span_hash_index(spark, sf_dir).select(
+            "h", F.col("n_docs").alias("nd")
+        )
+        return (
+            spans.join(stats, "h")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").cast("long").alias("n_spans"),
+                F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
+                .cast("long")
+                .alias("n_dup_spans"),
             )
-            return (
-                spans.join(stats, "h")
-                .groupBy("doc_id")
-                .agg(
-                    F.count("*").cast("long").alias("n_spans"),
-                    F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
-                    .cast("long")
-                    .alias("n_dup_spans"),
-                )
-            )
+        )
 
-        df = load_or_build(spark, "span_profile", fp, build).persist()
-        _SPAN_PROFILE_CACHE[key] = df
-    return df
+    return session_artifact(spark, sf_dir, "span_profile", ("documents",), build)
 
 
 def _span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(h, n_docs, n_occurrences) for span hashes in >1 distinct doc
     — the persisted corpus-level duplicated-span table (the nd ≤ 1
     tail, the overwhelming bulk, never persists)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    return session_artifact(
+        spark, sf_dir, "span_dup_stats", ("documents",),
+        lambda: _span_hash_index(spark, sf_dir).filter(F.col("n_docs") > 1),
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_DUP_STATS_CACHE, spark, sf_dir, fp)
-    df = _SPAN_DUP_STATS_CACHE.get(key)
-    if df is None:
-
-        def build() -> DataFrame:
-            return _span_hash_index(spark, sf_dir).filter(
-                F.col("n_docs") > 1
-            )
-
-        df = load_or_build(spark, "span_dup_stats", fp, build).persist()
-        _SPAN_DUP_STATS_CACHE[key] = df
-    return df
 
 
 # Delta maintenance for the span family (round 9, extending VERDICT
@@ -2362,8 +2064,6 @@ def _span_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # singletons included — required because a delta span hitting a base
 # SINGLETON hash flips that base holder's instances to duplicated,
 # which the >1-filtered span_dup_stats artifact cannot see).
-_DOC_SPAN_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_SPAN_HASH_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _delta_doc_spans(delta_docs: DataFrame) -> DataFrame:
@@ -2384,49 +2084,27 @@ def _delta_doc_spans(delta_docs: DataFrame) -> DataFrame:
 
 def _doc_span_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, h) span-instance table."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_DOC_SPAN_INDEX_CACHE, spark, sf_dir, fp)
-    df = _DOC_SPAN_INDEX_CACHE.get(key)
-    if df is None:
-        df = load_or_build(
-            spark, "doc_span_index", fp,
-            lambda: _doc_spans(spark, sf_dir),
-        ).persist()
-        _DOC_SPAN_INDEX_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "doc_span_index", ("documents",),
+        lambda: _doc_spans(spark, sf_dir),
+    )
 
 
 def _span_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted UNfiltered (h, n_docs, n_occurrences) stats."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    return session_artifact(
+        spark, sf_dir, "span_hash_index", ("documents",),
+        lambda: _doc_span_index(spark, sf_dir)
+        .groupBy("h")
+        .agg(
+            F.countDistinct("doc_id").cast("long").alias("n_docs"),
+            F.count("*").cast("long").alias("n_occurrences"),
+        ),
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SPAN_HASH_INDEX_CACHE, spark, sf_dir, fp)
-    df = _SPAN_HASH_INDEX_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            return (
-                _doc_span_index(spark, sf_dir)
-                .groupBy("h")
-                .agg(
-                    F.countDistinct("doc_id").cast("long").alias("n_docs"),
-                    F.count("*").cast("long").alias("n_occurrences"),
-                )
-            )
-
-        df = load_or_build(spark, "span_hash_index", fp, build).persist()
-        _SPAN_HASH_INDEX_CACHE[key] = df
-    return df
 
 
 def span_artifacts_apply_delta(

@@ -34,16 +34,12 @@ PAGERANK_SCALE = 10**12  # total rank mass in fixed-point units
 PAGERANK_TOP_K = 50
 
 
-# L1 session cache for the edge artifact (keyed by app id + corpus,
-# same two-tier shape as dedup._cosine_pairs_cached): all seven
-# graph queries consume the SAME edge list, and at 100 TB the basket
-# expansion over lineitem is the dominant cost — it must be paid
-# once per corpus, not once per query (VERDICT r5 #3). L2 is the
-# persisted parquet artifact under _artifacts/, so a second session
-# or process reloads instead of re-deriving.
-_EDGES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# All seven graph queries consume the SAME edge list, and at 100 TB
+# the basket expansion over lineitem is the dominant cost — it must be
+# paid once per corpus, not once per query (VERDICT r5 #3). The
+# persisted parquet artifact under _artifacts/ lets a second session
+# or process reload instead of re-deriving; the session store holds
+# its persisted scan.
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed co-purchase edge list (src, dst), artifact-backed:
     the raw derivation (:func:`_copurchase_edges_build`) runs only
@@ -57,29 +53,18 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-iteration round. (The old localCheckpoint L1 would ERASE
     that partitioning metadata — an RDD scan has unknown
     partitioning — so the frame is served as the bucketed scan
-    itself; repeat scans are bucket-pruned parquet reads.)"""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build_bucketed,
-        session_cache_key,
-    )
+    itself; repeat scans are bucket-pruned parquet reads.) The
+    session keeps it persisted: an InMemoryRelation PRESERVES the
+    bucket partitioning (unlike localCheckpoint's RDD scan), so
+    repeat consumers skip the parquet decode AND keep the
+    exchange-free src-keyed plans."""
+    from dbt_eamples_spark.artifacts import session_artifact
 
-    fp = corpus_fingerprint(sf_dir, "lineitem")
-    key = session_cache_key(_EDGES_CACHE, spark, sf_dir, fp)
-    df = _EDGES_CACHE.get(key)
-    if df is None:
-        df = load_or_build_bucketed(
-            spark,
-            "copurchase_edges_b",
-            fp,
-            "src",
-            lambda: _copurchase_edges_build(spark, sf_dir),
-        ).persist()  # InMemoryRelation PRESERVES the bucket
-        # partitioning (unlike localCheckpoint's RDD scan), so
-        # repeat consumers skip the parquet decode AND keep the
-        # exchange-free src-keyed plans
-        _EDGES_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "copurchase_edges_b", ("lineitem",),
+        lambda: _copurchase_edges_build(spark, sf_dir),
+        bucket_key="src",
+    )
 
 
 def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,28 +183,13 @@ def _copurchase_weighted_edges(
     two-tier store as the unweighted :func:`_copurchase_edges` (the
     support-weighted expansion costs the same lineitem pass, so it
     earns the same build-once, bucket-once treatment)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build_bucketed,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    return session_artifact(
+        spark, sf_dir, "copurchase_weighted_edges_b", ("lineitem",),
+        lambda: _copurchase_weighted_edges_build(spark, sf_dir),
+        bucket_key="src",
     )
-
-    fp = corpus_fingerprint(sf_dir, "lineitem")
-    key = session_cache_key(_WEDGES_CACHE, spark, sf_dir, fp)
-    df = _WEDGES_CACHE.get(key)
-    if df is None:
-        df = load_or_build_bucketed(
-            spark,
-            "copurchase_weighted_edges_b",
-            fp,
-            "src",
-            lambda: _copurchase_weighted_edges_build(spark, sf_dir),
-        ).persist()  # partitioning-preserving cache, as unweighted
-        _WEDGES_CACHE[key] = df
-    return df
-
-
-_WEDGES_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _copurchase_weighted_edges_build(
@@ -510,9 +480,6 @@ def triangles_compact_forward(
     )
 
 
-_TRIANGLE_CREDITS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _triangle_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, n_triangles) — per-node triangle participation of the
     co-purchase graph, artifact-backed (round 8): the
@@ -522,36 +489,23 @@ def _triangle_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`graph_transitivity`'s global folds) then scan
     node-bounded rows — the same build-once/query-many contract as
     the co-purchase edge artifact the enumeration reads."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    def build() -> DataFrame:
+        edges = _copurchase_edges(spark, sf_dir)
+        deg = edges.groupBy("src").agg(
+            F.count("*").cast("long").alias("deg")
+        ).localCheckpoint(eager=True)
+        tris = triangles_compact_forward(edges, deg)
+        return (
+            tris.select(F.explode(F.array("a", "b", "c")).alias("node"))
+            .groupBy("node")
+            .agg(F.count("*").cast("long").alias("n_triangles"))
+        )
+
+    return session_artifact(
+        spark, sf_dir, "triangle_credits", ("lineitem",), build
     )
-
-    fp = corpus_fingerprint(sf_dir, "lineitem")
-    key = session_cache_key(_TRIANGLE_CREDITS_CACHE, spark, sf_dir, fp)
-    df = _TRIANGLE_CREDITS_CACHE.get(key)
-    if df is None:
-
-        def build() -> DataFrame:
-            edges = _copurchase_edges(spark, sf_dir)
-            deg = edges.groupBy("src").agg(
-                F.count("*").cast("long").alias("deg")
-            ).localCheckpoint(eager=True)
-            tris = triangles_compact_forward(edges, deg)
-            return (
-                tris.select(
-                    F.explode(F.array("a", "b", "c")).alias("node")
-                )
-                .groupBy("node")
-                .agg(F.count("*").cast("long").alias("n_triangles"))
-            )
-
-        df = load_or_build(
-            spark, "triangle_credits", fp, build
-        ).persist()
-        _TRIANGLE_CREDITS_CACHE[key] = df
-    return df
 
 
 # Measured delta-vs-rebuild crossover for the triangle family

@@ -692,9 +692,6 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PHASH_BAND_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def phash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED corpus-side dHash band index (corpus_doc,
     b0..b3): built once per documents fingerprint and stored as a
@@ -703,32 +700,22 @@ def phash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`dedup.minhash_band_index` (VERDICT r8 #8). Corpus =
     doc_id % INCR_MOD != 0 (the held-out tenth is the incoming
     batch, the incremental-minhash fixture convention)."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
-    )
+    from dbt_eamples_spark.artifacts import session_artifact
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_PHASH_BAND_INDEX_CACHE, spark, sf_dir, fp)
-    df = _PHASH_BAND_INDEX_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            docs = load_table(
-                spark, sf_dir, "documents", parallelize=True
-            ).select("doc_id")
-            corpus = docs.filter(~(F.col("doc_id") % INCR_MOD == 0))
-            return _phash_bands_frame(corpus).select(
-                F.col("doc_id").alias("corpus_doc"),
-                "b0", "b1", "b2", "b3",
-            )
+    def build() -> DataFrame:
+        docs = load_table(
+            spark, sf_dir, "documents", parallelize=True
+        ).select("doc_id")
+        corpus = docs.filter(~(F.col("doc_id") % INCR_MOD == 0))
+        return _phash_bands_frame(corpus).select(
+            F.col("doc_id").alias("corpus_doc"),
+            "b0", "b1", "b2", "b3",
+        )
 
-        df = load_or_build(
-            spark, "phash_band_index", fp, build
-        ).persist()
-        _PHASH_BAND_INDEX_CACHE[key] = df
-    return df
+    return session_artifact(
+        spark, sf_dir, "phash_band_index", ("documents",), build
+    )
 
 
 def phash_band_index_apply_delta(

@@ -1184,40 +1184,25 @@ def text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact count table is the distributional twin of dedup.doc_shingles
 # — corpus-derived, vocab-bounded, and re-derived per call by every
 # frequency-profile query before round 9. Built once per documents
-# fingerprint; persisted as parquet; L1 session dict on top.
-_SOURCE_TERM_COUNTS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# fingerprint; persisted as parquet; held in the session store.
 
 
 def _source_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, term, c) — exact per-source unigram counts,
     artifact-backed per documents fingerprint."""
-    from dbt_eamples_spark.artifacts import (
-        corpus_fingerprint,
-        load_or_build,
-        session_cache_key,
+    from dbt_eamples_spark.artifacts import session_artifact
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents", parallelize=True)
+        return (
+            docs.select("source", F.explode(_tokens_col()).alias("term"))
+            .groupBy("source", "term")
+            .agg(F.count("*").cast("long").alias("c"))
+        )
+
+    return session_artifact(
+        spark, sf_dir, "source_term_counts", ("documents",), build
     )
-
-    fp = corpus_fingerprint(sf_dir, "documents")
-    key = session_cache_key(_SOURCE_TERM_COUNTS_CACHE, spark, sf_dir, fp)
-    df = _SOURCE_TERM_COUNTS_CACHE.get(key)
-    if df is None:
-        def build() -> DataFrame:
-            docs = load_table(
-                spark, sf_dir, "documents", parallelize=True
-            )
-            return (
-                docs.select(
-                    "source", F.explode(_tokens_col()).alias("term")
-                )
-                .groupBy("source", "term")
-                .agg(F.count("*").cast("long").alias("c"))
-            )
-
-        df = load_or_build(
-            spark, "source_term_counts", fp, build
-        ).persist()
-        _SOURCE_TERM_COUNTS_CACHE[key] = df
-    return df
 
 
 def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:

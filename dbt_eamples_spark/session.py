@@ -9,6 +9,11 @@ so rendering and the DuckDB oracle agree.
 Scale posture: AQE on (runtime coalesce / skew-join / join re-plan),
 shuffle partitions sized for the local harness but overridable via
 env for cluster runs; Arrow enabled for the few Pandas-UDF paths.
+
+The session puts the package's parent directory on its Python
+workers' path, so Python-UDF stages import the engine from wherever it
+is checked out and whatever the launching process's cwd and
+``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -18,7 +23,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
+# the directory holding the dbt_eamples_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "dbt-eamples-spark") -> SparkSession:
@@ -37,6 +46,7 @@ def get_spark(app_name: str = "dbt-eamples-spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -6,6 +6,7 @@ incremental minhash probe must run against the persisted index."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -20,15 +21,9 @@ def art_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
     # clear the in-session L1 tiers so the disk tier is exercised
-    D._COSINE_PAIRS_CACHE.clear()
-    V._PQ_CODEBOOKS.clear()
-    G._EDGES_CACHE.clear()
-    G._WEDGES_CACHE.clear()
+    A.clear_session_state()
     yield str(tmp_path / "arts")
-    D._COSINE_PAIRS_CACHE.clear()
-    V._PQ_CODEBOOKS.clear()
-    G._EDGES_CACHE.clear()
-    G._WEDGES_CACHE.clear()
+    A.clear_session_state()
 
 
 def _events(kind):
@@ -41,8 +36,6 @@ class TestFingerprint:
         assert fp1 == A.corpus_fingerprint(sf_dir, "documents")
         assert fp1 != A.corpus_fingerprint(sf_dir, "embeddings")
         # a rewritten copy fingerprints differently (path + mtime)
-        import shutil
-
         alt = tmp_path / "sfcopy"
         alt.mkdir()
         shutil.copy(
@@ -76,7 +69,7 @@ class TestCosinePairIndex:
         assert _events("cosine_pairs") == ["build"]
         # simulate a NEW session: drop the L1 dict (the artifact
         # store is what survives a SparkContext)
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear_session_state()
         second = {
             (r["vec_a"], r["vec_b"])
             for r in D._cosine_pairs_cached(spark, sf_dir).collect()
@@ -87,7 +80,7 @@ class TestCosinePairIndex:
     def test_semantic_clusters_consume_artifact(self, spark, sf_dir, art_dir):
         D.dedup_semantic_clusters(spark, sf_dir).collect()
         assert _events("cosine_pairs") == ["build"]
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear_session_state()
         D.dedup_semantic_clusters(spark, sf_dir).collect()
         assert _events("cosine_pairs")[-1] == "reuse"
 
@@ -108,7 +101,7 @@ class TestCopurchaseEdgeArtifact:
         G.graph_degree_powerlaw(spark, sf_dir).collect()
         assert _events("copurchase_edges_b") == ["build"]
         # a new session (L1 dropped) reloads the artifact
-        G._EDGES_CACHE.clear()
+        A.clear_session_state()
         second = {
             (r["src"], r["dst"])
             for r in G._copurchase_edges(spark, sf_dir).collect()
@@ -121,7 +114,7 @@ class TestCopurchaseEdgeArtifact:
             (r["src"], r["dst"], r["w"])
             for r in G._copurchase_weighted_edges(spark, sf_dir).collect()
         }
-        G._WEDGES_CACHE.clear()
+        A.clear_session_state()
         w2 = {
             (r["src"], r["dst"], r["w"])
             for r in G._copurchase_weighted_edges(spark, sf_dir).collect()
@@ -134,7 +127,7 @@ class TestPqCodebookArtifact:
     def test_loaded_books_bit_identical(self, spark, sf_dir, art_dir):
         books1 = V._pq_train_codebooks(spark, sf_dir)
         assert _events("pq_codebooks") == ["build"]
-        V._PQ_CODEBOOKS.clear()
+        A.clear_session_state()
         books2 = V._pq_train_codebooks(spark, sf_dir)
         assert _events("pq_codebooks") == ["build", "reuse"]
         assert books2 == books1  # float64 survives parquet bit-for-bit
@@ -310,11 +303,7 @@ class TestRound8StageArtifacts:
     per-stage verdicts), ngram_jaccard_pairs, triangle_credits."""
 
     def _fresh(self):
-        D._SPAN_PROFILE_CACHE.clear()
-        D._SPAN_DUP_STATS_CACHE.clear()
-        D._CLUSTER_VERDICTS_CACHE.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
-        G._TRIANGLE_CREDITS_CACHE.clear()
+        A.clear_session_state()
 
     def test_span_profile_built_once_then_reused(
         self, spark, sf_dir, art_dir
@@ -328,7 +317,7 @@ class TestRound8StageArtifacts:
         # same session, second consumer: L1 hit, no new event
         D.dedup_substring_spans(spark, sf_dir).collect()
         assert _events("span_profile") == ["build"]
-        D._SPAN_PROFILE_CACHE.clear()
+        A.clear_session_state()
         p2 = {
             (r.doc_id, r.n_spans, r.n_dup_spans)
             for r in D._span_profile(spark, sf_dir).collect()
@@ -360,7 +349,7 @@ class TestRound8StageArtifacts:
         glob = G.graph_transitivity(spark, sf_dir).collect()[0]
         assert _events("triangle_credits") == ["build"]  # L1 hit
         # the two views agree: total credits = 3 * triangle count
-        G._TRIANGLE_CREDITS_CACHE.clear()
+        A.clear_session_state()
         credits = G._triangle_credits(spark, sf_dir).collect()
         assert _events("triangle_credits") == ["build", "reuse"]
         assert sum(r.n_triangles for r in credits) == 3 * glob.n_triangles
@@ -396,11 +385,7 @@ class TestRound9SharedTokenizeArtifacts:
     corpus_js_divergence."""
 
     def _fresh(self):
-        D._DOC_SHINGLES_CACHE.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
-        from dbt_eamples_spark.operators import text as T
-
-        T._SOURCE_TERM_COUNTS_CACHE.clear()
+        A.clear_session_state()
 
     def test_doc_shingles_shared_by_three_consumers(
         self, spark, sf_dir, art_dir
@@ -414,7 +399,7 @@ class TestRound9SharedTokenizeArtifacts:
         assert _events("doc_shingles") == ["build"]  # L1 hit
         # the pair builder rides the same artifact — a cleared L1
         # falls through to disk reuse, never a second tokenize
-        D._DOC_SHINGLES_CACHE.clear()
+        A.clear_session_state()
         D.dedup_ngram_jaccard(spark, sf_dir).collect()
         assert _events("doc_shingles") == ["build", "reuse"]
         # warm results identical to the cold-build pass
@@ -437,28 +422,106 @@ class TestRound9SharedTokenizeArtifacts:
         assert sorted(map(tuple, js1)) == sorted(map(tuple, js2))
         assert len(js1) > 0
 
-    def test_session_cache_key_evicts_stale_fingerprints(self, spark):
-        """ADVICE r8: the L1 key includes the corpus fingerprint, so
-        an in-session fixture rewrite misses the cache AND evicts
-        (unpersists) the superseded entry."""
 
-        class _Frame:
-            unpersisted = False
+class TestSessionStore:
+    """The one store for operator state held in a session: entries are
+    keyed by (application, sf_dir, name) and stamped with the
+    fingerprint of their source tables."""
 
-            def unpersist(self):
-                self.unpersisted = True
+    @pytest.fixture()
+    def corpus(self, sf_dir, tmp_path):
+        d = tmp_path / "corpus"
+        d.mkdir()
+        for t in ("documents", "embeddings"):
+            shutil.copyfile(
+                os.path.join(sf_dir, f"{t}.parquet"), d / f"{t}.parquet"
+            )
+        A.clear_session_state()
+        yield str(d)
+        A.clear_session_state()
 
-        cache = {}
-        old = _Frame()
-        app = spark.sparkContext.applicationId
-        cache[(app, "/some/dir", "fp_old")] = old
-        key = A.session_cache_key(cache, spark, "/some/dir", "fp_new")
-        assert key == (app, "/some/dir", "fp_new")
-        assert (app, "/some/dir", "fp_old") not in cache
-        assert old.unpersisted
-        # other dirs are untouched
-        other = _Frame()
-        cache[(app, "/other/dir", "fp_x")] = other
-        A.session_cache_key(cache, spark, "/some/dir", "fp_new")
-        assert (app, "/other/dir", "fp_x") in cache
-        assert not other.unpersisted
+    @staticmethod
+    def _jobs(spark, group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_fingerprint_change_evicts_only_that_tables_entries(
+        self, spark, corpus
+    ):
+        builds = []
+
+        def held(name, table):
+            def build():
+                builds.append(name)
+                return spark.range(3).persist()
+
+            return A.session_state(spark, corpus, name, (table,), build)
+
+        docs_df, emb_df = held("d", "documents"), held("e", "embeddings")
+        assert held("d", "documents") is docs_df
+        assert builds == ["d", "e"]
+        os.utime(os.path.join(corpus, "documents.parquet"), ns=(1, 1))
+        fresh = held("d", "documents")
+        assert fresh is not docs_df and builds == ["d", "e", "d"]
+        assert not docs_df.is_cached  # the superseded frame is released
+        assert held("e", "embeddings") is emb_df and emb_df.is_cached
+        assert builds == ["d", "e", "d"]
+
+    def test_hit_runs_no_spark_job(self, spark, corpus, art_dir):
+        def shingles():
+            D.doc_shingles(spark, corpus)
+
+        assert self._jobs(spark, "store_miss", shingles) > 0
+        assert _events("doc_shingles") == ["build"]
+        assert self._jobs(spark, "store_hit", shingles) == 0
+        assert _events("doc_shingles") == ["build"]
+
+    def test_clear_empties_everything(self, spark, corpus):
+        frames = [
+            A.session_state(
+                spark, corpus, name, (t,), lambda: spark.range(2).persist()
+            )
+            for name, t in [("a", "documents"), ("b", "embeddings")]
+        ]
+        A.clear_session_state()
+        assert A._SESSION == {}
+        assert not any(f.is_cached for f in frames)
+        again = A.session_state(
+            spark, corpus, "a", ("documents",), lambda: "rebuilt"
+        )
+        assert again == "rebuilt"
+
+    def test_ivf_centroids_follow_an_in_session_rewrite(
+        self, spark, corpus
+    ):
+        """An in-session rewrite of ``embeddings`` retrains the IVF
+        quantizer: the warm query equals one run on an empty store."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def topk():
+            return sorted(
+                map(tuple, V.similarity_ivf_topk(spark, corpus).collect())
+            )
+
+        before = topk()
+        path = os.path.join(corpus, "embeddings.parquet")
+        table = pq.read_table(path)
+        # every vec_id takes its predecessor's vector
+        pdf = table.to_pandas()
+        pdf["embedding"] = np.roll(pdf["embedding"].to_numpy(), 1)
+        pq.write_table(
+            pa.Table.from_pandas(pdf, schema=table.schema), path
+        )
+        warm = topk()
+        A.clear_session_state()
+        cold = topk()
+        assert cold != before
+        assert warm == cold

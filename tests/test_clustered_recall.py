@@ -14,6 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.catalog import load_table
 from dbt_eamples_spark.operators import dedup as D
 from dbt_eamples_spark.operators import similarity as V
@@ -37,8 +38,7 @@ def clustered_dir(tmp_path_factory):
     store = str(tmp_path_factory.mktemp("arts"))
     old = os.environ.get("SPARK_GRAFT_ARTIFACTS")
     os.environ["SPARK_GRAFT_ARTIFACTS"] = store
-    V._PQ_CODEBOOKS.clear()
-    D._COSINE_PAIRS_CACHE.clear()
+    A.clear_session_state()
     try:
         yield write_clustered(
             str(tmp_path_factory.mktemp("clustered") / "sf")
@@ -48,8 +48,7 @@ def clustered_dir(tmp_path_factory):
             os.environ.pop("SPARK_GRAFT_ARTIFACTS", None)
         else:
             os.environ["SPARK_GRAFT_ARTIFACTS"] = old
-        V._PQ_CODEBOOKS.clear()
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear_session_state()
 
 
 def _pairs(df, a="query_id", b="neighbor_id"):
@@ -106,8 +105,7 @@ def clustered_10x(tmp_path_factory):
     store = str(tmp_path_factory.mktemp("arts10"))
     old = os.environ.get("SPARK_GRAFT_ARTIFACTS")
     os.environ["SPARK_GRAFT_ARTIFACTS"] = store
-    V._PQ_CODEBOOKS.clear()
-    D._COSINE_PAIRS_CACHE.clear()
+    A.clear_session_state()
     try:
         yield write_clustered_10x(
             str(tmp_path_factory.mktemp("clustered10") / "sf")
@@ -117,8 +115,7 @@ def clustered_10x(tmp_path_factory):
             os.environ.pop("SPARK_GRAFT_ARTIFACTS", None)
         else:
             os.environ["SPARK_GRAFT_ARTIFACTS"] = old
-        V._PQ_CODEBOOKS.clear()
-        D._COSINE_PAIRS_CACHE.clear()
+        A.clear_session_state()
 
 
 class TestDedupClusteredAt10x:

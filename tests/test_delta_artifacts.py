@@ -30,20 +30,9 @@ pytestmark = pytest.mark.slow
 def art_dir(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
-    self_caches = [
-        D._NGRAM_PAIRS_CACHE,
-        D._NGRAM_BLOCK_INDEX_CACHE,
-        D._DOC_SHINGLES_CACHE,
-        D._CLUSTER_VERDICTS_CACHE,
-        D._MINHASH_BAND_INDEX_FULL_CACHE,
-        G._EDGES_CACHE,
-        G._TRIANGLE_CREDITS_CACHE,
-    ]
-    for c in self_caches:
-        c.clear()
+    A.clear_session_state()
     yield str(tmp_path / "arts")
-    for c in self_caches:
-        c.clear()
+    A.clear_session_state()
 
 
 def _events(kind):
@@ -96,11 +85,11 @@ class TestNgramPairsDelta:
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
         A.ARTIFACT_EVENTS.clear()
-        D._NGRAM_PAIRS_CACHE.clear()
+        A.clear_session_state()
         got = _ctr(D.dedup_ngram_jaccard(spark, sf_dir).collect())
         assert _events("ngram_jaccard_pairs") == ["reuse"]
         # and the published table is the rebuild-identical one
-        D._NGRAM_PAIRS_CACHE.clear()
+        A.clear_session_state()
         for p in [os.path.join(art_dir, d) for d in os.listdir(art_dir)
                   if d.startswith("ngram_jaccard_pairs")]:
             import shutil
@@ -146,7 +135,7 @@ class TestTriangleCreditsDelta:
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
         A.ARTIFACT_EVENTS.clear()
-        G._TRIANGLE_CREDITS_CACHE.clear()
+        A.clear_session_state()
         G.graph_triangle_count(spark, sf_dir).collect()
         assert _events("triangle_credits") == ["reuse"]
 
@@ -181,16 +170,16 @@ class TestBandIndexDeltas:
     def test_phash_index_delta(self, spark, sf_dir, tmp_path, art_dir):
         from dbt_eamples_spark.operators import multimodal as M
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         base_dir, delta = self._split_docs(spark, sf_dir, tmp_path, "pb")
         merged = _ctr(
             M.phash_band_index_apply_delta(
                 spark, base_dir, delta.select("doc_id")
             ).collect()
         )
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         full = _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         assert merged == full and len(full) > 0
 
 
@@ -205,10 +194,7 @@ class TestSpanArtifactsDelta:
         return base_dir, delta
 
     def _fresh(self):
-        D._SPAN_PROFILE_CACHE.clear()
-        D._SPAN_DUP_STATS_CACHE.clear()
-        D._DOC_SPAN_INDEX_CACHE.clear()
-        D._SPAN_HASH_INDEX_CACHE.clear()
+        A.clear_session_state()
 
     def test_delta_merge_equals_full_rebuild(
         self, spark, sf_dir, tmp_path, art_dir
@@ -298,13 +284,13 @@ class TestEmptyDeltaIdentity:
             ).collect()
         ) == _ctr(D.minhash_band_index(spark, sf_dir).collect())
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         assert _ctr(
             M.phash_band_index_apply_delta(
                 spark, sf_dir, empty_docs.select("doc_id")
             ).collect()
         ) == _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
 
 
 class TestDeltaContracts:
@@ -345,7 +331,7 @@ class TestDeltaContracts:
     ):
         from dbt_eamples_spark.operators import multimodal as M
 
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         docs = load_table(spark, sf_dir, "documents")
         base = docs.filter(
             (F.col("doc_id") % 10 != 0) & (F.col("doc_id") % 10 != 7)
@@ -362,9 +348,9 @@ class TestDeltaContracts:
                 spark, base_dir, delta.select("doc_id")
             ).collect()
         )
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         full = _ctr(M.phash_band_index(spark, sf_dir).collect())
-        M._PHASH_BAND_INDEX_CACHE.clear()
+        A.clear_session_state()
         assert merged == full and len(full) > 0
 
     def test_ngram_delta_reingest_raises(
@@ -463,7 +449,7 @@ class TestClusterVerdictsDelta:
             301: (101, False),
         }
         # and that is exactly the from-scratch union rebuild
-        D._DOC_SHINGLES_CACHE.clear()
+        A.clear_session_state()
         full = {
             r.doc_id: (r.cluster_id, r.keep)
             for r in D.dedup_clusters(spark, union_dir)
@@ -485,7 +471,7 @@ class TestClusterVerdictsDelta:
         D.cluster_verdicts_apply_delta(
             spark, base_dir, delta, publish_fingerprint=fp_full
         ).collect()
-        D._CLUSTER_VERDICTS_CACHE.clear()
+        A.clear_session_state()
         A.ARTIFACT_EVENTS.clear()
         D.corpus_keep_list(spark, sf_dir).collect()
         built = {k for k, v in A.ARTIFACT_EVENTS if v == "build"}

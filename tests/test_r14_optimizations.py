@@ -192,25 +192,19 @@ def test_min_label_propagation_matches_union_find(spark, name, pairs):
     assert got == _uf_components(pairs), name
 
 
-@pytest.mark.parametrize(
-    "kernel", ["seeded", "seeded-distributed", "plain", "jump"]
-)
+@pytest.mark.parametrize("kernel", ["seeded", "seeded-distributed"])
 def test_min_label_propagation_kernels_equivalent(
     spark, kernel, monkeypatch
 ):
-    """Every SPARK_GRAFT_CC_KERNEL variant reaches the identical
-    fixpoint (component minimum) — the r15 adjudication keeps all
-    three selectable, so each stays correctness-locked on the
-    adversarial shapes. "seeded-distributed" pins the driver-CC
-    bound to 0 so the distributed seeded loop is exercised even on
-    these tiny graphs (the default seeded path solves them with the
-    r9 driver union-find)."""
+    """Both CC kernels reach the identical fixpoint (component
+    minimum) on the adversarial shapes. "seeded" solves these tiny
+    graphs with the driver union-find; "seeded-distributed" pins the
+    driver-CC bound to 0 so the forced fallback, the distributed
+    seeded loop, runs on them."""
     import dbt_eamples_spark.operators.dedup as D
 
     if kernel == "seeded-distributed":
         monkeypatch.setattr(D, "QUOTIENT_DRIVER_CC_MAX", 0)
-        kernel = "seeded"
-    monkeypatch.setenv("SPARK_GRAFT_CC_KERNEL", kernel)
     for name, pairs in [
         ("descending_chain", [(i, i - 1) for i in range(19, 1, -1)]),
         ("clique", [(i, j) for i in range(6) for j in range(i + 1, 6)]),
@@ -225,25 +219,6 @@ def test_min_label_propagation_kernels_equivalent(
             for r in _min_label_propagation(df, "x", "y").collect()
         }
         assert got == _uf_components(pairs), f"{kernel}:{name}"
-
-
-def test_coreset_kernels_value_identical(spark, sf_dir, monkeypatch):
-    """The three SPARK_GRAFT_CORESET_KERNEL materializations
-    (persist / checkpoint / recompute) must pick the identical
-    centers with identical radii: same expressions, same left-fold
-    LEAST order — the r15 adjudication keeps all three selectable."""
-    from dbt_eamples_spark.operators.similarity import (
-        sample_coreset_kcenter,
-    )
-
-    rows = {}
-    for kernel in ("persist", "checkpoint", "recompute"):
-        monkeypatch.setenv("SPARK_GRAFT_CORESET_KERNEL", kernel)
-        rows[kernel] = [
-            (r.sel_round, r.vec_id, repr(r.coverage_radius))
-            for r in sample_coreset_kcenter(spark, sf_dir).collect()
-        ]
-    assert rows["persist"] == rows["checkpoint"] == rows["recompute"]
 
 
 def test_min_label_propagation_random_graphs(spark):

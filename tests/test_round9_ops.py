@@ -54,7 +54,7 @@ def test_incremental_phash_matches_full_restriction(spark, sf_dir, tmp_path, mon
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
     A.ARTIFACT_EVENTS.clear()
-    M._PHASH_BAND_INDEX_CACHE.clear()
+    A.clear_session_state()
     inc = {
         (r.new_doc, r.corpus_doc, r.n_bands_shared, r.hamming)
         for r in M.dedup_incremental_phash(spark, sf_dir).collect()
@@ -77,10 +77,10 @@ def test_incremental_phash_matches_full_restriction(spark, sf_dir, tmp_path, mon
     ) and n_new == 4 * len(new_docs)
     # index built once; a cleared L1 reuses the parquet artifact
     assert [e for k, e in A.ARTIFACT_EVENTS if k == "phash_band_index"] == ["build"]
-    M._PHASH_BAND_INDEX_CACHE.clear()
+    A.clear_session_state()
     M.dedup_incremental_phash(spark, sf_dir).collect()
     assert [e for k, e in A.ARTIFACT_EVENTS if k == "phash_band_index"] == ["build", "reuse"]
-    M._PHASH_BAND_INDEX_CACHE.clear()
+    A.clear_session_state()
 
 
 def test_phash_fixture_horizon_guard():

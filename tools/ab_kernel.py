@@ -1,15 +1,16 @@
-"""Interleaved fresh-JVM kernel A/B (VERDICT r14 #1 adjudication).
+"""Interleaved fresh-JVM A/B of one query under two values of an
+environment variable.
 
-The r14 round left five rewrites (CC-kernel dedup family + coreset)
-wall-clock UNCONFIRMED: both benches read them 0.70-0.80x vs a
-~0.89x untouched median, but no committed solo evidence existed.
-This tool settles such questions the only way ambient drift allows:
-for one query it alternates fresh-JVM solo children (bench_solo's
---one protocol: warm-up + best-of-3, noop sink) between two values
-of a kernel-selection env var, A,B,A,B,... so both variants sample
-the same minutes of machine state, and reports the per-variant MIN
-across spawns (the bench.py min-of-3 philosophy applied across
-JVMs).
+For one query it alternates fresh-JVM solo children (bench_solo's
+--one protocol: warm-up + best-of-3, noop sink) between the two
+values, A,B,A,B,... so both variants sample the same minutes of
+machine state, and reports the per-variant MIN across spawns (the
+bench.py min-of-3 philosophy applied across JVMs).
+
+The engine keeps one kernel per operator, so comparing two kernels
+means comparing two trees: check the other one out with
+``git worktree add``, and alternate ``tools/bench_solo.py --one`` runs
+between the two checkouts the same way.
 
 Usage:
   python tools/ab_kernel.py QUERY ENVVAR VALUE_A VALUE_B [--reps N]
