@@ -18,7 +18,8 @@ cannot perturb the engine-exact guarantees (oracle hashes are
 unchanged whether an index was built or loaded).
 
 ``ARTIFACT_EVENTS`` records (kind, "build" | "reuse") per call — the
-observability hook the reuse tests assert on.
+observability hook the reuse tests assert on. ``SESSION_EVENTS`` does
+the same for the session store: (name, "hit" | "build") per use.
 
 Artifacts are immutable, so :func:`publish` lands a frame that is an
 unchanged stored generation under a new fingerprint by hard-linking
@@ -286,6 +287,10 @@ def _attach_bucketed(
 
 _SESSION: dict[tuple[str, str, str], tuple[str, object]] = {}
 
+# (name, "hit"|"build") per session-store use, newest last; a "build"
+# runs ``make``, which may itself reuse the disk tier
+SESSION_EVENTS: list[tuple[str, str]] = []
+
 
 def session_state(
     spark: SparkSession, sf_dir: str, name: str, tables: tuple, build
@@ -323,11 +328,13 @@ def _remember(spark: SparkSession, sf_dir: str, name: str, tables, make):
     held = _SESSION.get(key)
     if held is not None:
         if held[0] == fp:
+            SESSION_EVENTS.append((name, "hit"))
             return held[1]
         del _SESSION[key]
         _release(held[1])
     value = make(fp)
     _SESSION[key] = (fp, value)
+    SESSION_EVENTS.append((name, "build"))
     return value
 
 

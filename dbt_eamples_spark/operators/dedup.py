@@ -6,7 +6,7 @@ Scale design (the point of each algorithm):
  - **exact**: hash-groupBy on the full normalized text — one shuffle
    keyed by an md5 (uniform, skew-free).
  - **MinHash-LSH**: shingle → k universal-hash minima → band
-   buckets → hash self-join of the checkpointed (band, bucket) key
+   buckets → hash self-join of the persisted (band, bucket) key
    table. Candidate generation never compares all pairs: docs meet
    only inside a shared band bucket, the key is hash-uniform, and a
    degenerate bucket splits across tasks (AQE skew join) instead of
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 # MinHash parameters: 12 hashes in 3 bands of 4 → catches J≳0.7 pairs
 MINHASH_K = 12
@@ -47,6 +48,12 @@ JACCARD_THRESHOLD = 0.5
 MINHASH_P = 2_147_483_647
 
 
+_PAIR_JACCARD_SQL = (
+    "round(CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
+    " / size(array_union(sh_a, sh_b)), 6)"
+)
+
+
 def _shingles(df: DataFrame, *carry: str) -> DataFrame:
     """doc_id [+ carry cols] → distinct word-3-shingle array
     (lowercased).
@@ -56,14 +63,14 @@ def _shingles(df: DataFrame, *carry: str) -> DataFrame:
     CollapseProject, so the regex runs once per row instead of once
     per shingle (O(T) vs O(T²) — measured 11× on the fixture docs).
     """
-    tokd = df.select(
-        "doc_id", *carry, F.split(F.lower(F.col("text")), r"\s+").alias("toks")
+    tokd = V.select(df, "doc_id", *carry, r"split(lower(text), '\\s+') AS toks")
+    return V.select(
+        tokd,
+        "doc_id",
+        *carry,
+        "array_distinct(transform(sequence(1, greatest(size(toks) - 2, 1)), "
+        "i -> concat_ws(' ', slice(toks, i, 3)))) AS shingles",
     )
-    ids = F.sequence(F.lit(1), F.greatest(F.size("toks") - 2, F.lit(1)))
-    sh = F.array_distinct(
-        F.transform(ids, lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, 3)))
-    )
-    return tokd.select("doc_id", *carry, sh.alias("shingles"))
 
 
 # Shared shingle artifact (VERDICT r8 #3): the word-3-gram tokenize
@@ -152,11 +159,11 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets → per-bucket pair generation → Jaccard ≥ 0.5 verify.
 
     Scale shape (the things that keep this sub-quadratic at 100 TB):
-     - the signature pipeline is computed ONCE: the (doc, band,
-       bucket) key table is localCheckpoint'ed, and candidate pairs
-       come from a codegen'd hash SELF-JOIN of that checkpoint on
-       (band, bucket) — both join sides scan the materialized keys,
-       not the signature lineage;
+     - the signature pipeline is computed once per corpus: the (doc,
+       band, bucket) key table is :func:`minhash_band_index_full`,
+       and candidate pairs come from a codegen'd hash SELF-JOIN of it
+       on (band, bucket) — both join sides scan the materialized
+       keys, not the signature lineage;
      - no aggregation buffer ever holds a whole bucket (round-2 used
        an in-bucket ``collect_list`` pair expansion — a degenerate
        band key from boilerplate/empty docs then had to fit one
@@ -169,45 +176,22 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
        docs (broadcast semi-join BEFORE the shingle expression), and
        the verify joins broadcast that small set.
     """
-    # shingles come from the shared doc_shingles artifact (round 9):
-    # the tokenize pass is paid once per corpus across the whole
-    # ngram family, not once per query
-    sh = doc_shingles(spark, sf_dir).select("doc_id", "shingles")
-    sig = _minhash_signatures(sh)
-
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1))).alias("band"),
-        F.col("sig"),
-    ).select(
-        "doc_id",
-        "band",
-        F.concat_ws(
-            "|",
-            F.transform(
-                F.slice(F.col("sig"), F.col("band") * MINHASH_ROWS + 1, MINHASH_ROWS),
-                lambda x: x.cast("string"),
-            ),
-        ).alias("bucket"),
-    )
-
-    # materialize the key table once; both self-join sides read it
-    keys = bands.localCheckpoint(eager=True)
-    ka = keys.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-    kb = keys.select("band", "bucket", F.col("doc_id").alias("doc_b"))
-    pairs = (
-        ka.join(kb, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    # the (doc, band, bucket) key table is the persisted, ingest-
+    # maintained band index, held in the session store: both
+    # self-join sides read it, and no call recomputes signatures
+    keys = minhash_band_index_full(spark, sf_dir)
+    ka = V.select(keys, "band", "bucket", "doc_id AS doc_a")
+    kb = V.select(keys, "band", "bucket", "doc_id AS doc_b")
+    pairs = V.select(
+        ka.join(kb, ["band", "bucket"]).filter("doc_a < doc_b"), "doc_a", "doc_b"
+    ).distinct()
     # tiny (band-collision pairs only) — truncate lineage so the
     # verify phase doesn't recompute the candidate join
     cands = pairs.localCheckpoint(eager=True)
 
     ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
+        V.select(cands, "doc_a AS doc_id")
+        .union(V.select(cands, "doc_b AS doc_id"))
         .distinct()
     )
     # verify-side shingles are RE-DERIVED for candidate docs only
@@ -216,23 +200,12 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 3.5x on the solo rerun)
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     cand_sh = _shingles(docs.join(F.broadcast(ids), "doc_id"))
-    sa = cand_sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = cand_sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = (
-        cands.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-    return verified
+    sa = V.select(cand_sh, "doc_id AS doc_a", "shingles AS sh_a")
+    sb = V.select(cand_sh, "doc_id AS doc_b", "shingles AS sh_b")
+    return V.select(
+        cands.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b"),
+        "doc_a", "doc_b", f"{_PAIR_JACCARD_SQL} AS jaccard",
+    ).filter(f"jaccard >= {JACCARD_THRESHOLD!r}D")
 
 
 # SimHash: 64-bit signature voted by word-3-shingles (unigram votes
@@ -408,23 +381,16 @@ def _blk_col():
     — one md5 per shingle, identical int64 arithmetic in Spark and
     DuckDB. Factored so the full build and the delta probe block on
     bit-identical keys."""
-    return F.array_min(
-        F.transform(
-            F.col("shingles"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-            % MINHASH_P,
-        )
+    return V.expr(
+        "array_min(transform(shingles, s -> "
+        f"CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P}))"
     )
 
 
 def _pair_jaccard():
     """Exact Jaccard of the sh_a/sh_b shingle arrays, 6dp — shared
     by the full build and both delta-probe legs."""
-    return F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")),
-        6,
-    )
+    return V.expr(_PAIR_JACCARD_SQL)
 
 
 def _ngram_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,7 +737,7 @@ def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
     # norms once per vector on the (small) broadcast side — the
     # per-pair verify then pays a single 64-element fold; same float
     # ops in the same order as the oracle's dot/(na*nb)
-    nrm = F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x))
+    nrm = V.norm("vec")
     cand_vecs = v.join(F.broadcast(ids), "vec_id").select(
         "vec_id", "vec", nrm.alias("nrm")
     )
@@ -783,9 +749,7 @@ def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
         F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    dot = V.dot("va", "vb")
     # Catalyst substitutes the cosine alias into the filter and pushes
     # it into the join condition — benign here (unlike the
     # CollapseProject pitfall at `_shingles`): the fold runs once per
@@ -848,7 +812,7 @@ def dedup_embedding_cosine(
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
     v = emb.select(
         "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
+        V.as_double("embedding").alias("vec"),
     )
     # Blocking stage (lsh_candidate_pairs): one dot pass — the probe
     # columns carry base bucket + flips and both join sides project
@@ -986,14 +950,9 @@ def _band_keys(sh: DataFrame) -> DataFrame:
     ).select(
         "doc_id",
         "band",
-        F.concat_ws(
-            "|",
-            F.transform(
-                F.slice(
-                    F.col("sig"), F.col("band") * MINHASH_ROWS + 1, MINHASH_ROWS
-                ),
-                lambda x: x.cast("string"),
-            ),
+        V.expr(
+            f"concat_ws('|', transform(slice(sig, band * {MINHASH_ROWS} + 1, "
+            f"{MINHASH_ROWS}), x -> CAST(x AS STRING)))"
         ).alias("bucket"),
     )
 
@@ -1076,15 +1035,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The corpus-side (band, bucket) keys come from the PERSISTED
     artifact index (:func:`minhash_band_index` — round 5; previously
-    recomputed per session), so only the delta pays signature
-    computation. Candidates come from an asymmetric equi-join of
-    batch keys against index keys — no corpus self-join, so
-    incremental cost is O(|delta| + collisions), never O(|corpus|²).
+    recomputed per session), and the new docs' keys are their rows
+    of the persisted :func:`minhash_band_index_full`, so no call
+    computes signatures. Candidates come from an asymmetric
+    equi-join of batch keys against index keys — no corpus
+    self-join, so incremental cost is O(|delta| + collisions),
+    never O(|corpus|²).
     Verify is exact Jaccard on candidates only, same as
     dedup_minhash."""
-    sh_all = doc_shingles(spark, sf_dir).select("doc_id", "shingles")
     is_new = F.col("doc_id") % INCR_MOD == 0
-    new_keys = _band_keys(sh_all.filter(is_new)).select(
+    new_keys = minhash_band_index_full(spark, sf_dir).filter(is_new).select(
         F.col("doc_id").alias("new_doc"), "band", "bucket"
     )
     corpus_keys = minhash_band_index(spark, sf_dir)
@@ -1960,6 +1920,16 @@ def text_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_TOKENS = 15  # ≈30% of the fixture's ~50-token docs; 50 at prod
 
 
+def _span_hashes():
+    """md5 of every SPAN_TOKENS-token span of the token array ``t``."""
+    k = SPAN_TOKENS
+    return V.expr(
+        f"CASE WHEN size(t) >= {k} THEN transform(sequence(1, size(t) - {k - 1}), "
+        f"i -> md5(concat_ws(' ', slice(t, i, {k})))) "
+        "ELSE CAST(array() AS array<string>) END"
+    )
+
+
 def _doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h) — one row per k-token span instance, h = md5 of
     the space-joined span. Whitespace tokenization; docs shorter
@@ -1970,15 +1940,7 @@ def _doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
     )
-    k = SPAN_TOKENS
-    hashes = F.when(
-        F.size("t") >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - F.lit(k - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, F.lit(k)))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select("doc_id", F.explode(hashes).alias("h"))
+    return toks.select("doc_id", F.explode(_span_hashes()).alias("h"))
 
 
 # Stage-artifact reuse (VERDICT r7 #10): the span explode + the
@@ -2071,15 +2033,7 @@ def _delta_doc_spans(delta_docs: DataFrame) -> DataFrame:
     toks = delta_docs.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("t")
     )
-    k = SPAN_TOKENS
-    hashes = F.when(
-        F.size("t") >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size("t") - F.lit(k - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, F.lit(k)))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select("doc_id", F.explode(hashes).alias("h"))
+    return toks.select("doc_id", F.explode(_span_hashes()).alias("h"))
 
 
 def _doc_span_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2603,10 +2557,8 @@ def cosine_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _standing_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, vec) of the standing corpus, the rows the index holds."""
-    from dbt_eamples_spark.operators.similarity import _as_double_vec
-
     return load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     ).filter(F.col("vec_id") % INCR_MOD != 0)
 
 
@@ -2672,15 +2624,12 @@ def cosine_base_index_apply_delta(
     wrong). Both paths are pytest-locked row-identical to a
     from-scratch build over the union."""
     from dbt_eamples_spark.artifacts import publish
-    from dbt_eamples_spark.operators.similarity import (
-        _as_double_vec,
-        lsh_planes,
-    )
+    from dbt_eamples_spark.operators.similarity import lsh_planes
 
     base_n = standing_count(spark, sf_dir)
     keyed = cosine_delta_keys(
         delta_embeddings.select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", V.as_double("embedding").alias("vec")
         ),
         lsh_planes(base_n),
     )
@@ -2733,14 +2682,11 @@ def dedup_incremental_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental cost O(|delta| + collisions), never corpus².
     Verify is the exact-cosine fold on candidates only, same
     threshold and float contract as dedup_embedding_cosine."""
-    from dbt_eamples_spark.operators.similarity import (
-        _as_double_vec,
-        lsh_planes,
-    )
+    from dbt_eamples_spark.operators.similarity import lsh_planes
 
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
+    ).select("vec_id", V.as_double("embedding").alias("vec"))
     np_ = lsh_planes(standing_count(spark, sf_dir))  # index-build param
     delta = emb.filter(F.col("vec_id") % INCR_MOD == 0)
     return _cosine_delta_vs_base(spark, sf_dir, cosine_delta_keys(delta, np_))
@@ -2761,13 +2707,12 @@ def _cosine_delta_vs_base(
     dedup_incremental_cosine is unchanged."""
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
-        _as_double_vec,
         probe_key_pairs,
     )
 
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
+    ).select("vec_id", V.as_double("embedding").alias("vec"))
     probe = keyed.select(
         F.col("vec_id").alias("new_vec"),
         F.explode(probe_key_pairs(DEDUP_LSH_TABLES)).alias("tb"),
@@ -2779,9 +2724,7 @@ def _cosine_delta_vs_base(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nrm = F.sqrt(
-        F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    nrm = V.norm("vec")
     # a-side vectors from the DELTA frame (for an ingest batch they
     # are not in the table yet); b-side from the table — same rows /
     # same float fold either way for the convention delta
@@ -2803,11 +2746,7 @@ def _cosine_delta_vs_base(
         F.col("vec").alias("vb"),
         nrm.alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = V.dot("va", "vb")
     return (
         cands.join(F.broadcast(a), "new_vec")
         .join(F.broadcast(b), "corpus_vec")
@@ -2838,13 +2777,10 @@ def cosine_pairs_delta_new(
     the separate :func:`cosine_pairs_delta_within` leg (different
     schema: both sides new). Same new-ids-only contract (and
     ValueError guard) as :func:`ngram_pairs_apply_delta`."""
-    from dbt_eamples_spark.operators.similarity import (
-        _as_double_vec,
-        lsh_planes,
-    )
+    from dbt_eamples_spark.operators.similarity import lsh_planes
 
     d = delta_embeddings.select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     if not assume_new_ids:
         overlap = (
@@ -2876,10 +2812,8 @@ def cosine_pairs_delta_within(
     exact-cosine verify. Output (vec_a, vec_b, cosine), vec_a <
     vec_b. Cost is batch-sized (plane dots) + collision-bounded
     (verify), never corpus-touching."""
-    from dbt_eamples_spark.operators.similarity import _as_double_vec
-
     v = delta_embeddings.select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     return _cosine_delta_within(
         cosine_delta_keys(v, nplanes).localCheckpoint(eager=True)

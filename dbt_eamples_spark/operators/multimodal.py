@@ -25,7 +25,6 @@ Python stage.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd

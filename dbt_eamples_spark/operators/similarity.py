@@ -19,9 +19,11 @@ Two tiers, mirroring how a production pipeline scales:
    distributed means order-independent and bit-identical to the
    DuckDB oracle's sequential ones.
 
-All arithmetic is higher-order array functions (zip_with/aggregate)
-— strict left folds, JVM-side, which both stays in codegen and makes
-results bit-reproducible against the DuckDB oracle.
+All vector arithmetic comes from the SQL-text kernels of
+:mod:`dbt_eamples_spark.operators.vecsql` — higher-order array
+functions (zip_with/aggregate) parsed once, strict left folds,
+JVM-side, which both stays in codegen and makes results
+bit-reproducible against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 N_QUERIES = 10  # query set: vec_id < 10
 TOP_K = 5
@@ -43,40 +46,19 @@ NPROBE = 3
 KMEANS_ITERS = 2  # Lloyd rounds for IVF centroid training
 
 
-def _as_double_vec(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-from functools import lru_cache as _lru_cache  # noqa: E402
-
-
-@_lru_cache(maxsize=None)
-def _dlit_array(vals: tuple):
-    """Literal double array as ONE parsed expression. Building it as
-    ``F.array(*[F.lit(x) ...])`` costs len(vals) py4j round-trips —
-    at 64-dim planes/codebooks that was ~2.3 s of pure driver-side
-    query CONSTRUCTION per LSH call (the r3→r4 lsh_topk bench
-    regression's real cause; execution was flat). The ``D``-suffixed
-    SQL double literal parses to the bit-identical IEEE value as
-    ``F.lit`` (round-trip repr), and the Column is immutable so the
-    cache makes repeat builds free."""
-    return F.expr(
-        "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
+def _local_top(k: int):
+    """Aggregate: the k best (cosine, neighbor_id) structs of a group
+    as ``top``, descending cosine, ascending neighbor_id on ties. The
+    comparator is explicit (not a sort on -cosine) so NaN ranks as
+    Spark's comparison operators rank it."""
+    return V.expr(
+        "slice(array_sort(collect_list(struct(cosine, neighbor_id)), "
+        "(a, b) -> CASE WHEN a.cosine > b.cosine THEN -1 "
+        "WHEN a.cosine < b.cosine THEN 1 "
+        "WHEN a.neighbor_id < b.neighbor_id THEN -1 "
+        "WHEN a.neighbor_id > b.neighbor_id THEN 1 ELSE 0 END), "
+        f"1, {k}) AS top"
     )
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def _cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -89,52 +71,45 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     single window (ties fully broken by neighbor_id) but avoids
     funneling |Q|·N scored rows into |Q| window tasks at scale.
     """
-    local = (
-        scored.withColumn("_pid", F.spark_partition_id())
+    tops = V.select(
+        V.select(scored, "*", "spark_partition_id() AS _pid")
         .groupBy("query_id", "_pid")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("cosine"), F.col("neighbor_id"))),
-                    # descending cosine, ascending neighbor_id on ties
-                    lambda a, b: F.when(a.cosine > b.cosine, -1)
-                    .when(a.cosine < b.cosine, 1)
-                    .when(a.neighbor_id < b.neighbor_id, -1)
-                    .when(a.neighbor_id > b.neighbor_id, 1)
-                    .otherwise(0),
-                ),
-                1,
-                k,
-            ).alias("top")
-        )
-        .select("query_id", F.explode_outer("top").alias("t"))
-        .select("query_id", F.col("t.neighbor_id").alias("neighbor_id"),
-                F.col("t.cosine").alias("cosine"))
+        .agg(_local_top(k)),
+        "query_id", "explode_outer(top) AS t",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    local = V.select(
+        tops, "query_id", "t.neighbor_id AS neighbor_id", "t.cosine AS cosine"
     )
+    ranked = V.select(
+        local,
+        "*",
+        "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY cosine DESC, neighbor_id ASC) AS rk",
+    )
+    return ranked.filter(f"rk <= {k}")
 
 
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: for each query vector (vec_id <
     N_QUERIES), the TOP_K nearest other vectors."""
-    emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+    # each vector's norm once per row, not once per scored pair: a
+    # pair then pays one dot fold, and dot / (qn * vn) is the same
+    # IEEE operation sequence as the per-pair cosine
+    emb = V.select(
+        V.select(
+            load_table(spark, sf_dir, "embeddings", parallelize=True),
+            "vec_id", f"{V.as_double_sql('embedding')} AS vec",
+        ),
+        "vec_id", "vec", f"{V.norm_sql('vec')} AS vn",
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    q = V.select(
+        emb.filter(f"vec_id < {N_QUERIES}"),
+        "vec_id AS query_id", "vec AS qvec", "vn AS qn",
     )
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
-        )
+    scored = V.select(
+        emb.join(F.broadcast(q), V.expr("vec_id != query_id")),
+        "query_id", "vec_id AS neighbor_id",
+        f"round({V.dot_sql('qvec', 'vec')} / (qn * vn), 6) AS cosine",
     )
     return _topk(scored, TOP_K)
 
@@ -169,7 +144,7 @@ def _kmeans_centroids(emb: DataFrame, ncells: int = NCENTROIDS) -> DataFrame:
                 "vec_id",
                 "vec",
                 "cent_id",
-                _cosine(F.col("vec"), F.col("cvec")).alias("cos"),
+                V.cosine("vec", "cvec").alias("cos"),
             )
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
@@ -189,12 +164,7 @@ def _kmeans_centroids(emb: DataFrame, ncells: int = NCENTROIDS) -> DataFrame:
             )
             .select("cent_id", "pos", mean.alias("m"))
             .groupBy("cent_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m,
-                ).alias("cvec")
-            )
+            .agg(V.ordered_values("pos", "m").alias("cvec"))
             .localCheckpoint(eager=True)
         )
     return cent
@@ -242,72 +212,27 @@ def _nearest_cells(vec_col, cents: list, n: int, with_cvec: bool = False):
     ranks by the identical total order the window used — negating a
     double reverses Spark's total order exactly (±0.0 included; the
     r14 MMR argument), cent_id breaks ties, and the cosine fold vs a
-    ``_dlit_array`` literal is bit-identical to the fold vs the
-    broadcast centroid row. Plan-size note: each centroid adds one
-    64-double literal + one cosine fold, fine for ≤ a few hundred
-    cells; a production ncells past that keeps the broadcast-join
-    form (the 33 MB broadcast ceiling documented at ivf_cells).
+    literal centroid array is bit-identical to the fold vs the
+    broadcast centroid row; each centroid norm is folded
+    driver-side with the identical left fold
+    (:func:`vecsql.nearest_cells`), so the row expression does not
+    re-fold it per row.
 
-    Two per-row cost notes, measured on the first cut of this
-    rewrite (in-run 1.25–1.42× REGRESSIONS before these fixes):
-    (a) the centroid-literal norm is an unfoldable HOF aggregate, so
-    Spark re-folded each centroid's 64-term norm per row — it is
-    precomputed here in Python with the IDENTICAL left fold
-    (acc + x*x over IEEE doubles, correctly-rounded sqrt), so the
-    runtime expression multiplies by a bit-identical literal;
-    (b) consumers MUST route this expression through a Generate
+    Plan-size note: each centroid adds one 64-double literal and one
+    cosine fold, and there is no bounded switch to another form —
+    every ncells takes this path. Construction grows with the cell
+    count: 0.53 / 1.41 / 4.04 s at 8 / 64 / 256 cells (2,000
+    vectors, ``local[4]``), against 0.87 / 1.61 / 4.51 s of execution.
+    The guard is open (ROADMAP item 7).
+
+    Consumers MUST route this expression through a Generate
     (explode/inline), never element_at — an inner-join key built
     from it otherwise gets an `isnotnull(<whole argmin>)` filter
     pushed into the scan, evaluating the expression twice per row
-    (the guide §4.4 duplication, expression flavor);
-    (c) the Column is built as ONE cached SQL-text parse, not
-    nested HOF builders — the _dot_plane_sql lesson: the py4j
-    lambda machinery cost ~0.4 s of driver-side query CONSTRUCTION
-    per call (measured: construct+analyze 0.79 s of ivf_topk's
-    0.82 s planning), which min-of-3 cannot amortize because every
-    run re-plans."""
+    (the guide §4.4 duplication, expression flavor)."""
     if not isinstance(vec_col, str):
         raise TypeError("_nearest_cells takes a column NAME")
-    key = (
-        vec_col,
-        tuple((cid, tuple(cv)) for cid, cv in cents),
-        n,
-        with_cvec,
-    )
-    return _nearest_cells_expr(key)
-
-
-@_lru_cache(maxsize=None)
-def _nearest_cells_expr(key: tuple):
-    import math
-
-    vec, cents, n, with_cvec = key
-    structs = []
-    for cid, cv in cents:
-        acc = 0.0
-        for x in cv:
-            acc += x * x  # the exact _norm left fold, driver-side
-        arr_sql = "array(" + ", ".join(f"{v!r}D" for v in cv) + ")"
-        dot = (
-            f"aggregate(zip_with({vec}, {arr_sql}, (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-        nrm_v = f"sqrt(aggregate({vec}, 0.0D, (acc, x) -> acc + x * x))"
-        nc = f"-({dot} / ({nrm_v} * {math.sqrt(acc)!r}D))"
-        fields = f"'nc', {nc}, 'cent_id', CAST({cid} AS BIGINT)"
-        if with_cvec:
-            fields += f", 'cv', {arr_sql}"
-        structs.append(f"named_struct({fields})")
-    arr = "array_sort(array(" + ", ".join(structs) + "))"
-    sliced = f"slice({arr}, 1, {n})" if n < len(cents) else arr
-    if with_cvec:
-        body = (
-            f"transform({sliced}, s -> named_struct("
-            f"'cent_id', s.cent_id, 'cv', s.cv))"
-        )
-    else:
-        body = f"transform({sliced}, s -> s.cent_id)"
-    return F.expr(body)
+    return V.nearest_cells(vec_col, cents, n, with_cvec)
 
 
 def similarity_ivf_topk(
@@ -325,7 +250,7 @@ def similarity_ivf_topk(
     oracle); production sizes it with :func:`ivf_cells` (√n rule).
     """
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     # nearest-centroid assignment for every vector: a NARROW literal
     # argmin (r15, guide §2.4 — the old cross-join + row_number
@@ -360,7 +285,7 @@ def similarity_ivf_topk(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
+            F.round(V.cosine("qvec", "vec"), 6).alias("cosine"),
         )
     )
     return _topk(scored, TOP_K)
@@ -614,46 +539,17 @@ LSH_PLANE_WEIGHTS = [
 ]
 
 
-@_lru_cache(maxsize=None)
-def _plane_arr_sql(t: int, p: int) -> str:
-    return "array(" + ", ".join(f"{v!r}D" for v in _plane(t, p)) + ")"
-
-
 def _dot_plane_sql(vec: str, t: int, p: int) -> str:
-    """The _dot fold against plane (t, p) as SQL text — parses to
-    the identical ArrayAggregate/ZipWith tree as the HOF builders,
-    but in ONE py4j call instead of ~8 per lambda (the lambda
-    machinery was most of the residual driver-side build time)."""
-    return (
-        f"aggregate(zip_with({vec}, {_plane_arr_sql(t, p)}, "
-        f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
+    """The dot fold of ``vec`` against plane (t, p), as SQL text."""
+    return V.dot_sql(vec, V.darray_sql(_plane(t, p)))
 
 
-def _lsh_bucket(vec_col, t: int, nplanes: int = LSH_PLANES):
+def _lsh_bucket(vec_col: str, t: int, nplanes: int = LSH_PLANES):
     """Bucket id for hash table t: integer of ``nplanes`` sign bits
     of the vector's dot products with the table's planes. The plane
     arrays are literals, so each dot is one zip_with/aggregate over
-    a constant — no joins, no per-row hashing. Pass the vector as a
-    column NAME to build the whole bucket as one parsed expression
-    (the fast path; a Column operand falls back to the HOF build)."""
-    if isinstance(vec_col, str):
-        bits = " + ".join(
-            f"(CASE WHEN {_dot_plane_sql(vec_col, t, p)} >= 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-            for p in range(nplanes)
-        )
-        return F.expr(f"(0 + {bits})")
-    bucket = F.lit(0)
-    for p in range(nplanes):
-        w = _plane_lit(t, p)
-        bit = F.when(_dot(vec_col, w) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
-
-
-def _plane_lit(t: int, p: int):
-    return _dlit_array(_plane(t, p))
+    a constant — no joins, no per-row hashing."""
+    return V.plane_sign_bits(vec_col, [_plane(t, p) for p in range(nplanes)])
 
 
 def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
@@ -672,7 +568,7 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
     dots = df.select(
         "*",
         *[
-            F.expr(_dot_plane_sql(vec_col, t, p)).alias(f"_d{t}_{p}")
+            V.expr(_dot_plane_sql(vec_col, t, p)).alias(f"_d{t}_{p}")
             for t in range(tables)
             for p in range(nplanes)
         ],
@@ -695,7 +591,7 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
             f"named_struct('m', abs(_d{t}_{p}), 'p', {p})"
             for p in range(nplanes)
         )
-        return F.expr(
+        return V.expr(
             f"concat(array({base}), transform("
             f"slice(array_sort(array({structs})), 1, {flips}), "
             f"s -> {base} ^ shiftleft(1, s.p)))"
@@ -712,7 +608,7 @@ def probe_key_pairs(tables: int, prefix: str = "p"):
     table id binds eagerly."""
 
     def _tagged(t: int):
-        return F.expr(
+        return V.expr(
             f"transform({prefix}{t}, "
             f"b -> named_struct('t', {t}, 'bucket', b))"
         )
@@ -749,7 +645,7 @@ def similarity_lsh_topk(
     """
     np_ = nplanes or LSH_PLANES
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     with_buckets = emb.select(
         "vec_id",
@@ -807,7 +703,7 @@ def similarity_lsh_topk(
     ).select(
         "q.query_id",
         F.col("c.vec_id").alias("neighbor_id"),
-        F.round(_cosine(F.col("q.qvec"), F.col("c.vec")), 6).alias("cosine"),
+        F.round(V.cosine("q.qvec", "c.vec"), 6).alias("cosine"),
     )
     scored = cands.dropDuplicates(["query_id", "neighbor_id"])
     return _topk(scored, TOP_K)
@@ -830,38 +726,30 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-element lambdas (the O(d²) trap). Narrow map, zero
     shuffles — at 100 TB this runs at scan speed."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vecd = emb.select("vec_id", _as_double_vec("embedding").alias("v"))
+    vecd = emb.select("vec_id", V.as_double("embedding").alias("v"))
     scaled = vecd.select(
         "vec_id",
         "v",
-        (
-            F.greatest(
-                F.array_max(F.transform("v", lambda x: F.abs(x))),
-                F.lit(1e-30),
-            )
-            / F.lit(127.0)
+        V.expr(
+            "greatest(array_max(transform(v, x -> abs(x))), 1e-30D) / 127.0D"
         ).alias("scale"),
     )
-    s = F.col("scale")
-    err_elem = lambda x: (  # noqa: E731 — reconstruction residual per dim
-        F.round(
-            (x - F.round(x / s) * s) * (x - F.round(x / s) * s) * F.lit(1e12)
-        ).cast("long")
+    # per dim: the quantized value, and the reconstruction residual
+    q_sum = V.expr(
+        "aggregate(transform(v, x -> CAST(round(x / scale) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
+    err_fp = V.expr(
+        "aggregate(transform(v, x -> CAST(round("
+        "(x - round(x / scale) * scale) * (x - round(x / scale) * scale)"
+        " * 1.0E12D) AS BIGINT)), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
     return scaled.select(
         "vec_id",
         F.size("v").alias("n_dims"),
-        F.round(s, 9).alias("scale_r9"),
-        F.aggregate(
-            F.transform("v", lambda x: F.round(x / s).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("q_sum"),
-        F.aggregate(
-            F.transform("v", err_elem),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("err_fp"),
+        F.round("scale", 9).alias("scale_r9"),
+        q_sum.alias("q_sum"),
+        err_fp.alias("err_fp"),
     )
 
 
@@ -902,11 +790,9 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     and nothing about it depends on corpus statistics (no fit pass,
     unlike PCA — which is the point at this scale)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
+    v = emb.select("vec_id", V.as_double("embedding").alias("vec"))
     proj_cols = [
-        _dot(
-            F.col("vec"), _dlit_array(tuple(RP_WEIGHTS[j]))
-        ).alias(f"c{j}")
+        V.dot("vec", V.darray_sql(tuple(RP_WEIGHTS[j]))).alias(f"c{j}")
         for j in range(RP_TARGET_DIM)
     ]
     p = v.select("vec_id", "vec", *proj_cols)
@@ -917,9 +803,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         checksum = term if checksum is None else checksum + term
         s = F.col(f"c{j}") * F.col(f"c{j}")
         sq = s if sq is None else sq + s
-    in_norm = F.sqrt(
-        F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    in_norm = V.norm("vec")
     return p.select(
         "vec_id",
         F.lit(RP_TARGET_DIM).alias("n_dims_out"),
@@ -972,24 +856,15 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree in both engines, so code assignments match
     bit-exactly."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
 
-    def _best(s: int):
-        sub = F.slice(F.col("vec"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-        cands = []
-        for k in range(PQ_CODES):
-            code = _dlit_array(tuple(PQ_CODEBOOK[s][k]))
-            d2 = F.aggregate(
-                F.zip_with(sub, code, lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            cands.append(F.struct(d2.alias("d"), F.lit(k).alias("k")))
-        return F.array_sort(F.array(*cands))[0]
-
+    bk = _books_key(
+        [{k: PQ_CODEBOOK[s][k] for k in range(PQ_CODES)} for s in range(PQ_SUBVECTORS)]
+    )
     staged = emb.select(
-        "vec_id", *[_best(s).alias(f"b{s}") for s in range(PQ_SUBVECTORS)]
+        "vec_id",
+        *[_pq_best_sql("vec", s, bk).alias(f"b{s}") for s in range(PQ_SUBVECTORS)],
     )
     err = sum(
         F.floor(F.col(f"b{s}.d") * 1_000_000.0).cast("long")
@@ -1072,7 +947,7 @@ def similarity_pq_topk(
     :func:`similarity_pq_rerank_topk`). With rerank the output
     schema swaps adc_dist for the exact ``cosine``."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
@@ -1120,7 +995,7 @@ def _adc_ranked(
     (exact rk ≤ shortlist after). Split out of similarity_pq_topk
     unchanged (same expressions, same order; the dense distance
     tables — position k+1 = code k's distance, inf holes for died
-    clusters — are cached SQL-text parses, see _l2sq_lit_sql)."""
+    clusters — are cached SQL-text parses, see _pq_dtable_sql)."""
     bk = _books_key(books)
     qd = q.select(
         "query_id",
@@ -1180,7 +1055,7 @@ def _pq_refine(short: DataFrame, q: DataFrame, emb: DataFrame) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_cosine(F.col("qvec"), F.col("nvec")), 6).alias("cosine"),
+            F.round(V.cosine("qvec", "nvec"), 6).alias("cosine"),
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(
@@ -1209,7 +1084,7 @@ def _adc_ranked_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", *[f"code_{s}" for s in range(PQ_SUBVECTORS)]
         )
         emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", V.as_double("embedding").alias("vec")
         )
         q = emb.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
@@ -1233,17 +1108,9 @@ PQ_TRAIN_ITERS = 2
 PQ_RERANK = 50
 
 
-def _l2sq(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _books_key(books) -> tuple:
     """Hashable view of a codebook list (per subspace: sorted
-    (k, values) pairs) for the lru-cached SQL-text builders."""
+    (k, values) pairs) for the SQL-text builders."""
     out = []
     for book in books:
         items = book.items() if isinstance(book, dict) else book
@@ -1251,32 +1118,17 @@ def _books_key(books) -> tuple:
     return tuple(out)
 
 
-def _l2sq_lit_sql(vec_slice_sql: str, code: tuple) -> str:
-    """The _l2sq fold against a literal code as SQL text — identical
-    parsed tree, ONE py4j call (the _dot_plane_sql lesson: the HOF
-    lambda builders cost ~8 py4j round-trips each, and the PQ paths
-    build 4×PQ_CODES of these per invocation — measured as the
-    dominant share of their per-run planning time)."""
-    arr = "array(" + ", ".join(f"{v!r}D" for v in code) + ")"
-    return (
-        f"aggregate(zip_with({vec_slice_sql}, {arr}, "
-        f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-@_lru_cache(maxsize=None)
 def _pq_best_sql(vec: str, s: int, books_key: tuple):
     """array_sort(array(struct(d, k), ...))[0] for subspace s — the
     encode argmin as one cached parsed expression."""
     sub = f"slice({vec}, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
     structs = ", ".join(
-        f"named_struct('d', {_l2sq_lit_sql(sub, cv)}, 'k', {k})"
+        f"named_struct('d', {V.l2sq_sql(sub, V.darray_sql(tuple(cv)))}, 'k', {k})"
         for k, cv in books_key[s]
     )
-    return F.expr(f"array_sort(array({structs}))[0]")
+    return V.expr(f"array_sort(array({structs}))[0]")
 
 
-@_lru_cache(maxsize=None)
 def _pq_dtable_sql(vec: str, s: int, books_key: tuple):
     """The per-query ADC distance table for subspace s (dense array,
     position k+1 = code k's distance, inf holes for died clusters)
@@ -1284,12 +1136,12 @@ def _pq_dtable_sql(vec: str, s: int, books_key: tuple):
     sub = f"slice({vec}, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
     present = dict(books_key[s])
     ds = [
-        _l2sq_lit_sql(sub, present[k])
+        V.l2sq_sql(sub, V.darray_sql(tuple(present[k])))
         if k in present
         else "double('Infinity')"
         for k in range(PQ_CODES)
     ]
-    return F.expr("array(" + ", ".join(ds) + ")")
+    return V.expr("array(" + ", ".join(ds) + ")")
 
 
 def _pq_train_codebooks(
@@ -1344,7 +1196,7 @@ def _pq_train_books(
     """The actual Lloyd training pass (docstring above) — called
     only on artifact miss."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     return _pq_train_books_from(emb)
 
@@ -1370,7 +1222,7 @@ def _pq_train_books_from(
                 sub.join(F.broadcast(cent), how="cross")
                 .select(
                     "vec_id", "sv", "k",
-                    _l2sq(F.col("sv"), F.col("cvec")).alias("d2"),
+                    V.l2sq("sv", "cvec").alias("d2"),
                 )
                 .withColumn("rk", F.row_number().over(w))
                 .filter(F.col("rk") == 1)
@@ -1388,12 +1240,7 @@ def _pq_train_books_from(
                 )
                 .select("k", "pos", mean.alias("m"))
                 .groupBy("k")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda t: t.m,
-                    ).alias("cvec")
-                )
+                .agg(V.ordered_values("pos", "m").alias("cvec"))
                 .localCheckpoint(eager=True)
             )
         rows = {r["k"]: list(r["cvec"]) for r in cent.collect()}
@@ -1415,7 +1262,7 @@ def embedding_pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit."""
     books = _pq_train_codebooks(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     bk = _books_key(books)
     # inline() routes the four argmin structs through ONE Generate so
@@ -1480,7 +1327,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus); ADC is lookups+adds on the coded table; only the
     shortlist pays full-width float math."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     # narrow literal argmin/arg-top-NPROBE instead of the cross-join
     # + window shape (r15, guide §2.4; identity argument at
@@ -1547,7 +1394,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_cosine(F.col("qvec"), F.col("nvec")), 6).alias("cosine"),
+            F.round(V.cosine("qvec", "nvec"), 6).alias("cosine"),
         )
     )
     w_final = Window.partitionBy("query_id").orderBy(
@@ -1601,7 +1448,7 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
     keeps the centroid VECTOR because the residual is
     vec − centroid(cell)."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     _, cents = _ivf_cells(spark, sf_dir, emb)
     # narrow literal argmin carrying the winning centroid VECTOR
@@ -1618,7 +1465,7 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
     residuals = assigned.select(
         "vec_id",
         "bucket",
-        F.zip_with("vec", "cvec", lambda x, c: x - c).alias("vec"),
+        V.sub("vec", "cvec").alias("vec"),
     )
     return emb, cents, assigned, residuals
 
@@ -1684,9 +1531,7 @@ def similarity_ivf_pq_residual_topk(
     ).select(
         "query_id",
         F.col("pc.cent_id").alias("bucket"),
-        F.zip_with(
-            "qvec", F.col("pc.cv"), lambda x, c: x - c
-        ).alias("qres"),
+        V.sub("qvec", "pc.cv").alias("qres"),
     )
 
     bk = _books_key(books)
@@ -1728,7 +1573,7 @@ def similarity_ivf_pq_residual_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(_cosine(F.col("qvec"), F.col("nvec")), 6).alias("cosine"),
+            F.round(V.cosine("qvec", "nvec"), 6).alias("cosine"),
         )
     )
     w_final = Window.partitionBy("query_id").orderBy(
@@ -1766,7 +1611,7 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table(spark, sf_dir, "embeddings", parallelize=True)
         .filter(F.col("vec_id") < KNN_GRAPH_N)
-        .select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
+        .select("vec_id", V.as_double("embedding").alias("vec"))
     )
     left = emb.select(F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"))
     scored = emb.join(
@@ -1774,7 +1619,7 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
+        F.round(V.cosine("qvec", "vec"), 6).alias("cosine"),
     )
     directed = (
         _topk(scored, KNN_GRAPH_K)
@@ -1832,7 +1677,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist at 100 TB; the MMR stage is shortlist-bounded either
     way."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
@@ -1842,7 +1687,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
+        F.round(V.cosine("qvec", "vec"), 6).alias("cosine"),
     )
     sl = (
         _topk(scored, MMR_SHORTLIST)
@@ -1868,7 +1713,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "a",
             "b",
-            F.round(_cosine(F.col("vec"), F.col("bvec")), 6).alias("sim"),
+            F.round(V.cosine("vec", "bvec"), 6).alias("sim"),
         )
     )
     # r14: the K-1 selection rounds ran as separate checkpointed
@@ -1909,73 +1754,44 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def _step(acc, i):
-        open_c = F.filter(
-            F.col("cands"),
-            lambda c: ~F.array_contains(acc["sel"], c["neighbor_id"]),
+    def max_sim(a: str, sel: str) -> str:
+        """max sim of candidate ``a`` against the selected ids ``sel``."""
+        return (
+            "array_max(transform(filter(sims, s -> s.a = "
+            f"{a} AND array_contains({sel}, s.b)), s -> s.sim))"
         )
-        scored_c = F.transform(
-            open_c,
-            lambda c: F.struct(
-                (
-                    -(
-                        F.lit(0.5) * c["rel"]
-                        - F.lit(0.5)
-                        * F.array_max(
-                            F.transform(
-                                F.filter(
-                                    F.col("sims"),
-                                    lambda s: (s["a"] == c["neighbor_id"])
-                                    & F.array_contains(acc["sel"], s["b"]),
-                                ),
-                                lambda s: s["sim"],
-                            )
-                        )
-                    )
-                ).alias("neg_score"),
-                c["neighbor_id"].alias("neighbor_id"),
-                c["rel"].alias("rel"),
-            ),
-        )
-        best = F.array_min(scored_c)
-        # the accumulator carries (rank, id, rel, score, sel-at-pick):
-        # score = -neg_score is the identical double negated back;
-        # ms is re-derived at emit time from sel_at so the argmax
-        # state stays narrow
-        new_sel = F.concat(acc["sel"], F.array(best["neighbor_id"]))
-        new_out = F.concat(
-            acc["out"],
-            F.array(
-                F.struct(
-                    i.cast("int").alias("rank"),
-                    best["neighbor_id"].alias("neighbor_id"),
-                    best["rel"].alias("rel"),
-                    (-best["neg_score"]).alias("score"),
-                    acc["sel"].alias("sel_at"),
-                )
-            ),
-        )
-        return F.when(
-            F.size(open_c) > 0,
-            F.struct(new_sel.alias("sel"), new_out.alias("out")),
-        ).otherwise(acc)
 
-    first = F.element_at(F.col("cands"), 1)
-    acc0 = F.struct(
-        F.array(first["neighbor_id"]).alias("sel"),
-        F.array()
-        .cast(
-            "array<struct<rank:int,neighbor_id:bigint,rel:double,"
-            "score:double,sel_at:array<bigint>>>"
-        )
-        .alias("out"),
+    # one selection step: among the open candidates, the argmin of
+    # the negated-score struct. The accumulator carries (rank, id,
+    # rel, score, sel-at-pick): score = -neg_score is the identical
+    # double negated back; ms is re-derived at emit time from sel_at
+    # so the argmax state stays narrow
+    open_c = "filter(cands, c -> NOT array_contains(acc.sel, c.neighbor_id))"
+    best = (
+        f"array_min(transform({open_c}, c -> named_struct('neg_score', "
+        f"-(0.5D * c.rel - 0.5D * {max_sim('c.neighbor_id', 'acc.sel')}), "
+        "'neighbor_id', c.neighbor_id, 'rel', c.rel)))"
     )
+    step = (
+        f"CASE WHEN size({open_c}) > 0 THEN named_struct("
+        f"'sel', concat(acc.sel, array({best}.neighbor_id)), "
+        "'out', concat(acc.out, array(named_struct("
+        f"'rank', CAST(i AS INT), 'neighbor_id', {best}.neighbor_id, "
+        f"'rel', {best}.rel, 'score', -({best}.neg_score), "
+        "'sel_at', acc.sel)))) ELSE acc END"
+    )
+    acc0 = (
+        "named_struct('sel', array(element_at(cands, 1).neighbor_id), "
+        "'out', CAST(array() AS array<struct<rank:int,neighbor_id:bigint,"
+        "rel:double,score:double,sel_at:array<bigint>>>))"
+    )
+    first = F.element_at(F.col("cands"), 1)
     prog = packed.select(
         "query_id",
         "cands",
         "sims",
-        F.aggregate(
-            F.sequence(F.lit(2), F.lit(MMR_K)), acc0, _step
+        V.expr(
+            f"aggregate(sequence(2, {MMR_K}), {acc0}, (acc, i) -> {step})"
         ).alias("fin"),
     )
     rank1 = prog.select(
@@ -1993,16 +1809,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o.rank").alias("rank"),
         F.col("o.neighbor_id").alias("neighbor_id"),
         F.col("o.rel").alias("rel"),
-        F.array_max(
-            F.transform(
-                F.filter(
-                    F.col("sims"),
-                    lambda s: (s["a"] == F.col("o.neighbor_id"))
-                    & F.array_contains(F.col("o.sel_at"), s["b"]),
-                ),
-                lambda s: s["sim"],
-            )
-        ).alias("max_sim_selected"),
+        V.expr(max_sim("o.neighbor_id", "o.sel_at")).alias("max_sim_selected"),
         F.round(F.col("o.score"), 6).alias("mmr_score"),
     )
     return rank1.unionByName(rest)
@@ -2032,7 +1839,7 @@ def similarity_hard_negatives(
     similarity_topk two-phase argument). Swap in the IVFPQ shortlist
     at 100 TB, as with MMR."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", "label", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", "label", V.as_double("embedding").alias("vec")
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -2046,7 +1853,7 @@ def similarity_hard_negatives(
         "qlabel",
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neighbor_label"),
-        F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
+        F.round(V.cosine("qvec", "vec"), 6).alias("cosine"),
     ).localCheckpoint(eager=True)
     negs = _topk(
         scored.filter(F.col("neighbor_label") != F.col("qlabel")).select(
@@ -2108,7 +1915,7 @@ def embedding_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg. Corpus touched twice (mean + assign) — the same two passes
     any centroid classifier needs."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", "label", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", "label", V.as_double("embedding").alias("vec")
     )
     dims = emb.select("label", F.posexplode("vec").alias("pos", "x"))
     mean = (F.col("sx").cast("double") / F.col("n")) / F.lit(1_000_000.0)
@@ -2122,12 +1929,7 @@ def embedding_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("label", "pos", mean.alias("m"))
         .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m,
-            ).alias("cvec")
-        )
+        .agg(V.ordered_values("pos", "m").alias("cvec"))
         .select(F.col("label").alias("cent_label"), "cvec")
     )
     w = Window.partitionBy("vec_id").orderBy(
@@ -2139,7 +1941,7 @@ def embedding_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "cent_label",
-            _cosine(F.col("vec"), F.col("cvec")).alias("cos"),
+            V.cosine("vec", "cvec").alias("cos"),
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
@@ -2191,14 +1993,14 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     center) — bounded model state. Reference analogue: none —
     extension surface."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     seed = emb.orderBy("vec_id").limit(1).collect()[0]
     chosen = [(0, int(seed["vec_id"]), None)]
 
     def dist_to(center_vec):
-        lit = _dlit_array(tuple(center_vec))
-        return F.round(F.lit(1.0) - _cosine(F.col("vec"), lit), 6)
+        cos = V.cosine("vec", V.darray_sql(tuple(center_vec)))
+        return F.round(F.lit(1.0) - cos, 6)
 
     # eager localCheckpoint per round: it beat an in-memory persist
     # (the columnar cache re-(de)serializes the 64-double vec array
@@ -2238,7 +2040,7 @@ def _dim_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
-        F.posexplode(_as_double_vec(F.col("embedding"))).alias(
+        F.posexplode(V.as_double("embedding")).alias(
             "dim", "x"
         ),
     ).select(
@@ -2444,38 +2246,40 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact median's per-group sort rides the same exchange. Scan
     speed + one tiny shuffle at any corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q2 = F.aggregate(
-        F.transform(
-            _as_double_vec(F.col("embedding")),
-            lambda x: F.round(x * DIM_Q_SCALE).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, q: acc + q * q,
+    # the quantized squared norm, an exact in-row int64 fold
+    q2 = (
+        f"aggregate(transform({V.as_double_sql('embedding')}, "
+        f"x -> CAST(round(x * {DIM_Q_SCALE}) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, q) -> acc + q * q)"
     )
-    qn = F.round(F.sqrt(q2.cast("double"))).cast("long")
-    base = emb.select("label", qn.alias("qn"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    v = F.col("qn")
+    base = V.select(
+        emb, "label", f"CAST(round(sqrt(CAST({q2} AS DOUBLE))) AS BIGINT) AS qn"
+    )
+    dec = "CAST(qn AS DECIMAL(38,0))"
     agg = base.groupBy("label").agg(
-        F.count("*").cast("long").alias("n_vecs"),
-        F.sum(dec(v)).alias("s"),
-        F.sum(dec(v) * dec(v)).alias("ss"),
-        F.min("qn").alias("qmin"),
-        F.max("qn").alias("qmax"),
-        F.percentile("qn", F.lit(0.5)).alias("qmed"),
+        *map(
+            V.expr,
+            [
+                "CAST(count(*) AS BIGINT) AS n_vecs",
+                f"sum({dec}) AS s",
+                f"sum({dec} * {dec}) AS ss",
+                "min(qn) AS qmin",
+                "max(qn) AS qmax",
+                "percentile(qn, 0.5D) AS qmed",
+            ],
+        )
     )
-    n, s, ss = (F.col(c).cast("double") for c in ("n_vecs", "s", "ss"))
-    scale = F.lit(float(DIM_Q_SCALE))
-    return agg.select(
+    n, s, ss = (f"CAST({c} AS DOUBLE)" for c in ("n_vecs", "s", "ss"))
+    scale = f"{float(DIM_Q_SCALE)!r}D"
+    return V.select(
+        agg,
         "label",
         "n_vecs",
-        F.round(s / n / scale, 6).alias("mean_norm"),
-        F.round(
-            F.sqrt((n * ss - s * s) / (n * n)) / scale, 6
-        ).alias("std_norm"),
-        F.round(F.col("qmin") / scale, 6).alias("min_norm"),
-        F.round(F.col("qmax") / scale, 6).alias("max_norm"),
-        F.round(F.col("qmed") / scale, 6).alias("med_norm"),
+        f"round({s} / {n} / {scale}, 6) AS mean_norm",
+        f"round(sqrt(({n} * {ss} - {s} * {s}) / ({n} * {n})) / {scale}, 6) AS std_norm",
+        f"round(qmin / {scale}, 6) AS min_norm",
+        f"round(qmax / {scale}, 6) AS max_norm",
+        f"round(qmed / {scale}, 6) AS med_norm",
     ).orderBy("label")
 
 
@@ -2714,7 +2518,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local phase) — no pairwise joins; overlaps are
     |Q|·k-row broadcast joins."""
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     # ONE scored pass for every prefix level (r14 — the per-level
     # loop ran (1 + |dims|) separate scan→local-topk→window
@@ -2731,12 +2535,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels = list(MATRYOSHKA_DIMS) + [EMBED_DIM]
 
     def _cos_at(d: int):
-        return F.round(
-            _cosine(
-                F.slice(F.col("qvec"), 1, d), F.slice(F.col("vec"), 1, d)
-            ),
-            6,
-        )
+        return F.round(V.cosine(f"slice(qvec, 1, {d})", f"slice(vec, 1, {d})"), 6)
 
     lv = F.explode(
         F.array(
@@ -2759,22 +2558,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = (
         scored.withColumn("_pid", F.spark_partition_id())
         .groupBy("dims", "query_id", "_pid")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("cosine"), F.col("neighbor_id"))
-                    ),
-                    lambda a, b: F.when(a.cosine > b.cosine, -1)
-                    .when(a.cosine < b.cosine, 1)
-                    .when(a.neighbor_id < b.neighbor_id, -1)
-                    .when(a.neighbor_id > b.neighbor_id, 1)
-                    .otherwise(0),
-                ),
-                1,
-                TOP_K,
-            ).alias("top")
-        )
+        .agg(_local_top(TOP_K).alias("top"))
         .select("dims", "query_id", F.explode_outer("top").alias("t"))
         .select("dims", "query_id", F.col("t.neighbor_id").alias("neighbor_id"),
                 F.col("t.cosine").alias("cosine"))
@@ -2865,7 +2649,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_eamples_spark.operators.text import text_bm25_search
 
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
@@ -2875,7 +2659,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("cosine"),
+        F.round(V.cosine("qvec", "vec"), 6).alias("cosine"),
     )
     dense = _topk(scored, RRF_DENSE_POOL).select(
         "query_id",
@@ -3105,7 +2889,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(
             spark, sf_dir, "embeddings", parallelize=True
         ).select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", V.as_double("embedding").alias("vec")
         )
         base = emb.filter(F.col("vec_id") % INCR_MOD != 0)
         return _kmeans_centroids(base, NCENTROIDS)
@@ -3137,7 +2921,7 @@ def ivf_assign_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(
             spark, sf_dir, "embeddings", parallelize=True
         ).select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", V.as_double("embedding").alias("vec")
         )
         base = emb.filter(F.col("vec_id") % INCR_MOD != 0)
         return _assign_cells(base, ivf_centroids(spark, sf_dir))
@@ -3246,7 +3030,7 @@ def ivf_assign_apply_delta(
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     d_all = delta_embeddings.select(
-        "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", V.as_double("embedding").alias("vec")
     )
     n_excluded = d_all.filter(F.col("vec_id") % INCR_MOD == 0).count()
     cent, merged, occ_ref, report = _ivf_delta(spark, sf_dir, d_all)
@@ -3305,7 +3089,7 @@ def _ivf_delta(
         emb = load_table(
             spark, sf_dir, "embeddings", parallelize=True
         ).select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", V.as_double("embedding").alias("vec")
         )
         union_base = emb.filter(
             F.col("vec_id") % INCR_MOD != 0
@@ -3336,7 +3120,7 @@ def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", _as_double_vec(F.col("embedding")).alias("vec"))
+    ).select("vec_id", V.as_double("embedding").alias("vec"))
     cent = ivf_centroids(spark, sf_dir)
     delta = emb.filter(F.col("vec_id") % INCR_MOD == 0)
     assign = ivf_assign_index(spark, sf_dir).unionByName(
@@ -3365,7 +3149,7 @@ def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias(
+            F.round(V.cosine("qvec", "vec"), 6).alias(
                 "cosine"
             ),
         )

@@ -381,7 +381,7 @@ def ingest_embeddings_batch(
     them arriving later are not reported as near-dup pairs."""
     from dbt_eamples_spark.artifacts import corpus_fingerprint
     from dbt_eamples_spark.operators import dedup as D
-    from dbt_eamples_spark.operators.similarity import _as_double_vec
+    from dbt_eamples_spark.operators import vecsql
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
     emb_path = table_path(corpus_dir, "embeddings")
@@ -394,7 +394,7 @@ def ingest_embeddings_batch(
         # anti-join (which only strips already-persisted ids)
         .dropDuplicates(["vec_id"])
         .join(corpus.select("vec_id"), "vec_id", "left_anti")
-        .withColumn("vec", _as_double_vec(F.col("embedding"))),
+        .withColumn("vec", vecsql.as_double("embedding")),
         lsh_planes(base_n),
     ).localCheckpoint(eager=True)  # pinned: read by every plan, both
     # probes and the append — and must survive the append

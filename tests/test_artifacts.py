@@ -497,6 +497,20 @@ class TestSessionStore:
         )
         assert again == "rebuilt"
 
+    def test_second_dedup_minhash_hits_the_band_index(
+        self, spark, corpus, art_dir
+    ):
+        """dedup_minhash reads its band keys from the session-held
+        ``minhash_band_index_full``: the first call builds the entry,
+        a second call in the session records a hit and no build."""
+        A.SESSION_EVENTS.clear()
+        D.dedup_minhash(spark, corpus).collect()
+        n0 = len(A.SESSION_EVENTS)
+        assert ("minhash_band_index_full", "build") in A.SESSION_EVENTS
+        D.dedup_minhash(spark, corpus).collect()
+        second = [e for k, e in A.SESSION_EVENTS[n0:] if k == "minhash_band_index_full"]
+        assert second == ["hit"]
+
     def test_ivf_centroids_follow_an_in_session_rewrite(
         self, spark, corpus
     ):

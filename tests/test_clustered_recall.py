@@ -18,6 +18,7 @@ from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.catalog import load_table
 from dbt_eamples_spark.operators import dedup as D
 from dbt_eamples_spark.operators import similarity as V
+from dbt_eamples_spark.operators import vecsql
 
 # slow lane (VERDICT r14 #2): 10x clustered-corpus recall studies —
 # excluded from the default run so `pytest tests/ -x -q` fits the
@@ -76,13 +77,13 @@ class TestClusteredRecall:
         ~all true near-dup pairs (12k+ pairs at threshold 0.4 on
         this geometry; measured 0.9998 at authoring time)."""
         emb = load_table(spark, clustered_dir, "embeddings").select(
-            "vec_id", V._as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", vecsql.as_double("embedding").alias("vec")
         )
         a = emb.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"))
         b = emb.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"))
         truth = _pairs(
             a.join(b, F.col("vec_a") < F.col("vec_b")).filter(
-                V._cosine(F.col("va"), F.col("vb")) >= D.COSINE_NEAR_DUP
+                vecsql.cosine("va", "vb") >= D.COSINE_NEAR_DUP
             ),
             "vec_a",
             "vec_b",

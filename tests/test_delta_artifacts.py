@@ -19,6 +19,7 @@ from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.catalog import load_table
 from dbt_eamples_spark.operators import dedup as D
 from dbt_eamples_spark.operators import graph as G
+from dbt_eamples_spark.operators import vecsql
 
 # slow lane (VERDICT r14 #2): delta-vs-rebuild equality sweeps —
 # excluded from the default run so `pytest tests/ -x -q` fits the
@@ -712,7 +713,7 @@ class TestIvfAssignDelta:
             delta.filter(F.col("vec_id") % 10 != 0)
         ).select(
             "vec_id",
-            S._as_double_vec(F.col("embedding")).alias("vec"),
+            vecsql.as_double("embedding").alias("vec"),
         )
         want = _ctr(
             S._assign_cells(

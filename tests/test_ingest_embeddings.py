@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.operators import dedup as D
 from dbt_eamples_spark.operators import similarity as S
+from dbt_eamples_spark.operators import vecsql
 from dbt_eamples_spark.streaming import ingest as I
 
 
@@ -34,7 +35,7 @@ def _standing(spark, corpus_dir):
     return (
         spark.read.parquet(os.path.join(corpus_dir, "embeddings.parquet"))
         .filter(F.col("vec_id") % 10 != 0)
-        .select("vec_id", S._as_double_vec(F.col("embedding")).alias("vec"))
+        .select("vec_id", vecsql.as_double("embedding").alias("vec"))
     )
 
 

@@ -26,6 +26,7 @@ from dbt_eamples_spark import artifacts as A
 from dbt_eamples_spark.catalog import load_table
 from dbt_eamples_spark.operators import dedup as D
 from dbt_eamples_spark.operators import multimodal as M
+from dbt_eamples_spark.operators import vecsql
 from dbt_eamples_spark.streaming import ingest as I
 
 # slow lane (VERDICT r14 #2): multi-batch ingest replay equivalence —
@@ -358,10 +359,8 @@ class TestEmbeddingsIngest:
         # against the PUBLISHED quantizer (FAISS add() semantics —
         # the quantizer is carried forward, not retrained, unless
         # the occupancy trigger fired and published a new one)
-        from dbt_eamples_spark.operators.similarity import (
-            _as_double_vec,
-            _assign_cells,
-        )
+        from dbt_eamples_spark.operators.similarity import _assign_cells
+        from dbt_eamples_spark.operators.vecsql import as_double
 
         cent_pub = spark.read.parquet(
             A.artifact_path("ivf_centroids", fp_final)
@@ -372,7 +371,7 @@ class TestEmbeddingsIngest:
             ).collect()
         )
         standing = emb_final.filter(F.col("vec_id") % 10 != 0).select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", as_double("embedding").alias("vec")
         )
         want_ivf = _ctr(_assign_cells(standing, cent_pub).collect())
         assert inc_ivf == want_ivf and len(want_ivf) > 0
@@ -572,7 +571,7 @@ class TestIngestIvfRetrain:
             .filter(F.col("vec_id") % 10 != 0)
             .select(
                 "vec_id",
-                S._as_double_vec(F.col("embedding")).alias("vec"),
+                vecsql.as_double("embedding").alias("vec"),
             )
         )
         want = _ctr(S._assign_cells(standing, cent_pub).collect())

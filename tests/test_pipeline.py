@@ -233,12 +233,12 @@ class TestRowsOnlyOps:
         from dbt_eamples_spark.catalog import load_table
         from dbt_eamples_spark.operators.similarity import (
             NCENTROIDS,
-            _as_double_vec,
             _kmeans_centroids,
         )
+        from dbt_eamples_spark.operators.vecsql import as_double
 
         emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", _as_double_vec(F.col("embedding")).alias("vec")
+            "vec_id", as_double("embedding").alias("vec")
         )
         c1 = {r.cent_id: tuple(r.cvec) for r in _kmeans_centroids(emb).collect()}
         assert 0 < len(c1) <= NCENTROIDS

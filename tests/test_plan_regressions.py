@@ -559,6 +559,69 @@ class TestJobBudgets:
         )
         assert jobs == 0, f"constructing join_star_3way ran {jobs} Spark jobs"
 
+    # construction of the curation benchmark's queries on a warm
+    # session: dedup_minhash pins its candidate pairs (the band keys
+    # are the session-held minhash_band_index_full); the vector
+    # queries build from cached SQL-text kernels and run nothing
+    WARM_CONSTRUCTION_JOBS = {
+        "dedup_minhash": 3,
+        "similarity_topk": 0,
+        "embedding_norm_stats": 0,
+    }
+
+    # py4j commands sent while constructing each curation query on a
+    # warm session, at fixture scale (measured: 156 / 121 / 92 / 201 /
+    # 462 / 763 / 265). Python's collector also sends py4j commands
+    # ("m", release a JVM object) whenever it happens to run; those
+    # are not counted.
+    CONSTRUCTION_PY4J_CALLS = {
+        "dedup_minhash": 170,
+        "similarity_topk": 135,
+        "embedding_norm_stats": 100,
+        "text_token_stats": 220,
+        "text_quality_score": 510,
+        "graph_degree_powerlaw": 840,
+        "multimodal_meta": 290,
+    }
+
+    @pytest.mark.parametrize("name", sorted(WARM_CONSTRUCTION_JOBS))
+    def test_warm_curation_construction_jobs(self, spark, sf_dir, name):
+        build = entrymod.queries()[name]
+        build(spark, sf_dir).collect()  # warm schemas and session state
+        jobs = self._jobs(
+            spark, f"construct_{name}", lambda: build(spark, sf_dir)
+        )
+        budget = self.WARM_CONSTRUCTION_JOBS[name]
+        assert jobs <= budget, (
+            f"constructing {name} ran {jobs} Spark jobs (budget {budget})"
+        )
+
+    @pytest.mark.parametrize("name", sorted(CONSTRUCTION_PY4J_CALLS))
+    def test_curation_construction_py4j_calls(self, spark, sf_dir, name):
+        from pyspark import SparkContext
+
+        build = entrymod.queries()[name]
+        build(spark, sf_dir).collect()  # warm schemas and session state
+        client = SparkContext._gateway._gateway_client
+        send = client.send_command
+        calls = 0
+
+        def counted(command, *args, **kwargs):
+            nonlocal calls
+            if not command.startswith("m\n"):
+                calls += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counted
+        try:
+            build(spark, sf_dir)
+        finally:
+            del client.send_command
+        budget = self.CONSTRUCTION_PY4J_CALLS[name]
+        assert calls <= budget, (
+            f"constructing {name} sent {calls} py4j commands (budget {budget})"
+        )
+
     def test_steady_embeddings_batch(self, embeddings_ingest_replay):
         jobs = embeddings_ingest_replay["jobs"][1]
         assert jobs <= self.STEADY_EMBEDDINGS_BATCH_JOBS, (

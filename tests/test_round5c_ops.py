@@ -43,16 +43,13 @@ def test_hard_negatives_invariants(spark, sf_dir):
 def test_hard_negatives_are_the_top_cross_label_cosines(spark, sf_dir):
     """The picked negatives must dominate every unpicked cross-label
     candidate — checked against the brute scorer's own output."""
-    from dbt_eamples_spark.operators.similarity import (
-        N_QUERIES,
-        _as_double_vec,
-        _cosine,
-    )
+    from dbt_eamples_spark.operators.similarity import N_QUERIES
+    from dbt_eamples_spark.operators.vecsql import as_double, cosine
     from dbt_eamples_spark.catalog import load_table
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", "label", as_double("embedding").alias("vec")
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -66,7 +63,7 @@ def test_hard_negatives_are_the_top_cross_label_cosines(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(_cosine(F.col("qvec"), F.col("vec")), 6).alias("c"),
+            F.round(cosine("qvec", "vec"), 6).alias("c"),
         )
         .collect()
     ):

@@ -1,0 +1,277 @@
+"""Differential tests of the SQL-text vector kernels
+(``operators/vecsql.py``): each kernel is evaluated next to a
+reference built with the higher-order-function builders it replaces
+(``F.transform`` / ``F.aggregate`` / ``F.zip_with`` with Python
+lambdas), on the same rows, and the two must agree bit for bit —
+compared through ``float.hex``, so ``-0.0`` differs from ``0.0`` and
+no tolerance hides a changed fold order.
+
+The engine runs with ANSI arithmetic, where a zero norm makes the
+cosine division raise; the value comparisons run with it off, so the
+zero-vector rows compare their NaN cosines, and
+:func:`test_zero_vector_raises_in_both_under_ansi` covers the
+engine's own setting."""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from dbt_eamples_spark.operators import vecsql as V
+
+# ---- references: the lambda builders the kernels replaced ------------------
+
+
+def ref_as_double(c):
+    return F.transform(c, lambda x: x.cast("double"))
+
+
+def ref_dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def ref_norm(a):
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def ref_cosine(a, b):
+    return ref_dot(a, b) / (ref_norm(a) * ref_norm(b))
+
+
+def ref_l2sq(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def ref_darray(vals):
+    return F.array(*[F.lit(v) for v in vals])
+
+
+# ---- the comparison --------------------------------------------------------
+
+
+def _hex(v):
+    if isinstance(v, float):
+        return float.hex(v)
+    if isinstance(v, (list, tuple)):
+        return [_hex(x) for x in v]
+    if hasattr(v, "asDict"):
+        return {k: _hex(x) for k, x in v.asDict().items()}
+    return v
+
+
+def assert_kernel_equals_reference_collect(df, kernel, reference):
+    """Collect ``kernel`` and ``reference`` over the same rows of
+    ``df`` and require bit-identical values on every row."""
+    rows = df.select(
+        "id", kernel.alias("kernel"), reference.alias("reference")
+    ).collect()
+    assert rows
+    for r in rows:
+        assert _hex(r["kernel"]) == _hex(r["reference"]), r["id"]
+
+
+# pairs (a, b) over every edge the folds have to agree on
+PAIRS = [
+    ([1.0, 2.0, 3.0], [4.0, -5.0, 6.0]),
+    ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # one zero vector: NaN cosine
+    ([0.0, 0.0], [0.0, 0.0]),  # two zero vectors
+    ([-0.0, 1.0], [0.0, -1.0]),  # signed zeros
+    ([-0.0, -0.0], [-0.0, 0.0]),
+    ([1e300, 1e300], [1e300, -1e300]),  # products overflow to inf
+    ([1e-300, 2e-300], [3e-300, 1e-300]),  # products underflow to 0
+    ([1e300, 1e-300, 1.0], [1e-300, 1e300, 1.0]),
+    ([1.0, None, 2.0], [1.0, 1.0, 1.0]),  # NULL element
+    ([1.0, 2.0], [1.0, 2.0, 3.0]),  # unequal lengths
+    (None, [1.0, 2.0]),  # NULL array
+    ([], []),
+    ([0.1, 0.2, 0.3], [0.3, 0.2, 0.1]),
+]
+
+
+@pytest.fixture()
+def non_ansi(spark):
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    yield
+    spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+@pytest.fixture(scope="module")
+def pairs(spark):
+    rng = random.Random(7)
+    rows = [(i, a, b) for i, (a, b) in enumerate(PAIRS)]
+    for i in range(len(rows), len(rows) + 6):
+        rows.append(
+            (
+                i,
+                [rng.uniform(-1, 1) for _ in range(64)],
+                [rng.uniform(-1, 1) for _ in range(64)],
+            )
+        )
+    return spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+
+
+@pytest.fixture(scope="module")
+def vecs64(spark):
+    """64-dim vectors for the literal-operand kernels, with a zero
+    and a signed-zero vector among them."""
+    rng = random.Random(11)
+    rows = [(0, [0.0] * 64), (1, [-0.0] * 64), (2, [1e300] + [0.0] * 63)]
+    for i in range(3, 40):
+        rows.append((i, [rng.uniform(-1, 1) for _ in range(64)]))
+    return spark.createDataFrame(rows, "id int, v array<double>")
+
+
+def _lits(seed: int, n: int = 64) -> tuple:
+    rng = random.Random(seed)
+    return tuple(rng.uniform(-1, 1) for _ in range(n))
+
+
+@pytest.mark.usefixtures("non_ansi")
+class TestPairKernels:
+    def test_dot(self, pairs):
+        assert_kernel_equals_reference_collect(
+            pairs, V.dot("a", "b"), ref_dot("a", "b")
+        )
+
+    def test_norm(self, pairs):
+        assert_kernel_equals_reference_collect(pairs, V.norm("a"), ref_norm("a"))
+
+    def test_cosine(self, pairs):
+        assert_kernel_equals_reference_collect(
+            pairs, V.cosine("a", "b"), ref_cosine("a", "b")
+        )
+
+    def test_cosine_of_slices(self, pairs):
+        assert_kernel_equals_reference_collect(
+            pairs,
+            V.cosine("slice(a, 1, 2)", "slice(b, 1, 2)"),
+            ref_cosine(F.slice("a", 1, 2), F.slice("b", 1, 2)),
+        )
+
+    def test_l2sq(self, pairs):
+        assert_kernel_equals_reference_collect(
+            pairs, V.l2sq("a", "b"), ref_l2sq("a", "b")
+        )
+
+    def test_sub(self, pairs):
+        assert_kernel_equals_reference_collect(
+            pairs,
+            V.sub("a", "b"),
+            F.zip_with("a", "b", lambda x, y: x - y),
+        )
+
+
+def test_zero_vector_raises_in_both_under_ansi(spark):
+    df = spark.createDataFrame([(0, [0.0, 0.0], [1.0, 2.0])], "id int, a array<double>, b array<double>")
+    for col in (V.cosine("a", "b"), ref_cosine("a", "b")):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            df.select(col).collect()
+
+
+def test_as_double(spark):
+    df = spark.createDataFrame(
+        [
+            (0, [1.5, -0.0, 3.4028235e38, 1e-45, None]),
+            (1, []),
+            (2, None),
+        ],
+        "id int, f array<float>",
+    )
+    assert_kernel_equals_reference_collect(
+        df, V.as_double("f"), ref_as_double("f")
+    )
+
+
+def test_darray_literals(spark):
+    vals = (0.1, -0.0, 0.0, 1e300, -1e-300, 5e-324, 1.0 / 3.0, -2.5)
+    assert_kernel_equals_reference_collect(
+        spark.range(1),
+        V.expr(V.darray_sql(vals)),
+        ref_darray(vals),
+    )
+
+
+def test_dot_against_literal(vecs64, non_ansi):
+    w = _lits(3)
+    assert_kernel_equals_reference_collect(
+        vecs64, V.dot("v", V.darray_sql(w)), ref_dot("v", ref_darray(w))
+    )
+
+
+def test_plane_sign_bits(vecs64, non_ansi):
+    planes = [_lits(100 + p) for p in range(6)]
+    ref = F.lit(0)
+    for p, w in enumerate(planes):
+        ref = ref + F.when(
+            ref_dot(F.col("v"), ref_darray(w)) >= 0, F.lit(1 << p)
+        ).otherwise(F.lit(0))
+    assert_kernel_equals_reference_collect(
+        vecs64, V.plane_sign_bits("v", planes), ref
+    )
+
+
+@pytest.mark.parametrize("n, with_cvec", [(1, False), (3, False), (3, True), (5, False)])
+def test_nearest_cells(vecs64, non_ansi, n, with_cvec):
+    """The driver-folded centroid norm gives the same order as the
+    in-row fold of the reference."""
+    cents = [(cid, _lits(200 + cid)) for cid in (0, 2, 3, 7, 9)]
+    structs = []
+    for cid, cv in cents:
+        fields = [
+            (-ref_cosine(F.col("v"), ref_darray(cv))).alias("nc"),
+            F.lit(cid).cast("bigint").alias("cent_id"),
+        ]
+        if with_cvec:
+            fields.append(ref_darray(cv).alias("cv"))
+        structs.append(F.struct(*fields))
+    ranked = F.array_sort(F.array(*structs))
+    if n < len(cents):
+        ranked = F.slice(ranked, 1, n)
+    if with_cvec:
+        ref = F.transform(
+            ranked,
+            lambda s: F.struct(s["cent_id"].alias("cent_id"), s["cv"].alias("cv")),
+        )
+    else:
+        ref = F.transform(ranked, lambda s: s["cent_id"])
+    assert_kernel_equals_reference_collect(
+        vecs64, V.nearest_cells("v", cents, n, with_cvec), ref
+    )
+
+
+def test_ordered_values(spark):
+    rows = [
+        (g, pos, m)
+        for g in range(3)
+        for pos, m in enumerate([0.5, -0.0, 1e300, 2.0 / 3.0][::-1] if g else [1.0, 2.0])
+    ]
+    df = spark.createDataFrame(rows, "g int, pos int, m double").repartition(3)
+    got = {
+        r["g"]: _hex(r["v"])
+        for r in df.groupBy("g").agg(V.ordered_values("pos", "m").alias("v")).collect()
+    }
+    want = {
+        r["g"]: _hex(r["v"])
+        for r in df.groupBy("g")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s.m
+            ).alias("v")
+        )
+        .collect()
+    }
+    assert got == want
+
+
+def test_each_text_parses_once():
+    assert V.cosine("qvec", "vec") is V.cosine("qvec", "vec")
+    assert V.as_double("embedding") is V.as_double("embedding")

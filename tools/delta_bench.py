@@ -196,6 +196,7 @@ def main() -> None:
     # delta = ivf_assign_apply_delta's append path incl. its PSI
     # occupancy collects — the REAL batch cost, not just the plan ----
     from dbt_eamples_spark.operators import similarity as V
+    from dbt_eamples_spark.operators import vecsql
 
     emb = load_table(spark, sf_dir, "embeddings")
     eb = os.path.join(work, "emb_base")
@@ -209,7 +210,7 @@ def main() -> None:
     ]
     emb_vec = load_table(
         spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", V._as_double_vec(F.col("embedding")).alias("vec"))
+    ).select("vec_id", vecsql.as_double("embedding").alias("vec"))
     standing = emb_vec.filter(F.col("vec_id") % 10 != 0)
     t_rebuild = _t(
         lambda: V._assign_cells(

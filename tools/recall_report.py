@@ -25,6 +25,7 @@ from dbt_eamples_spark.catalog import load_table  # noqa: E402
 from dbt_eamples_spark.session import get_spark  # noqa: E402
 from dbt_eamples_spark.operators import dedup as D  # noqa: E402
 from dbt_eamples_spark.operators import similarity as V  # noqa: E402
+from dbt_eamples_spark.operators import vecsql  # noqa: E402
 
 
 def _pairs(df, a="query_id", b="neighbor_id") -> set[tuple[int, int]]:
@@ -59,7 +60,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, str, float]]:
     # O(N^2) scan the LSH candidates exist to avoid — fine at report
     # scale, never in the operator)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V._as_double_vec(F.col("embedding")).alias("vec")
+        "vec_id", vecsql.as_double("embedding").alias("vec")
     )
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"))
@@ -68,7 +69,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, str, float]]:
         .select(
             "vec_a",
             "vec_b",
-            F.round(V._cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
+            F.round(vecsql.cosine("va", "vb"), 6).alias("cos"),
         )
         .filter(F.col("cos") >= D.COSINE_NEAR_DUP),
         "vec_a",
@@ -90,10 +91,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, str, float]]:
         "vec_id",
         F.array(
             *[
-                V._dot(
-                    F.col("vec"),
-                    F.array(*[F.lit(x) for x in V.RP_WEIGHTS[j]]),
-                )
+                vecsql.dot("vec", vecsql.darray_sql(tuple(V.RP_WEIGHTS[j])))
                 for j in range(V.RP_TARGET_DIM)
             ]
         ).alias("pvec"),
@@ -107,7 +105,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, str, float]]:
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .join(F.broadcast(true_pairs), ["vec_a", "vec_b"])
         .select(
-            "vec_a", "vec_b", V._cosine(F.col("va"), F.col("vb")).alias("c0")
+            "vec_a", "vec_b", vecsql.cosine("va", "vb").alias("c0")
         )
     )
     dist = (
@@ -115,7 +113,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, str, float]]:
         .join(pb, "vec_b")
         .select(
             F.abs(
-                F.col("c0") - V._cosine(F.col("pa"), F.col("pb"))
+                F.col("c0") - vecsql.cosine("pa", "pb")
             ).alias("d")
         )
         .agg(F.avg("d"))
