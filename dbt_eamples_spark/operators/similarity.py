@@ -565,10 +565,11 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
     margin sort is over a tables×NPLANES literal-size array. Narrow
     map, no shuffle; at 100 TB this is scan-speed like the base
     bucketing."""
-    dots = df.select(
+    dots = V.select(
+        df,
         "*",
         *[
-            V.expr(_dot_plane_sql(vec_col, t, p)).alias(f"_d{t}_{p}")
+            f"{_dot_plane_sql(vec_col, t, p)} AS _d{t}_{p}"
             for t in range(tables)
             for p in range(nplanes)
         ],
@@ -594,8 +595,8 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
         return V.expr(
             f"concat(array({base}), transform("
             f"slice(array_sort(array({structs})), 1, {flips}), "
-            f"s -> {base} ^ shiftleft(1, s.p)))"
-        ).alias(f"{prefix}{t}")
+            f"s -> {base} ^ shiftleft(1, s.p))) AS {prefix}{t}"
+        )
 
     return dots.select(*df.columns, *[_probe_col(t) for t in range(tables)])
 

@@ -25,9 +25,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-REPO = "/root/repo"
 
 
 def load_prev_bench(rev: str) -> dict:

@@ -32,7 +32,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = os.path.join(REPO, ".tmp", "sf1.0")

@@ -36,7 +36,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -103,7 +104,7 @@ def _family_row(pcts, times, rebuild, delta_rows):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    work = "/root/repo/.tmp/delta_bench"
+    work = os.path.join(REPO, ".tmp/delta_bench")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     os.environ["SPARK_GRAFT_ARTIFACTS"] = os.path.join(work, "arts")

@@ -35,7 +35,7 @@ def main() -> None:
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     outdir = args.outdir or os.path.join(
-        "/root/repo", "plans", f"r{args.round}"
+        REPO, "plans", f"r{args.round}"
     )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump-plans")

@@ -10,10 +10,12 @@ Usage: python tools/explain_audit.py [sf_dir]  (writes EXPLAINS.md)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dbt_eamples_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
@@ -90,7 +92,7 @@ def main() -> None:
         "",
     ]
     lines += stats_section(spark, sf_dir)
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote EXPLAINS.md")
 

@@ -24,7 +24,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _t(df) -> float:
@@ -77,10 +78,10 @@ def profile(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_ARTIFACTS"] = "/root/repo/.tmp/minhash_prof"
+    os.environ["SPARK_GRAFT_ARTIFACTS"] = os.path.join(REPO, ".tmp/minhash_prof")
     dirs = sys.argv[1:] or [
         d
-        for d in ["/root/testdata/sf0.1", "/root/repo/.tmp/sf1.0"]
+        for d in ["/root/testdata/sf0.1", os.path.join(REPO, ".tmp/sf1.0")]
         if os.path.isdir(d)
     ]
     from dbt_eamples_spark.session import get_spark

@@ -35,14 +35,15 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from dbt_eamples_spark.catalog import load_table  # noqa: E402
 from dbt_eamples_spark.session import get_spark  # noqa: E402
 
-WORK = "/root/repo/.tmp/ngram_prof"
+WORK = os.path.join(REPO, ".tmp/ngram_prof")
 
 
 def _t(df) -> float:
@@ -174,7 +175,7 @@ def main() -> None:
     os.environ["SPARK_GRAFT_ARTIFACTS"] = os.path.join(WORK, "arts")
     dirs = sys.argv[1:] or [
         p
-        for p in ("/root/testdata/sf0.1", "/root/repo/.tmp/sf1.0")
+        for p in ("/root/testdata/sf0.1", os.path.join(REPO, ".tmp/sf1.0"))
         if os.path.isdir(p)
     ]
     spark = get_spark("ngram-delta-profile")

@@ -9,10 +9,12 @@ Usage: python tools/oracle_ledger.py LOG_SF001 LOG_SF01 > table.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 # one source of truth for the sweep-log line format (ADVICE r6)

@@ -23,9 +23,9 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-REPO = "/root/repo"
 SF1 = os.path.join(REPO, ".tmp", "sf1.0")
 
 # the BENCH_SF1 sweep ∩ oracle-backed queries, plus the round-13

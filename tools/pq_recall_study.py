@@ -20,12 +20,14 @@ Usage: python tools/pq_recall_study.py [sf_dir]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def load(sf_dir: str):

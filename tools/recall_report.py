@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -205,7 +206,7 @@ def main() -> None:
     # measured column, not an argument (VERDICT r5 #4)
     from tools.clustered_fixture import write_clustered
 
-    clustered_dir = write_clustered("/root/repo/.tmp/clustered")
+    clustered_dir = write_clustered(os.path.join(REPO, ".tmp/clustered"))
     uni = measure(spark, sf_dir)
     clu = {n: v for n, _, v in measure(spark, clustered_dir)}
 
@@ -249,7 +250,7 @@ def main() -> None:
     # DELTA_BENCH/BENCH_SF1; the incremental-IVF recall claim gets
     # its own decade step here, measured live at generation time on
     # the synthesized sf1 corpus when present.
-    sf1_dir = "/root/repo/.tmp/sf1.0"
+    sf1_dir = os.path.join(REPO, ".tmp/sf1.0")
     if os.path.isdir(sf1_dir):
         exact1 = _pairs(V.similarity_topk(spark, sf1_dir))
         got1 = _pairs(V._ivf_delta_topk(spark, sf1_dir))
@@ -269,7 +270,7 @@ def main() -> None:
         ]
     lines.append(_PQ_EPILOGUE.rstrip())
     lines.append(_STATIC_SECTIONS.rstrip() + "\n")
-    with open("/root/repo/RECALL.md", "w") as f:
+    with open(os.path.join(REPO, "RECALL.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote RECALL.md")
 

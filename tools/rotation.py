@@ -32,9 +32,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-REPO = "/root/repo"
 
 
 def correctness_history(max_round: int | None = None) -> dict[str, int]:

@@ -26,9 +26,9 @@ import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-REPO = "/root/repo"
 
 
 def _load(path: str) -> dict:

@@ -24,7 +24,7 @@ scaling):
    per-user behavior, same time range (10× hourly density).
 
 Usage: python tools/scale_corpus.py [out_dir]  (default
-/root/repo/.tmp/sf1.0)
+.tmp/sf1.0 in the checkout)
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ import os
 import sys
 
 import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SRC = "/root/testdata/sf0.1"
 OFF = 100_000_000
@@ -81,7 +83,7 @@ def alpha_perm(i: int) -> str:
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    out = args[0] if args else "/root/repo/.tmp/sf1.0"
+    out = args[0] if args else os.path.join(REPO, ".tmp/sf1.0")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"SET threads TO {os.cpu_count() or 8}")

@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dbt_eamples_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
@@ -37,7 +38,7 @@ HEAVY = [
 
 def main() -> None:
     small = "/root/testdata/sf0.1"
-    big = "/root/repo/.tmp/sf1.0"
+    big = os.path.join(REPO, ".tmp/sf1.0")
     if not os.path.isdir(big):
         sys.exit("run tools/scale_corpus.py first")
     spark = get_spark("scaling-check")
