@@ -121,15 +121,12 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Round-10 driver-sample rotation (VERDICT r9 #1): the queue is no
-# longer hand-assembled — it is GENERATED by tools/rotation.py from
-# the committed CORRECTNESS_r*.json history (never-checked → stalest
-# latest-driver-round → alphabetical), and tools/preflight.py asserts
-# this literal equals the generator's output, so the r8 hand-count
-# omission (metric_rollup) cannot recur. The list is the FULL
-# registry ordering; the driver samples the first 50, so positions
-# 51+ are earlier-round front queues by construction.
-# Regenerate with: python tools/rotation.py --literal
+# Driver-sample order of queries(): the driver samples the first 50
+# entries. The list was last generated at round 15 from the committed
+# CORRECTNESS_r*.json history (never-checked → stalest latest-driver
+# round → alphabetical) and is kept frozen as committed. It is the
+# FULL registry ordering, a permutation of _query_registry() (locked
+# in tests/test_entry_contract.py).
 _R15_PRIORITY = [
     # ---- latest driver row r8 ----
     "similarity_hybrid_rrf",
@@ -412,10 +409,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     The driver samples the FIRST 50 entries per round; the dict below
-    is re-ordered through ``_R15_PRIORITY`` (generated by
-    tools/rotation.py: never-checked → stalest driver round →
-    alphabetical; preflight-asserted), so insertion order here is
-    grouping only.
+    is re-ordered through ``_R15_PRIORITY`` (the frozen round-15
+    driver-sample order), so insertion order here is grouping only.
     """
     d = _query_registry()
     ordered = {k: d[k] for k in _R15_PRIORITY if k in d}

@@ -36,13 +36,14 @@ BENCH_EXCLUDE: dict[str, str] = {
 
 
 def _bench_names() -> list[str]:
-    # FIXED alphabetical run order (VERDICT r6 #6): queries() is
-    # re-ordered every round by the driver-rotation priority list,
-    # so following it made each round's bench run a DIFFERENT
-    # order — page-cache/JIT neighbors changed and per-query deltas
-    # picked up ~1.2× run-order noise (the round-6 ANN/dedup "drift"
-    # profiled to exactly this: solo reruns matched r1). Sorting
-    # pins the order so round-over-round deltas are signal.
+    # FIXED alphabetical run order (VERDICT r6 #6): queries() follows
+    # the driver-sample priority list, which used to be re-ordered
+    # every round, so following it made each round's bench run a
+    # DIFFERENT order — page-cache/JIT neighbors changed and
+    # per-query deltas picked up ~1.2× run-order noise (the round-6
+    # ANN/dedup "drift" profiled to exactly this: solo reruns matched
+    # r1). Sorting pins the order so round-over-round deltas are
+    # signal.
     qs = entrymod.queries()
     return sorted(n for n in qs if n not in BENCH_EXCLUDE)
 
@@ -100,8 +101,8 @@ def main() -> None:
             "sf": sf,
             "protocol": f"per-query min over {n_runs} runs",
             "raw_run_totals_sec": run_totals,
-            # evidence provenance (ADVICE r7 #5): preflight compares
-            # this to the tree it is snapshotting
+            # evidence provenance (ADVICE r7 #5): the engine tree
+            # these timings were taken on
             "engine_tree": _engine_tree(),
         }
     )

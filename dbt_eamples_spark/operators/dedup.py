@@ -434,7 +434,6 @@ def ngram_pairs_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
     assume_new_ids: bool = False,
 ) -> DataFrame:
     """Delta-maintain the ``ngram_jaccard_pairs`` artifact (VERDICT
@@ -450,10 +449,9 @@ def ngram_pairs_apply_delta(
     row-identical to a from-scratch rebuild on the union corpus
     (pytest-locked in tests/test_delta_artifacts.py).
 
-    ``publish_fingerprint``: pass the union corpus's fingerprint to
-    publish the merged table into the artifact store, making every
-    later full query on the updated corpus a warm reuse — the daily
-    ingest loop a 100 TB pipeline actually runs.
+    Publishing the merged table under the union corpus's fingerprint
+    (``artifacts.publish``, as the ingest loop does) makes every later
+    full query on the updated corpus a warm reuse.
 
     Scale shape: delta tokenize is |delta|-bounded; the probe is an
     equi-join on blk whose output is collision-bounded; base parquet
@@ -469,8 +467,6 @@ def ngram_pairs_apply_delta(
     ValueError loudly; a caller that already guarantees freshness
     (e.g. the watermarked ingest loop, whose anti-join IS that
     guarantee) can skip the probe with ``assume_new_ids=True``."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     base_pairs = _ngram_pairs(spark, sf_dir).select(
         "doc_a", "doc_b", "jaccard"
     )
@@ -540,15 +536,9 @@ def ngram_pairs_apply_delta(
         )
         .select("doc_a", "doc_b", _pair_jaccard().alias("jaccard"))
     )
-    merged = base_pairs.unionByName(
+    return base_pairs.unionByName(
         db.unionByName(dd).filter(F.col("jaccard") >= NGRAM_PAIR_TAU)
     )
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "ngram_jaccard_pairs", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,7 +751,9 @@ def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
+            F.round(
+                F.try_divide(dot, F.col("na") * F.col("nb")), 6
+            ).alias("cosine"),
         )
         .filter(F.col("cosine") >= COSINE_NEAR_DUP)
     )
@@ -988,17 +980,16 @@ def minhash_band_index_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the persisted MinHash band index: signatures
     are computed for ``delta_docs`` (doc_id, text, …) ONLY and
     appended to the base index — a pure index-append (band keys are
     per-doc state, so no base row ever changes), the cheapest delta
-    shape in the artifact family. With ``publish_fingerprint`` (the
-    union corpus's documents fingerprint) the merged index lands in
-    the artifact store, so the next ingest batch probes an index
-    that already covers this one. Row-identical to a from-scratch
-    index build over base-corpus ∪ delta (pytest-locked).
+    shape in the artifact family. Published under the union corpus's
+    documents fingerprint, the merged index lets the next ingest
+    batch probe an index that already covers this one. Row-identical
+    to a from-scratch index build over base-corpus ∪ delta
+    (pytest-locked).
 
     The %INCR_MOD corpus convention is applied to the DELTA too
     (ADVICE r9): a from-scratch build at any fingerprint excludes
@@ -1008,8 +999,6 @@ def minhash_band_index_apply_delta(
     the same (kind, fingerprint) key, breaking the
     fingerprint→content invariant and silently adding new×new
     candidate pairs to later incremental runs."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
     base = minhash_band_index(spark, sf_dir)
     new_keys = _band_keys(
         _shingles(
@@ -1018,13 +1007,7 @@ def minhash_band_index_apply_delta(
             )
         )
     ).select(F.col("doc_id").alias("corpus_doc"), "band", "bucket")
-    merged = base.unionByName(new_keys)
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "minhash_band_index", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
+    return base.unionByName(new_keys)
 
 
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1180,68 +1163,42 @@ def doc_shingles_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the shared ``doc_shingles`` artifact: tokenize
     the delta only, append — per-doc state, row-identical to a
     rebuild over base ∪ delta by construction."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
-    merged = doc_shingles(spark, sf_dir).unionByName(
+    return doc_shingles(spark, sf_dir).unionByName(
         _shingles(
             delta_docs.select("doc_id", "source", "text"), "source"
         )
     )
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "doc_shingles", publish_fingerprint, lambda: merged
-        )
-    return merged
 
 
 def ngram_block_index_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the ``ngram_block_index`` (doc_id, blk)
     blocking artifact — a pure per-doc append."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
-    merged = _ngram_block_index(spark, sf_dir).unionByName(
+    return _ngram_block_index(spark, sf_dir).unionByName(
         _shingles(delta_docs.select("doc_id", "text")).select(
             "doc_id", _blk_col().alias("blk")
         )
     )
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "ngram_block_index", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
 
 
 def minhash_band_index_full_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain :func:`minhash_band_index_full` — a pure
     per-doc append (NO %INCR_MOD filter: the full index covers every
     doc by definition)."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
-    merged = minhash_band_index_full(spark, sf_dir).unionByName(
+    return minhash_band_index_full(spark, sf_dir).unionByName(
         _band_keys(_shingles(delta_docs.select("doc_id", "text")))
     )
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "minhash_band_index_full", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
 
 
 def minhash_pairs_delta_new(
@@ -1499,7 +1456,6 @@ def cluster_verdicts_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
     assume_new_ids: bool = False,
 ) -> DataFrame:
     """Delta-maintain the persisted cluster labeling (VERDICT r9 #2
@@ -1511,9 +1467,9 @@ def cluster_verdicts_apply_delta(
     a from-scratch :func:`dedup_clusters` on base ∪ delta produces
     (pytest-locked, incl. the explicit two-clusters-merge fixture).
 
-    ``publish_fingerprint``: the union corpus's documents
-    fingerprint, to publish the merged labeling so every later
-    cascade query on the updated corpus reads it warm.
+    Published under the union corpus's documents fingerprint, the
+    merged labeling lets every later cascade query on the updated
+    corpus read it warm.
 
     Scale shape: delta signature + collision-bounded probes for the
     new pairs; label propagation over |new pairs| quotient edges
@@ -1532,8 +1488,6 @@ def cluster_verdicts_apply_delta(
     corpus (flat delta vs corpus-sized rebuild at sf1)."""
     import warnings
 
-    from dbt_eamples_spark.artifacts import load_or_build
-
     n_corpus = load_table(
         spark, sf_dir, "documents"
     ).count()
@@ -1551,13 +1505,7 @@ def cluster_verdicts_apply_delta(
     new_pairs = minhash_pairs_delta_new(
         spark, sf_dir, delta_docs, assume_new_ids=assume_new_ids
     ).select("doc_a", "doc_b")
-    merged = _merge_labels_quotient(base, new_pairs)
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "cluster_labels", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
+    return _merge_labels_quotient(base, new_pairs)
 
 
 def _verify_pairs(
@@ -2065,7 +2013,6 @@ def span_artifacts_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
     return_indexes: bool = False,
 ) -> tuple[DataFrame, ...]:
     """Delta-maintain the span verdict artifacts: returns the
@@ -2092,10 +2039,8 @@ def span_artifacts_apply_delta(
     merge of delta stats into the index scan; the crossing-hash
     probe is crossing-set-bounded. Base text is never re-read.
 
-    ``publish_fingerprint`` publishes BOTH merged artifacts (and the
-    two merged indexes) under the union corpus's fingerprint."""
-    from dbt_eamples_spark.artifacts import load_or_build
-
+    ``return_indexes`` also returns the merged ``doc_span_index`` and
+    ``span_hash_index``, for a caller that publishes all four."""
     d_spans = _delta_doc_spans(
         delta_docs.select("doc_id", "text")
     ).localCheckpoint(eager=True)  # delta-sized; 3 consumers
@@ -2159,25 +2104,7 @@ def span_artifacts_apply_delta(
     )
     merged_dsi = _doc_span_index(spark, sf_dir).unionByName(d_spans)
     merged_shi = merged_stats.select("h", "n_docs", "n_occurrences")
-    if publish_fingerprint is not None:
-        profile = load_or_build(
-            spark, "span_profile", publish_fingerprint, lambda: profile
-        )
-        dup_stats = load_or_build(
-            spark, "span_dup_stats", publish_fingerprint,
-            lambda: dup_stats,
-        )
-        load_or_build(
-            spark, "doc_span_index", publish_fingerprint,
-            lambda: merged_dsi,
-        )
-        load_or_build(
-            spark, "span_hash_index", publish_fingerprint,
-            lambda: merged_shi,
-        )
     if return_indexes:
-        # the ingest composer publishes these itself under a
-        # fingerprint that only exists after the corpus append
         return profile, dup_stats, merged_dsi, merged_shi
     return profile, dup_stats
 
@@ -2605,7 +2532,6 @@ def cosine_base_index_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_embeddings: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the persisted hyperplane bucket index (round
     10 — the last persisted index without a delta path): plane-dot
@@ -2623,7 +2549,6 @@ def cosine_base_index_apply_delta(
     are ×2 in corpus size — and detected exactly, never silently
     wrong). Both paths are pytest-locked row-identical to a
     from-scratch build over the union."""
-    from dbt_eamples_spark.artifacts import publish
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
     base_n = standing_count(spark, sf_dir)
@@ -2634,10 +2559,7 @@ def cosine_base_index_apply_delta(
         lsh_planes(base_n),
     )
     delta_n = keyed.filter(F.col("vec_id") % INCR_MOD != 0).count()
-    merged = _cosine_index_delta(spark, sf_dir, keyed, base_n, delta_n)
-    if publish_fingerprint is not None:
-        merged = publish(spark, "cosine_base_index", publish_fingerprint, merged)
-    return merged
+    return _cosine_index_delta(spark, sf_dir, keyed, base_n, delta_n)
 
 
 def _cosine_index_delta(
@@ -2753,7 +2675,9 @@ def _cosine_delta_vs_base(
         .select(
             "new_vec",
             "corpus_vec",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
+            F.round(
+                F.try_divide(dot, F.col("na") * F.col("nb")), 6
+            ).alias("cosine"),
         )
         .filter(F.col("cosine") >= COSINE_NEAR_DUP)
     )

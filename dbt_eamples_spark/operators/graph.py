@@ -520,7 +520,6 @@ def triangle_credits_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_lineitem: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the ``triangle_credits`` artifact (VERDICT r8
     #2): per-node triangle participation for the co-purchase graph
@@ -539,10 +538,9 @@ def triangle_credits_apply_delta(
     Row-identical to a from-scratch rebuild on the union corpus
     (pytest-locked in tests/test_delta_artifacts.py).
 
-    ``publish_fingerprint``: the union corpus's lineitem
-    fingerprint, to publish the merged credits so later
-    graph_triangle_count/graph_transitivity calls on the updated
-    corpus reuse instead of rebuilding.
+    Published under the union corpus's lineitem fingerprint, the
+    merged credits let later graph_triangle_count/graph_transitivity
+    calls on the updated corpus reuse instead of rebuilding.
 
     Scale shape: cost ∝ |touched orders| · basket² for edge
     candidates + |new edges| · degree for the wedge probes — the
@@ -568,8 +566,6 @@ def triangle_credits_apply_delta(
     rebuild instead; it still returns the (equivalence-locked)
     merged result so callers keep correctness either way."""
     import warnings
-
-    from dbt_eamples_spark.artifacts import load_or_build
 
     n_delta = delta_lineitem.count()
     n_base = load_table(spark, sf_dir, "lineitem").count()
@@ -639,22 +635,13 @@ def triangle_credits_apply_delta(
         .groupBy("node")
         .agg(F.count("*").cast("long").alias("gained"))
     )
-    merged = (
-        base_credits.join(gained, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce("n_triangles", F.lit(0))
-                + F.coalesce("gained", F.lit(0))
-            ).cast("long").alias("n_triangles"),
-        )
+    return base_credits.join(gained, "node", "full_outer").select(
+        "node",
+        (
+            F.coalesce("n_triangles", F.lit(0))
+            + F.coalesce("gained", F.lit(0))
+        ).cast("long").alias("n_triangles"),
     )
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "triangle_credits", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:

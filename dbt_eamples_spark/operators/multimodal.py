@@ -721,20 +721,16 @@ def phash_band_index_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_docs: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> DataFrame:
     """Delta-maintain the persisted phash band index: decode+dHash
     the ``delta_docs`` (doc_id) images ONLY and append — per-doc
     state, so a pure index-append like
-    :func:`dedup.minhash_band_index_apply_delta`. With
-    ``publish_fingerprint`` the merged index lands in the artifact
-    store for the next batch's probe. Pytest-locked row-identical
-    to a from-scratch build over base-corpus ∪ delta. The %INCR_MOD
-    corpus convention is applied to the DELTA too (ADVICE r9): a
-    from-scratch build at any fingerprint excludes doc_id %
-    INCR_MOD == 0 rows, so the merged/published index must as well
-    — the fingerprint→content invariant."""
-    from dbt_eamples_spark.artifacts import load_or_build
+    :func:`dedup.minhash_band_index_apply_delta`. Pytest-locked
+    row-identical to a from-scratch build over base-corpus ∪ delta.
+    The %INCR_MOD corpus convention is applied to the DELTA too
+    (ADVICE r9): a from-scratch build at any fingerprint excludes
+    doc_id % INCR_MOD == 0 rows, so the merged/published index must
+    as well — the fingerprint→content invariant."""
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     base = phash_band_index(spark, sf_dir)
@@ -745,13 +741,7 @@ def phash_band_index_apply_delta(
     ).select(
         F.col("doc_id").alias("corpus_doc"), "b0", "b1", "b2", "b3"
     )
-    merged = base.unionByName(new_rows)
-    if publish_fingerprint is not None:
-        merged = load_or_build(
-            spark, "phash_band_index", publish_fingerprint,
-            lambda: merged,
-        )
-    return merged
+    return base.unionByName(new_rows)
 
 
 def dedup_incremental_phash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,11 +50,14 @@ def _local_top(k: int):
     """Aggregate: the k best (cosine, neighbor_id) structs of a group
     as ``top``, descending cosine, ascending neighbor_id on ties. The
     comparator is explicit (not a sort on -cosine) so NaN ranks as
-    Spark's comparison operators rank it."""
+    Spark's comparison operators rank it; a NULL cosine (a zero-norm
+    vector) ranks last, as in the final window's DESC order."""
     return V.expr(
         "slice(array_sort(collect_list(struct(cosine, neighbor_id)), "
         "(a, b) -> CASE WHEN a.cosine > b.cosine THEN -1 "
         "WHEN a.cosine < b.cosine THEN 1 "
+        "WHEN a.cosine IS NULL AND b.cosine IS NOT NULL THEN 1 "
+        "WHEN b.cosine IS NULL AND a.cosine IS NOT NULL THEN -1 "
         "WHEN a.neighbor_id < b.neighbor_id THEN -1 "
         "WHEN a.neighbor_id > b.neighbor_id THEN 1 ELSE 0 END), "
         f"1, {k}) AS top"
@@ -93,8 +96,9 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: for each query vector (vec_id <
     N_QUERIES), the TOP_K nearest other vectors."""
     # each vector's norm once per row, not once per scored pair: a
-    # pair then pays one dot fold, and dot / (qn * vn) is the same
-    # IEEE operation sequence as the per-pair cosine
+    # pair then pays one dot fold, and try_divide(dot, qn * vn) is the
+    # same IEEE operation sequence as the per-pair cosine (NULL for a
+    # zero-norm vector, like vecsql.cosine_sql)
     emb = V.select(
         V.select(
             load_table(spark, sf_dir, "embeddings", parallelize=True),
@@ -109,7 +113,7 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = V.select(
         emb.join(F.broadcast(q), V.expr("vec_id != query_id")),
         "query_id", "vec_id AS neighbor_id",
-        f"round({V.dot_sql('qvec', 'vec')} / (qn * vn), 6) AS cosine",
+        f"round(try_divide({V.dot_sql('qvec', 'vec')}, qn * vn), 6) AS cosine",
     )
     return _topk(scored, TOP_K)
 
@@ -898,16 +902,13 @@ def similarity_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (adc_dist, neighbor_id) order, so the refine join
     input — hence the output — is engine-exact even though ADC
     distances are approximate."""
-    return similarity_pq_topk(
-        spark, sf_dir, trained=True, rerank=PQ_RERANK
-    )
+    return similarity_pq_topk(spark, sf_dir, rerank=PQ_RERANK)
 
 
 def similarity_pq_topk(
     spark: SparkSession,
     sf_dir: str,
     *,
-    trained: bool = True,
     rerank: int = 0,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k search — the memory-side
@@ -932,19 +933,16 @@ def similarity_pq_topk(
     PQ trade); the exact twin similarity_topk carries value-level
     recall in RECALL.md.
 
-    Operating point: the DEFAULT is the TRAINED per-subspace Lloyd
-    codebooks (:func:`_pq_train_codebooks`) — the production index a
-    plain-named call should build (measured top-5 recall 0.24 vs
-    0.06 untrained on the worst-case uniform fixture, RECALL.md §PQ);
-    the oracle pins the same trained chain (the Lloyd fixed-point
-    means are engine-exact, so the codebook — hence every ADC
-    distance — is oracle-checkable). ``trained=False`` is the
-    teaching dial: the md5-seeded literal codebook whose VALUES
-    relation makes the quantizer itself legible. ``rerank=N`` keeps
-    an ADC shortlist of N per query and re-ranks it with EXACT
-    cosine — the FAISS ``refine`` stage: the expensive full-width
-    math touches only |Q|·N shortlisted vectors, never the corpus
-    (recall 0.68 at N=50; registered as
+    Operating point: the TRAINED per-subspace Lloyd codebooks
+    (:func:`_pq_train_codebooks`) — measured top-5 recall 0.24 vs
+    0.06 for the md5-seeded literal codebook on the worst-case
+    uniform fixture, RECALL.md §PQ; the oracle pins the same trained
+    chain (the Lloyd fixed-point means are engine-exact, so the
+    codebook — hence every ADC distance — is oracle-checkable).
+    ``rerank=N`` keeps an ADC shortlist of N per query and re-ranks
+    it with EXACT cosine — the FAISS ``refine`` stage: the expensive
+    full-width math touches only |Q|·N shortlisted vectors, never
+    the corpus (recall 0.68 at N=50; registered as
     :func:`similarity_pq_rerank_topk`). With rerank the output
     schema swaps adc_dist for the exact ``cosine``."""
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -953,31 +951,15 @@ def similarity_pq_topk(
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    if trained:
-        # VERDICT r14 #6: similarity_pq_topk and
-        # similarity_pq_rerank_topk (and rerank_recall_eval through
-        # it) each re-ran the identical trained-ADC scan + two-phase
-        # cut; the ranked shortlist at max(TOP_K, PQ_RERANK) is ONE
-        # frame both consume (rk ≤ TOP_K is a prefix of rk ≤ 50
-        # under the same (adc_dist, neighbor_id) total order, so
-        # every emitted row is unchanged). |Q|·PQ_RERANK rows of
-        # session state, like the recall gates' exact leg.
-        ranked = _adc_ranked_shortlist(spark, sf_dir)
-        if not rerank:
-            return ranked.filter(F.col("rk") <= TOP_K).select(
-                "query_id", "neighbor_id", "adc_dist", "rk"
-            )
-        return _pq_refine(
-            ranked.filter(F.col("rk") <= max(TOP_K, rerank)), q, emb
-        )
-    books = [
-        {k: PQ_CODEBOOK[s][k] for k in range(PQ_CODES)}
-        for s in range(PQ_SUBVECTORS)
-    ]
-    codes = embedding_pq_encode(spark, sf_dir).select(
-        "vec_id", *[f"code_{s}" for s in range(PQ_SUBVECTORS)]
-    )
-    ranked = _adc_ranked(codes, q, books, max(TOP_K, rerank))
+    # VERDICT r14 #6: similarity_pq_topk and
+    # similarity_pq_rerank_topk (and rerank_recall_eval through it)
+    # each re-ran the identical trained-ADC scan + two-phase cut; the
+    # ranked shortlist at max(TOP_K, PQ_RERANK) is ONE frame both
+    # consume (rk ≤ TOP_K is a prefix of rk ≤ 50 under the same
+    # (adc_dist, neighbor_id) total order, so every emitted row is
+    # unchanged). |Q|·PQ_RERANK rows of session state, like the
+    # recall gates' exact leg.
+    ranked = _adc_ranked_shortlist(spark, sf_dir)
     if not rerank:
         return ranked.filter(F.col("rk") <= TOP_K).select(
             "query_id", "neighbor_id", "adc_dist", "rk"
@@ -2992,7 +2974,6 @@ def ivf_assign_apply_delta(
     spark: SparkSession,
     sf_dir: str,
     delta_embeddings: DataFrame,
-    publish_fingerprint: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
     """Delta-maintain the persisted IVF index (VERDICT r11 #3 — the
     last rebuild-on-change family): assign the delta vectors to the
@@ -3027,7 +3008,6 @@ def ivf_assign_apply_delta(
     corpus. The %INCR_MOD convention rows of the delta are excluded
     (fingerprint→content invariant) and COUNTED in the report, per
     the no-silent-caps rule (ADVICE r11 on the cosine twin)."""
-    from dbt_eamples_spark.artifacts import publish
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     d_all = delta_embeddings.select(
@@ -3036,12 +3016,6 @@ def ivf_assign_apply_delta(
     n_excluded = d_all.filter(F.col("vec_id") % INCR_MOD == 0).count()
     cent, merged, occ_ref, report = _ivf_delta(spark, sf_dir, d_all)
     report["convention_excluded"] = n_excluded
-    if publish_fingerprint is not None:
-        kinds = ("ivf_centroids", "ivf_assign_index", "ivf_occupancy_ref")
-        cent, merged, occ_ref = (
-            publish(spark, k, publish_fingerprint, df)
-            for k, df in zip(kinds, (cent, merged, occ_ref))
-        )
     return cent, merged, occ_ref, report
 
 

@@ -59,7 +59,12 @@ def norm_sql(a: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> str:
-    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
+    """A zero-norm operand scores NULL, as DuckDB's ``x / 0.0`` and
+    Spark's non-ANSI division do, instead of raising DIVIDE_BY_ZERO
+    under the engine's ANSI arithmetic. ``try_divide`` is the same
+    Divide node in its null-on-zero mode; a ``NULLIF`` divisor would
+    be rewritten into an extra Project that carries both arrays."""
+    return f"try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)})"
 
 
 def l2sq_sql(a: str, b: str) -> str:

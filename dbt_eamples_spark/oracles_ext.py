@@ -1268,88 +1268,6 @@ EXT_ORACLES["events_attribution_last_touch"] = """
 """
 
 
-def _pq_adc_oracle_sql() -> str:
-    """Mirror of similarity.similarity_pq_topk: same codebook VALUES
-    relation and argmin as the encode oracle, per-query distance
-    tables over the identical folds, and the ADC score as an ORDERED
-    list_reduce over s (((d0+d1)+d2)+d3 — the exact left-assoc
-    addition order of the Spark expression; a bare SUM() would be
-    order-undefined and could diverge in the last ulp). adc_dist is
-    deliberately UNROUNDED — identical trees yield identical doubles,
-    while a final round() can flip at decimal .5 boundaries."""
-    from dbt_eamples_spark.operators.similarity import (
-        N_QUERIES,
-        PQ_CODEBOOK,
-        PQ_CODES,
-        PQ_SUBDIM,
-        PQ_SUBVECTORS,
-        TOP_K,
-    )
-
-    rows = ",\n            ".join(
-        f"({s}, {k}, [{', '.join(repr(x) for x in PQ_CODEBOOK[s][k])}])"
-        for s in range(PQ_SUBVECTORS)
-        for k in range(PQ_CODES)
-    )
-
-    def dist(vec: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {PQ_SUBDIM} + 1), "
-            f"i -> ({vec}[s * {PQ_SUBDIM} + i] - code[i])"
-            f" * ({vec}[s * {PQ_SUBDIM} + i] - code[i])), (x, y) -> x + y)"
-        )
-
-    return f"""
-        WITH v AS (
-            SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS vec
-            FROM embeddings
-        ),
-        cb(s, k, code) AS (VALUES
-            {rows}
-        ),
-        d AS (
-            SELECT vec_id, s, k, {dist('vec')} AS d2
-            FROM v CROSS JOIN cb
-        ),
-        best AS (
-            SELECT vec_id, s, k,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                      ORDER BY d2 ASC, k ASC) AS rn
-            FROM d
-        ),
-        codes AS (SELECT vec_id, s, k FROM best WHERE rn = 1),
-        q AS (
-            SELECT vec_id AS query_id, vec AS qvec FROM v
-            WHERE vec_id < {N_QUERIES}
-        ),
-        dt AS (
-            SELECT query_id, s, k, {dist('qvec')} AS dq
-            FROM q CROSS JOIN cb
-        ),
-        scored AS (
-            SELECT dt.query_id, c.vec_id AS neighbor_id,
-                   list_reduce(list(dt.dq ORDER BY dt.s),
-                               (x, y) -> x + y) AS adc_dist
-            FROM codes c JOIN dt ON c.s = dt.s AND c.k = dt.k
-            WHERE c.vec_id != dt.query_id
-            GROUP BY dt.query_id, c.vec_id
-        )
-        SELECT query_id, neighbor_id, adc_dist, rk FROM (
-            SELECT query_id, neighbor_id, adc_dist,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY adc_dist ASC,
-                                               neighbor_id ASC) AS rk
-            FROM scored
-        ) WHERE rk <= {TOP_K}
-    """
-
-
-# teaching dial (trained=False): the literal-codebook ADC chain
-# stays available for the untrained path's tests/tools (not a
-# registry key — the registered query is the trained default)
-UNTRAINED_PQ_ADC_SQL = _pq_adc_oracle_sql()
-
-
 def _pq_trained_parts(src: str = "v", cb: str = "cb") -> list[str]:
     """Shared CTE chain for the trained-PQ oracles, through the
     trained codebook relation ``cb(s, k, cvec)``: per-subspace Lloyd

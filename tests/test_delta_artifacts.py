@@ -82,8 +82,9 @@ class TestNgramPairsDelta:
     ):
         base_dir, delta = self._split(spark, sf_dir, tmp_path)
         fp_full = A.corpus_fingerprint(sf_dir, "documents")
-        D.ngram_pairs_apply_delta(
-            spark, base_dir, delta, publish_fingerprint=fp_full
+        A.publish(
+            spark, "ngram_jaccard_pairs", fp_full,
+            D.ngram_pairs_apply_delta(spark, base_dir, delta),
         ).collect()
         A.ARTIFACT_EVENTS.clear()
         A.clear_session_state()
@@ -132,8 +133,9 @@ class TestTriangleCreditsDelta:
     ):
         base_dir, delta = self._split(spark, sf_dir, tmp_path)
         fp_full = A.corpus_fingerprint(sf_dir, "lineitem")
-        G.triangle_credits_apply_delta(
-            spark, base_dir, delta, publish_fingerprint=fp_full
+        A.publish(
+            spark, "triangle_credits", fp_full,
+            G.triangle_credits_apply_delta(spark, base_dir, delta),
         ).collect()
         A.ARTIFACT_EVENTS.clear()
         A.clear_session_state()
@@ -231,10 +233,15 @@ class TestSpanArtifactsDelta:
         self._fresh()
         base_dir, delta = self._split(spark, sf_dir, tmp_path)
         fp_full = A.corpus_fingerprint(sf_dir, "documents")
-        p, s = D.span_artifacts_apply_delta(
-            spark, base_dir, delta, publish_fingerprint=fp_full
+        kinds = (
+            "span_profile", "span_dup_stats",
+            "doc_span_index", "span_hash_index",
         )
-        p.collect(), s.collect()
+        frames = D.span_artifacts_apply_delta(
+            spark, base_dir, delta, return_indexes=True
+        )
+        for kind, df in zip(kinds, frames):
+            A.publish(spark, kind, fp_full, df).collect()
         self._fresh()
         A.ARTIFACT_EVENTS.clear()
         D.dedup_substring_spans(spark, sf_dir).collect()
@@ -469,8 +476,9 @@ class TestClusterVerdictsDelta:
         os.makedirs(base_dir, exist_ok=True)
         base.write.parquet(os.path.join(base_dir, "documents.parquet"))
         fp_full = A.corpus_fingerprint(sf_dir, "documents")
-        D.cluster_verdicts_apply_delta(
-            spark, base_dir, delta, publish_fingerprint=fp_full
+        A.publish(
+            spark, "cluster_labels", fp_full,
+            D.cluster_verdicts_apply_delta(spark, base_dir, delta),
         ).collect()
         A.clear_session_state()
         A.ARTIFACT_EVENTS.clear()

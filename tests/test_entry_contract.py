@@ -4,6 +4,9 @@ present) matches via the same compare the driver uses."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import duckdb
 import pytest
 
@@ -22,6 +25,24 @@ def test_oracle_keys_subset_of_queries():
     qs = entrymod.queries()
     extra = set(entrymod.oracle_sql()) - set(qs)
     assert not extra, f"oracle_sql keys without queries(): {extra}"
+
+
+def test_every_query_is_documented_in_survey():
+    """Every queries() name appears in backticks in SURVEY.md, the
+    operator survey a reader checks the registry against."""
+    path = os.path.join(os.path.dirname(entrymod.__file__), "SURVEY.md")
+    with open(path) as fh:
+        documented = set(re.findall(r"`([a-z0-9_]+)`", fh.read()))
+    undocumented = sorted(set(entrymod.queries()) - documented)
+    assert not undocumented, f"queries with no SURVEY.md row: {undocumented}"
+
+
+def test_priority_is_a_permutation_of_the_registry():
+    """The driver-sample order covers the whole registry exactly
+    once, so queries() re-orders every query and drops none."""
+    prio = entrymod._R15_PRIORITY
+    assert len(prio) == len(set(prio))
+    assert sorted(prio) == sorted(entrymod._query_registry())
 
 
 @pytest.fixture(scope="module")

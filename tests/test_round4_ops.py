@@ -372,7 +372,7 @@ class TestPqRefineDials:
         for r in similarity_topk(spark, sf_dir).collect():
             exact.setdefault(r["query_id"], set()).add(r["neighbor_id"])
         got: dict[int, set] = {}
-        out = similarity_pq_topk(spark, sf_dir, trained=True, rerank=50)
+        out = similarity_pq_topk(spark, sf_dir, rerank=50)
         assert "cosine" in out.columns  # rerank swaps adc_dist for cosine
         for r in out.collect():
             got.setdefault(r["query_id"], set()).add(r["neighbor_id"])

@@ -6,11 +6,11 @@ lambdas), on the same rows, and the two must agree bit for bit —
 compared through ``float.hex``, so ``-0.0`` differs from ``0.0`` and
 no tolerance hides a changed fold order.
 
-The engine runs with ANSI arithmetic, where a zero norm makes the
-cosine division raise; the value comparisons run with it off, so the
-zero-vector rows compare their NaN cosines, and
-:func:`test_zero_vector_raises_in_both_under_ansi` covers the
-engine's own setting."""
+The engine runs with ANSI arithmetic, where a bare division by a zero
+norm raises; the value comparisons run with it off, so the zero-vector
+rows compare their NULL cosines, and
+:func:`test_zero_vector_scores_null_under_ansi` covers the engine's
+own setting."""
 
 from __future__ import annotations
 
@@ -40,6 +40,10 @@ def ref_norm(a):
 
 def ref_cosine(a, b):
     return ref_dot(a, b) / (ref_norm(a) * ref_norm(b))
+
+
+def ref_cosine_guarded(a, b):
+    return F.try_divide(ref_dot(a, b), ref_norm(a) * ref_norm(b))
 
 
 def ref_l2sq(a, b):
@@ -81,7 +85,7 @@ def assert_kernel_equals_reference_collect(df, kernel, reference):
 # pairs (a, b) over every edge the folds have to agree on
 PAIRS = [
     ([1.0, 2.0, 3.0], [4.0, -5.0, 6.0]),
-    ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # one zero vector: NaN cosine
+    ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # one zero vector: NULL cosine
     ([0.0, 0.0], [0.0, 0.0]),  # two zero vectors
     ([-0.0, 1.0], [0.0, -1.0]),  # signed zeros
     ([-0.0, -0.0], [-0.0, 0.0]),
@@ -170,11 +174,23 @@ class TestPairKernels:
         )
 
 
-def test_zero_vector_raises_in_both_under_ansi(spark):
-    df = spark.createDataFrame([(0, [0.0, 0.0], [1.0, 2.0])], "id int, a array<double>, b array<double>")
-    for col in (V.cosine("a", "b"), ref_cosine("a", "b")):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            df.select(col).collect()
+def test_zero_vector_scores_null_under_ansi(spark):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0], [1.0, 2.0]),
+            (1, [1.0, 2.0], [-0.0, -0.0]),
+            (2, [0.0, 0.0], [0.0, 0.0]),
+            (3, [1.0, 2.0], [3.0, 4.0]),
+        ],
+        "id int, a array<double>, b array<double>",
+    )
+    assert_kernel_equals_reference_collect(
+        df, V.cosine("a", "b"), ref_cosine_guarded("a", "b")
+    )
+    got = {r.id: r.c for r in df.select("id", V.cosine("a", "b").alias("c")).collect()}
+    assert got[0] is got[1] is got[2] is None
+    assert got[3] == pytest.approx(11 / 5 / 5**0.5)
 
 
 def test_as_double(spark):
@@ -275,3 +291,43 @@ def test_ordered_values(spark):
 def test_each_text_parses_once():
     assert V.cosine("qvec", "vec") is V.cosine("qvec", "vec")
     assert V.as_double("embedding") is V.as_double("embedding")
+
+
+def test_zero_norm_embedding_scores_null_in_queries(spark, tmp_path):
+    """A zero-norm embedding neither fails the ANSI engine nor ranks
+    above a real neighbor: its cosines are NULL in the brute-force
+    top-k and the verify drops its pairs. Vector 0 is a zero query
+    and vector 11 a zero corpus vector outside the query set."""
+    from dbt_eamples_spark.operators import dedup, similarity
+
+    rng = random.Random(3)
+    rows = [
+        (i, [0.0] * 8 if i in (0, 11) else [rng.uniform(-1, 1) for _ in range(8)], 0)
+        for i in range(12)
+    ]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, label int"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    top = similarity.similarity_topk(spark, str(tmp_path)).collect()
+    assert {r.query_id for r in top} == set(range(10))
+    assert all((r.cosine is None) == (r.query_id == 0) for r in top)
+
+    v = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 2.0]), (2, [1.0, 2.0])],
+        "vec_id bigint, vec array<double>",
+    )
+    cands = spark.createDataFrame([(0, 1), (1, 2)], "vec_a bigint, vec_b bigint")
+    got = [(r.vec_a, r.vec_b) for r in dedup._cosine_verify(v, cands).collect()]
+    assert got == [(1, 2)]
+
+
+def test_local_top_ranks_null_cosine_last(spark):
+    """The partition-local cut of the two-phase top-k ranks a NULL
+    cosine after every real one, even when its neighbor_id is the
+    smallest, so it cannot displace a real neighbor."""
+    from dbt_eamples_spark.operators import similarity
+
+    rows = [(1, None, 0)] + [(1, 1.0 - i / 10, i) for i in range(1, 7)]
+    df = spark.createDataFrame(rows, "query_id int, cosine double, neighbor_id bigint")
+    (top,) = df.groupBy("query_id").agg(similarity._local_top(5)).collect()
+    assert [t.neighbor_id for t in top.top] == [1, 2, 3, 4, 5]

@@ -1,8 +1,8 @@
 """Generate BENCH_SF1.md ON THE CURRENT TREE, owning the whole file
 (VERDICT r10 #6 — the r8 headline table had gone stale while later
-rounds appended accurate sections below it; the recall_report /
-round_notes lesson applied a third time: a generated artifact must
-be regenerated whole, never hand-extended).
+rounds appended accurate sections below it; the recall_report
+lesson applied again: a generated artifact must be regenerated
+whole, never hand-extended).
 
 What it runs (all against the CURRENT tree — takes ~15 min):
   1. bench.py at the synthesized sf1.0 corpus over the historical
@@ -14,8 +14,8 @@ What it runs (all against the CURRENT tree — takes ~15 min):
   3. assembles the exponent table, the image-family section (first
      possible in r11: the three-modulus fixture horizon), and the
      ngram-delta attribution, stamped with the synthesis version
-     (tools/scale_corpus.py) and the engine tree hash that
-     tools/preflight.py verifies.
+     (tools/scale_corpus.py) and the engine tree hash
+     (tools/treehash.py).
 
 Usage: python tools/bench_sf1_report.py            # writes BENCH_SF1.md
        python tools/bench_sf1_report.py --dry-run  # stdout only
@@ -39,19 +39,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = os.path.join(REPO, ".tmp", "sf1.0")
 SF1_FP = os.path.join(REPO, ".tmp", "sf1.0-fp")
 
-# sf0.1 reference-column stamp: ONE source of truth for the format
-# string and its parsing regex (ADVICE r12 — preflight's 3d-bis
-# decoupling gate and this generator each carried their own copy,
-# and the pytest screen tested a third hand-copied pair, so a format
-# drift would have silently disabled the gate; preflight.py and
-# tests/test_preflight_helpers.py import these).
+# the sf0.1 reference column's provenance line
 SF01_REF_STAMP_FMT = (
     "sf0.1 reference column: BENCH_LOCAL.json total "
     "{total} s, tree `{tree}`."
-)
-SF01_REF_STAMP_RE = (
-    r"sf0\.1 reference column: BENCH_LOCAL\.json total "
-    r"([0-9.]+) s, tree `([0-9a-f]+)`"
 )
 
 # the historical sweep set (r1-shared + slowest tail + round-8/9/10
@@ -546,11 +537,8 @@ def render(
               "run's rows above.")
 
     w("")
-    # provenance of the sf0.1 reference column (round 12: the close
-    # once nearly committed a BENCH_LOCAL.json regenerated AFTER
-    # this report's column was rendered — coherent only because the
-    # close-run file was restored by hand). preflight compares this
-    # stamp against the committed BENCH_LOCAL.json when present.
+    # provenance of the sf0.1 reference column: which BENCH_LOCAL.json
+    # (total and engine tree) the column was rendered from
     w(SF01_REF_STAMP_FMT.format(
         total=sf01["value"], tree=sf01.get("engine_tree")
     ))

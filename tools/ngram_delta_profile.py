@@ -2,12 +2,11 @@
 two-scale DELTA_BENCH measured the family's exponent-vs-delta at
 0.066 (sf0.1) but 0.412 (sf1) — a decade-over-decade step that was
 unattributed. This tool times the delta path's stages separately at
-a given corpus (the tools/minhash_profile.py pattern) so the step
-can be attributed (delta shingle compute vs block-probe join vs
-exact verify vs the delta self-join) instead of guessed, and counts
-the probe's candidate/true-pair output so a fixture-planted dup
-tail (the minhash r10 finding) is distinguishable from real
-probe-side growth.
+a given corpus so the step can be attributed (delta shingle compute
+vs block-probe join vs exact verify vs the delta self-join) instead
+of guessed, and counts the probe's candidate/true-pair output so a
+fixture-planted dup tail (the minhash r10 finding) is
+distinguishable from real probe-side growth.
 
 Base/delta construction replicates tools/delta_bench.py exactly:
 base = doc_id %% 100 >= 8 (92%%), deltas = %% 100 < {2, 8}.

@@ -280,11 +280,12 @@ def main() -> None:
 _PQ_EPILOGUE = """
 ## PQ operating points (tools/pq_recall_study.py, deterministic)
 
-`similarity_pq_topk` DEFAULTS to the trained per-subspace Lloyd
+`similarity_pq_topk` searches with the trained per-subspace Lloyd
 codebooks (round 5; the oracle pins the same fixed-point training
-chain, so trained ADC is fully hash-checked — the md5-seeded literal
-codebook remains as the `trained=False` teaching dial, and its
-static-VALUES oracle survives as `_pq_adc_untrained`). Near-uniform
+chain, so trained ADC is fully hash-checked). The md5-seeded literal
+codebook is kept only by `embedding_pq_encode`; the untrained ADC
+rows below are reference figures for it, not a search path the
+engine still offers. Near-uniform
 fixtures are PQ's PATHOLOGICAL case (no cluster structure for the
 codebooks to capture, so a 12-bit code cannot preserve neighbor
 order). The study shows the dials a deployment turns — training
@@ -294,7 +295,7 @@ more codes, and an ADC-shortlist → exact-rerank refine stage (FAISS
 
 | subvectors | codes | bits | trained | top-5 recall |
 |---|---|---|---|---|
-| 4 | 8 | 12 | no (md5 seed — teaching dial) | 0.06 |
+| 4 | 8 | 12 | no (md5 seed) | 0.06 |
 | 4 | 8 | 12 | yes (SHIPPED default, 2 Lloyd) | 0.24 |
 | 8 | 16 | 32 | yes (4 Lloyd) | 0.22 |
 | 8 | 64 | 48 | yes (4 Lloyd) | 0.38 |
@@ -305,8 +306,8 @@ deterministic, test-locked in tests/test_round4_ops.py):
 
 | operating point | top-5 recall |
 |---|---|
-| untrained ADC (`trained=False` teaching dial) | 0.04 |
-| trained ADC (SHIPPED default of the plain name) | 0.24 |
+| untrained ADC (md5-seeded literal codebook, measured before that search path was removed) | 0.04 |
+| trained ADC (`similarity_pq_topk`) | 0.24 |
 | trained + exact rerank of ADC-shortlist-50 (`rerank=50`, = `similarity_pq_rerank_topk`) | 0.68 |
 | trained + rerank 100 | 0.76 |
 

@@ -1,9 +1,9 @@
 """Content hash of the engine's runtime surface (ADVICE r7 #5 /
-VERDICT r7 #6): evidence artifacts (strict-sweep ledgers, bench
-JSON) stamp this hash at generation time, and tools/preflight.py
-recomputes it at snapshot time — evidence generated against a
-different tree fails the gate. Content-based, so it survives clones
-(file mtimes do not) and sees uncommitted edits (git log does not).
+VERDICT r7 #6): evidence artifacts (bench JSON, the sf1 report,
+perfbench records) stamp this hash at generation time, so a reader
+can tell which tree produced them. Content-based, so it survives
+clones (file mtimes do not) and sees uncommitted edits (git log does
+not).
 """
 
 from __future__ import annotations
