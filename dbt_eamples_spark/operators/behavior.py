@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 # strictly-ordered conversion path; each step must happen strictly
 # after the matched timestamp of the previous step
@@ -260,25 +261,8 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda a: F.transform(
-                        "parts",
-                        lambda b: F.struct(
-                            a.alias("part_a"), b.alias("part_b")
-                        ),
-                    ),
-                )
-            ),
-            lambda s: s["part_a"] < s["part_b"],
-        )
-    )
     support = (
-        baskets.select(pair.alias("p"))
-        .select("p.part_a", "p.part_b")
+        V.self_pairs(baskets, "parts", "part_a", "part_b", "<")
         .groupBy("part_a", "part_b")
         .agg(F.count("*").alias("support"))
     )
@@ -713,23 +697,8 @@ def events_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = pairs_src.groupBy("user_id", "day").agg(
         F.array_sort(F.collect_set("event_type")).alias("types")
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "types",
-                    lambda a: F.transform(
-                        "types",
-                        lambda b: F.struct(a.alias("type_a"), b.alias("type_b")),
-                    ),
-                )
-            ),
-            lambda s: s["type_a"] < s["type_b"],
-        )
-    )
     co = (
-        sets.select(pair.alias("p"))
-        .select("p.type_a", "p.type_b")
+        V.self_pairs(sets, "types", "type_a", "type_b", "<")
         .groupBy("type_a", "type_b")
         .agg(F.count("*").cast("long").alias("n_ab"))
     )
@@ -2034,19 +2003,9 @@ def cross_correlation_over_daily(daily: DataFrame) -> DataFrame:
             F.sum(dec(y) * dec(y)).alias("syy"),
         )
     )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c).cast("double")
-        for c in ("n_days", "sx", "sy", "sxy", "sxx", "syy")
-    )
-    denom = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    return agg.select(
-        "type_a",
-        "type_b",
-        "lag",
-        "n_days",
-        F.when(denom > 0, F.round((n * sxy - sx * sy) / denom, 6)).alias(
-            "xcorr"
-        ),
+    r = V.pearson_sql("n_days", "sx", "sy", "sxy", "sxx", "syy")
+    return V.select(
+        agg, "type_a", "type_b", "lag", "n_days", f"round({r}, 6) AS xcorr"
     ).orderBy("type_a", "type_b", "lag")
 
 
@@ -2269,25 +2228,8 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part")
         .agg(F.count("*").cast("long").alias("supp"))
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda a: F.transform(
-                        "parts",
-                        lambda b: F.struct(
-                            a.alias("part_a"), b.alias("part_b")
-                        ),
-                    ),
-                )
-            ),
-            lambda s: s["part_a"] < s["part_b"],
-        )
-    )
     support = (
-        baskets.select(pair.alias("p"))
-        .select("p.part_a", "p.part_b")
+        V.self_pairs(baskets, "parts", "part_a", "part_b", "<")
         .groupBy("part_a", "part_b")
         .agg(F.count("*").cast("long").alias("support"))
         .filter(F.col("support") >= LIFT_MIN_SUPPORT)

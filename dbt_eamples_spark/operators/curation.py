@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 from dbt_eamples_spark.operators.sampling import sample_stratified
 
 # decontamination n-gram width. 8 word-grams is the published
@@ -38,14 +39,10 @@ def _word_ngrams(df: DataFrame, n: int) -> DataFrame:
     guard as ``dedup._shingles``: tokens materialize in their own
     projection so the regex split runs once per row, not once per
     gram."""
-    tokd = df.select(
-        "doc_id", F.split(F.lower(F.col("text")), r"\s+").alias("toks")
+    tokd = V.select(df, "doc_id", r"split(lower(text), '\\s+') AS toks")
+    return V.select(
+        tokd, "doc_id", f"array_distinct({V.ngrams_sql('toks', n, 'pad')}) AS grams"
     )
-    ids = F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1)))
-    grams = F.array_distinct(
-        F.transform(ids, lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, n)))
-    )
-    return tokd.select("doc_id", grams.alias("grams"))
 
 
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

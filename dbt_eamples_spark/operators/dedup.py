@@ -68,8 +68,7 @@ def _shingles(df: DataFrame, *carry: str) -> DataFrame:
         tokd,
         "doc_id",
         *carry,
-        "array_distinct(transform(sequence(1, greatest(size(toks) - 2, 1)), "
-        "i -> concat_ws(' ', slice(toks, i, 3)))) AS shingles",
+        f"array_distinct({V.ngrams_sql('toks', 3, 'pad')}) AS shingles",
     )
 
 
@@ -1870,12 +1869,7 @@ SPAN_TOKENS = 15  # ≈30% of the fixture's ~50-token docs; 50 at prod
 
 def _span_hashes():
     """md5 of every SPAN_TOKENS-token span of the token array ``t``."""
-    k = SPAN_TOKENS
-    return V.expr(
-        f"CASE WHEN size(t) >= {k} THEN transform(sequence(1, size(t) - {k - 1}), "
-        f"i -> md5(concat_ws(' ', slice(t, i, {k})))) "
-        "ELSE CAST(array() AS array<string>) END"
-    )
+    return V.expr(V.ngrams_sql("t", SPAN_TOKENS, "none", "md5"))
 
 
 def _doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 PAGERANK_ITERS = 3
 PAGERANK_DAMP_PCT = 85  # d = 0.85 as an integer percent
@@ -77,25 +78,7 @@ def _copurchase_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda a: F.transform(
-                        "parts",
-                        lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                    ),
-                )
-            ),
-            lambda s: s["src"] != s["dst"],
-        )
-    )
-    return (
-        baskets.select(pair.alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    return V.self_pairs(baskets, "parts", "src", "dst", "!=").distinct()
 
 
 def pagerank_fixed_point(
@@ -205,23 +188,8 @@ def _copurchase_weighted_edges_build(
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda a: F.transform(
-                        "parts",
-                        lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                    ),
-                )
-            ),
-            lambda s: s["src"] != s["dst"],
-        )
-    )
     return (
-        baskets.select(pair.alias("p"))
-        .select("p.src", "p.dst")
+        V.self_pairs(baskets, "parts", "src", "dst", "!=")
         .groupBy("src", "dst")
         .agg(F.count("*").cast("long").alias("w"))
     )
@@ -594,23 +562,7 @@ def triangle_credits_apply_delta(
     baskets = touched_rows.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "parts",
-                    lambda a: F.transform(
-                        "parts",
-                        lambda b: F.struct(a.alias("src"), b.alias("dst")),
-                    ),
-                )
-            ),
-            lambda s: s["src"] != s["dst"],
-        )
-    )
-    cand_edges = (
-        baskets.select(pair.alias("p")).select("p.src", "p.dst").distinct()
-    )
+    cand_edges = V.self_pairs(baskets, "parts", "src", "dst", "!=").distinct()
     new_edges = cand_edges.join(
         base_edges, ["src", "dst"], "left_anti"
     ).localCheckpoint(eager=True)  # delta-bounded; 3 consumers
@@ -939,36 +891,19 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("k"))
     dist = deg.groupBy("k").agg(F.count("*").cast("long").alias("n_k"))
-    x6 = F.round(F.round(F.log(F.col("k")), 6) * 1e6).cast("decimal(38,0)")
-    y6 = F.round(F.round(F.log(F.col("n_k")), 6) * 1e6).cast("decimal(38,0)")
-    folds = dist.select(
-        x6.alias("x"),
-        y6.alias("y"),
-        F.col("k"),
-        F.col("n_k"),
-    ).agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum("n_k").cast("long").alias("n_nodes"),
-        F.min("k").alias("min_degree"),
-        F.max("k").alias("max_degree"),
+    fit = V.loglog_fit(
+        dist, "k", "n_k",
+        "CAST(sum(n_k) AS BIGINT) AS n_nodes",
+        "min(k) AS min_degree",
+        "max(k) AS max_degree",
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    slope = num / den
-    return folds.select(
-        F.col("n").cast("long").alias("n_degrees"),
+    return V.select(
+        fit,
+        "CAST(n AS BIGINT) AS n_degrees",
         "n_nodes",
         "min_degree",
         "max_degree",
-        F.round(slope, 6).alias("powerlaw_slope"),
+        "round(slope, 6) AS powerlaw_slope",
     )
 
 
@@ -1115,21 +1050,13 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_nodes"),
         F.sum(dec(F.col("k"))).alias("sk"),
     )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c).cast("double")
-        for c in ("n_edges", "sx", "sy", "sxy", "sxx", "syy")
-    )
-    denom = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    return agg.crossJoin(F.broadcast(nodes)).select(
+    r = V.pearson_sql("n_edges", "sx", "sy", "sxy", "sxx", "syy")
+    return V.select(
+        agg.crossJoin(F.broadcast(nodes)),
         "n_edges",
         "n_nodes",
-        F.round(
-            F.col("sk").cast("double") / F.col("n_nodes").cast("double"),
-            6,
-        ).alias("avg_degree"),
-        F.when(denom > 0, F.round((n * sxy - sx * sy) / denom, 6)).alias(
-            "assortativity"
-        ),
+        "round(CAST(sk AS DOUBLE) / CAST(n_nodes AS DOUBLE), 6) AS avg_degree",
+        f"round({r}, 6) AS assortativity",
     )
 
 

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 FEATURE_DIM = 8
 
@@ -616,25 +617,8 @@ def dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.size("ids") >= 2) & (F.size("ids") <= PHASH_BUCKET_CAP)
         )
     )
-    pair = F.explode(
-        F.filter(
-            F.flatten(
-                F.transform(
-                    "ids",
-                    lambda a: F.transform(
-                        "ids",
-                        lambda b: F.struct(
-                            a.alias("doc_a"), b.alias("doc_b")
-                        ),
-                    ),
-                )
-            ),
-            lambda s: s["doc_a"] < s["doc_b"],
-        )
-    )
     cands = (
-        buckets.select(pair.alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        V.self_pairs(buckets, "ids", "doc_a", "doc_b", "<")
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("int").alias("n_bands_shared"))
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 
 # ---------------------------------------------------------------------------
@@ -1346,16 +1347,9 @@ def agg_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dec(x * x)).alias("sxx"),
         F.sum(dec(y * y)).alias("syy"),
     )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c).cast("double") for c in ("n", "sx", "sy", "sxy", "sxx", "syy")
-    )
-    denom = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    return agg.select(
-        "l_returnflag",
-        F.col("n").alias("n_rows"),
-        F.when(denom > 0, F.round((n * sxy - sx * sy) / denom, 6)).alias(
-            "corr_qty_price"
-        ),
+    r = V.pearson_sql("n", "sx", "sy", "sxy", "sxx", "syy")
+    return V.select(
+        agg, "l_returnflag", "n AS n_rows", f"round({r}, 6) AS corr_qty_price"
     )
 
 

@@ -189,8 +189,9 @@ def _ivf_cells(
     """(centroid frame, its collected values) of the ``ncells``-cell
     IVF quantizer over ``emb``: an IVF index is BUILT once and searched
     many times, so the tiny checkpointed frame and the literal arrays
-    the assignment/probe passes consume (see _nearest_cells) are held
-    in the session store per embeddings state."""
+    the assignment/probe passes consume (see
+    :func:`vecsql.nearest_cells`) are held in the session store per
+    embeddings state."""
     from dbt_eamples_spark.artifacts import session_state
 
     def build() -> tuple[DataFrame, list]:
@@ -200,43 +201,6 @@ def _ivf_cells(
     return session_state(
         spark, sf_dir, f"ivf_centroids/{ncells}", ("embeddings",), build
     )
-
-
-def _nearest_cells(vec_col, cents: list, n: int, with_cvec: bool = False):
-    """The n nearest centroids of ``vec_col`` under the exact
-    (cosine DESC, cent_id ASC) total order, as ONE narrow literal
-    expression — an array of cent_ids (or of (cent_id, cvec) structs
-    with ``with_cvec``), replacing the r1–r14 cross-join +
-    row_number-window shape (guide §2.4: the window's corpus×ncells
-    exchange and sort are removable — nearest-centroid is a per-row
-    function of broadcastable model state, so it should cost a map,
-    not a shuffle).
-
-    Value identity: ``array_sort`` over struct(−cosine, cent_id)
-    ranks by the identical total order the window used — negating a
-    double reverses Spark's total order exactly (±0.0 included; the
-    r14 MMR argument), cent_id breaks ties, and the cosine fold vs a
-    literal centroid array is bit-identical to the fold vs the
-    broadcast centroid row; each centroid norm is folded
-    driver-side with the identical left fold
-    (:func:`vecsql.nearest_cells`), so the row expression does not
-    re-fold it per row.
-
-    Plan-size note: each centroid adds one 64-double literal and one
-    cosine fold, and there is no bounded switch to another form —
-    every ncells takes this path. Construction grows with the cell
-    count: 0.53 / 1.41 / 4.04 s at 8 / 64 / 256 cells (2,000
-    vectors, ``local[4]``), against 0.87 / 1.61 / 4.51 s of execution.
-    The guard is open (ROADMAP item 7).
-
-    Consumers MUST route this expression through a Generate
-    (explode/inline), never element_at — an inner-join key built
-    from it otherwise gets an `isnotnull(<whole argmin>)` filter
-    pushed into the scan, evaluating the expression twice per row
-    (the guide §4.4 duplication, expression flavor)."""
-    if not isinstance(vec_col, str):
-        raise TypeError("_nearest_cells takes a column NAME")
-    return V.nearest_cells(vec_col, cents, n, with_cvec)
 
 
 def similarity_ivf_topk(
@@ -259,15 +223,15 @@ def similarity_ivf_topk(
     # nearest-centroid assignment for every vector: a NARROW literal
     # argmin (r15, guide §2.4 — the old cross-join + row_number
     # window shuffled corpus×ncells rows and sorted them to pick a
-    # per-row function of bounded model state; see _nearest_cells
-    # for the total-order identity argument)
+    # per-row function of bounded model state; see
+    # vecsql.nearest_cells for the total-order identity argument)
     _, cents = _ivf_cells(spark, sf_dir, emb, ncells or NCENTROIDS)
     assigned = emb.select(
         "vec_id",
         "vec",
         F.explode(
-            _nearest_cells("vec", cents, 1)
-        ).alias("bucket"),  # Generate, not element_at — see helper
+            V.nearest_cells("vec", cents, 1)
+        ).alias("bucket"),  # Generate, not element_at — see the kernel
     )
 
     # per-query probe list: NPROBE nearest centroids, same narrow form
@@ -278,7 +242,7 @@ def similarity_ivf_topk(
         "query_id",
         "qvec",
         F.explode(
-            _nearest_cells("qvec", cents, NPROBE)
+            V.nearest_cells("qvec", cents, NPROBE)
         ).alias("bucket"),
     )
 
@@ -608,17 +572,13 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
 def probe_key_pairs(tables: int, prefix: str = "p"):
     """Flattened array of (t, bucket) structs over the probe columns
     ``{prefix}0..{prefix}{tables-1}`` — feed to ``F.explode`` to get
-    one join key per probe. Uses a factory per table so the hof
-    lambda stays single-parameter (see _probe_col note) and the
-    table id binds eagerly."""
-
-    def _tagged(t: int):
-        return V.expr(
-            f"transform({prefix}{t}, "
-            f"b -> named_struct('t', {t}, 'bucket', b))"
-        )
-
-    return F.flatten(F.array(*[_tagged(t) for t in range(tables)]))
+    one join key per probe. One SQL text: each table id is a
+    literal in its own transform."""
+    tagged = ", ".join(
+        f"transform({prefix}{t}, b -> named_struct('t', {t}, 'bucket', b))"
+        for t in range(tables)
+    )
+    return V.expr(f"flatten(array({tagged}))")
 
 
 def similarity_lsh_topk(
@@ -945,12 +905,6 @@ def similarity_pq_topk(
     the corpus (recall 0.68 at N=50; registered as
     :func:`similarity_pq_rerank_topk`). With rerank the output
     schema swaps adc_dist for the exact ``cosine``."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", V.as_double("embedding").alias("vec")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
     # VERDICT r14 #6: similarity_pq_topk and
     # similarity_pq_rerank_topk (and rerank_recall_eval through it)
     # each re-ran the identical trained-ADC scan + two-phase cut; the
@@ -964,6 +918,12 @@ def similarity_pq_topk(
         return ranked.filter(F.col("rk") <= TOP_K).select(
             "query_id", "neighbor_id", "adc_dist", "rk"
         )
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", V.as_double("embedding").alias("vec")
+    )
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    )
     return _pq_refine(
         ranked.filter(F.col("rk") <= max(TOP_K, rerank)), q, emb
     )
@@ -1252,7 +1212,7 @@ def embedding_pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the downstream .k / .d extractions read materialized columns —
     # a collapsed projection would substitute each b{s} argmin into
     # BOTH extractions and evaluate it twice per row (the
-    # _nearest_cells note (b), same duplication). The argmin
+    # vecsql.nearest_cells Generate note, same duplication). The argmin
     # expressions are cached SQL-text parses (_pq_best_sql).
     staged = emb.select(
         "vec_id",
@@ -1314,13 +1274,13 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # narrow literal argmin/arg-top-NPROBE instead of the cross-join
     # + window shape (r15, guide §2.4; identity argument at
-    # _nearest_cells)
+    # vecsql.nearest_cells)
     _, cents = _ivf_cells(spark, sf_dir, emb)
     assigned = emb.select(
         "vec_id",
         F.explode(
-            _nearest_cells("vec", cents, 1)
-        ).alias("bucket"),  # Generate, not element_at — see helper
+            V.nearest_cells("vec", cents, 1)
+        ).alias("bucket"),  # Generate, not element_at — see the kernel
     )
     codes = embedding_pq_encode_trained(spark, sf_dir).select(
         "vec_id", *[f"code_{s}" for s in range(PQ_SUBVECTORS)]
@@ -1334,7 +1294,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = q.select(
         "query_id",
         F.explode(
-            _nearest_cells("qvec", cents, NPROBE)
+            V.nearest_cells("qvec", cents, NPROBE)
         ).alias("bucket"),
     )
 
@@ -1437,13 +1397,13 @@ def _residual_frames(spark: SparkSession, sf_dir: str):
     # narrow literal argmin carrying the winning centroid VECTOR
     # (the residual is vec − centroid(cell)); r15 rewrite of the
     # cross-join + window shape — identity argument at
-    # _nearest_cells. inline() = ONE Generate evaluating the argmin
+    # vecsql.nearest_cells. inline() = ONE Generate evaluating the argmin
     # once per row (element_at references would re-evaluate it per
-    # column and under pushed join-key filters — see helper)
+    # column and under pushed join-key filters — see the kernel)
     assigned = emb.select(
         "vec_id",
         "vec",
-        F.inline(_nearest_cells("vec", cents, 1, with_cvec=True)),
+        F.inline(V.nearest_cells("vec", cents, 1, with_cvec=True)),
     ).withColumnsRenamed({"cent_id": "bucket", "cv": "cvec"})
     residuals = assigned.select(
         "vec_id",
@@ -1504,11 +1464,11 @@ def similarity_ivf_pq_residual_topk(
     )
     # narrow literal arg-top-NPROBE with the probed cell's centroid
     # vector carried for the per-cell query residual (r15; identity
-    # argument at _nearest_cells)
+    # argument at vecsql.nearest_cells)
     probes = q.select(
         "query_id",
         F.explode(
-            _nearest_cells("qvec", cents, NPROBE, with_cvec=True)
+            V.nearest_cells("qvec", cents, NPROBE, with_cvec=True)
         ).alias("pc"),
         "qvec",
     ).select(
@@ -2187,19 +2147,15 @@ def embedding_dim_corr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(a), "da")
         .join(F.broadcast(b), "db")
     )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c).cast("double")
-        for c in ("n_v", "sx", "sy", "spq", "sxx", "syy")
-    )
-    denom = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    corr = F.when(denom > 0, (n * sxy - sx * sy) / denom)
+    r = V.pearson_sql("n_v", "sx", "sy", "spq", "sxx", "syy")
     return (
-        mom.select(
-            F.col("da").alias("dim_a"),
-            F.col("db").alias("dim_b"),
-            F.col("n_v").alias("n_vectors"),
-            F.round(corr, 6).alias("dim_corr"),
-            F.round(F.abs(corr), 6).alias("abs_corr"),
+        V.select(
+            mom,
+            "da AS dim_a",
+            "db AS dim_b",
+            "n_v AS n_vectors",
+            f"round({r}, 6) AS dim_corr",
+            f"round(abs({r}), 6) AS abs_corr",
         )
         .orderBy(F.col("abs_corr").desc(), "dim_a", "dim_b")
         .limit(DIM_CORR_TOP_K)
@@ -2837,13 +2793,13 @@ def _assign_cells(vecs: DataFrame, cent: DataFrame) -> DataFrame:
     # rows of persisted model state; collecting it costs one tiny
     # job, versus the cross-join + row_number window that shuffled
     # |vecs|×ncells rows per call (identity argument at
-    # _nearest_cells)
+    # vecsql.nearest_cells)
     cents = _cent_vals(cent)
     return vecs.select(
         "vec_id",
         F.explode(
-            _nearest_cells("vec", cents, 1)
-        ).alias("cell"),  # Generate, not element_at — see helper
+            V.nearest_cells("vec", cents, 1)
+        ).alias("cell"),  # Generate, not element_at — see the kernel
     )
 
 
@@ -3110,12 +3066,12 @@ def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
     # narrow literal arg-top-NPROBE over the persisted quantizer
-    # (r15; identity argument at _nearest_cells)
+    # (r15; identity argument at vecsql.nearest_cells)
     probes = q.select(
         "query_id",
         "qvec",
         F.explode(
-            _nearest_cells("qvec", _cent_vals(cent), NPROBE)
+            V.nearest_cells("qvec", _cent_vals(cent), NPROBE)
         ).alias("bucket"),
     )
     scored = (

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
+from dbt_eamples_spark.operators import vecsql as V
 
 # tiny per-language stopword lists for the n-gram/stopword vote
 # (deterministic heuristic; the fixture's `lang` label is synthetic
@@ -173,16 +174,12 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct("toks")).alias("n_distinct"),
         "toks",
     )
-    big_ids = F.sequence(F.lit(1), F.greatest(F.size("toks") - 1, F.lit(1)))
-    bigrams = base.select(
+    bigrams = V.select(
+        base,
         "doc_id",
         "n_tokens",
         "n_distinct",
-        F.explode_outer(
-            F.transform(
-                big_ids, lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, 2))
-            )
-        ).alias("bg"),
+        f"explode_outer({V.ngrams_sql('toks', 2, 'pad')}) AS bg",
     )
     top = (
         bigrams.groupBy("doc_id", "n_tokens", "n_distinct", "bg")
@@ -242,31 +239,15 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     normd = docs.select("doc_id", norm.alias("norm"))
-    grams = normd.select(
-        "doc_id",
-        F.transform(
-            F.sequence(
-                F.lit(1),
-                F.greatest(F.length("norm") - (WINNOW_K - 1), F.lit(1)),
-            ),
-            lambda i: F.conv(
-                F.substring(F.md5(F.substring(F.col("norm"), i, WINNOW_K)), 1, 15),
-                16,
-                10,
-            ).cast("long"),
-        ).alias("g"),
+    kgram = f"CAST(conv(substring(md5(substring(norm, i, {WINNOW_K})), 1, 15), 16, 10) AS BIGINT)"
+    grams = V.select(
+        normd, "doc_id", f"{V.windows_sql('length(norm)', WINNOW_K, 'pad', kgram)} AS g"
     )
-    winnowed = grams.select(
+    wmin = f"array_min(slice(g, i, {WINNOW_W}))"
+    winnowed = V.select(
+        grams,
         "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("g") - (WINNOW_W - 1), F.lit(1)),
-                ),
-                lambda i: F.array_min(F.slice(F.col("g"), i, WINNOW_W)),
-            )
-        ).alias("fps"),
+        f"array_distinct({V.windows_sql('size(g)', WINNOW_W, 'pad', wmin)}) AS fps",
     )
     # explode_outer, NOT explode: plain explode makes Catalyst infer
     # a size(fps) > 0 filter (InferFiltersFromGenerate) and push it
@@ -654,16 +635,9 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — per-partition heaps of K, never a global sort of the gram
     vocabulary. One shuffle on the gram key."""
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    t = _tokens_col()
-    grams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(" ", F.slice(t, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = V.ngrams_sql(r"split(lower(text), '\\s+')", 2, "none")
     return (
-        docs.select(F.explode(grams).alias("gram"))
+        V.select(docs, f"explode({grams}) AS gram")
         .groupBy("gram")
         .agg(F.count("*").cast("long").alias("n"))
         .orderBy(F.desc("n"), F.asc("gram"))
@@ -709,28 +683,12 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = tf.select(
         F.row_number().over(w).alias("rank"), "freq"
     )
-    x6 = F.round(F.round(F.log(F.col("rank")), 6) * 1e6).cast("decimal(38,0)")
-    y6 = F.round(F.round(F.log(F.col("freq")), 6) * 1e6).cast("decimal(38,0)")
-    folds = ranked.select(
-        x6.alias("x"), y6.alias("y")
-    ).agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    slope = num / den
-    intercept = (
-        F.col("sy").cast("double") / 1e6
-        - slope * (F.col("sx").cast("double") / 1e6)
-    ) / F.col("n").cast("double")
-    return folds.select(
-        F.col("n").cast("long").alias("n_terms"),
-        F.round(slope, 6).alias("zipf_slope"),
-        F.round(intercept, 6).alias("zipf_intercept"),
+    return V.select(
+        V.loglog_fit(ranked, "rank", "freq"),
+        "CAST(n AS BIGINT) AS n_terms",
+        "round(slope, 6) AS zipf_slope",
+        "round((CAST(sy AS DOUBLE) / 1000000.0D - slope * (CAST(sx AS DOUBLE) / 1000000.0D))"
+        " / CAST(n AS DOUBLE), 6) AS zipf_intercept",
     )
 
 

@@ -571,7 +571,8 @@ class TestJobBudgets:
 
     # py4j commands sent while constructing each curation query on a
     # warm session, at fixture scale (measured: 156 / 121 / 92 / 201 /
-    # 462 / 763 / 265). Python's collector also sends py4j commands
+    # 462 / 128 / 265; graph_degree_powerlaw sent 763 while its
+    # log-log fold was built from Column builders). Python's collector also sends py4j commands
     # ("m", release a JVM object) whenever it happens to run; those
     # are not counted.
     CONSTRUCTION_PY4J_CALLS = {
@@ -580,7 +581,7 @@ class TestJobBudgets:
         "embedding_norm_stats": 100,
         "text_token_stats": 220,
         "text_quality_score": 510,
-        "graph_degree_powerlaw": 840,
+        "graph_degree_powerlaw": 140,
         "multimodal_meta": 290,
         # the two LSH-probe queries; with_lsh_probes writes its aliases
         # into the SQL text (measured 1,219 / 775; 1,662 / 998 when it

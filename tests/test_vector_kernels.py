@@ -1,8 +1,9 @@
-"""Differential tests of the SQL-text vector kernels
-(``operators/vecsql.py``): each kernel is evaluated next to a
-reference built with the higher-order-function builders it replaces
-(``F.transform`` / ``F.aggregate`` / ``F.zip_with`` with Python
-lambdas), on the same rows, and the two must agree bit for bit —
+"""Differential tests of the SQL-text kernels (``operators/vecsql.py``):
+each kernel is evaluated next to a reference built with the
+higher-order-function builders it replaces (``F.transform`` /
+``F.aggregate`` / ``F.zip_with`` with Python lambdas, or the Column
+arithmetic of the moment folds), on the same rows, and the two must
+agree bit for bit —
 compared through ``float.hex``, so ``-0.0`` differs from ``0.0`` and
 no tolerance hides a changed fold order.
 
@@ -293,11 +294,32 @@ def test_each_text_parses_once():
     assert V.as_double("embedding") is V.as_double("embedding")
 
 
+def test_nearest_cells_ranks_zero_norm_last_under_ansi(vecs64):
+    """A zero-norm operand has no cosine and does not raise under the
+    engine's ANSI arithmetic: a zero centroid ranks after every real
+    one, and a zero vector (rows 0 and 1) falls to the smallest
+    cent_id — the twins' ``ORDER BY cos DESC, cent_id ASC`` with
+    DuckDB's NULLs last."""
+    cents = [(0, (0.0,) * 64), (3, _lits(300)), (5, _lits(301))]
+    got = {
+        r.id: r.c
+        for r in vecs64.select("id", V.nearest_cells("v", cents, 3).alias("c")).collect()
+    }
+    assert got[0] == got[1] == [0, 3, 5]
+    for i in range(3, 40):
+        assert got[i][-1] == 0, i
+
+
 def test_zero_norm_embedding_scores_null_in_queries(spark, tmp_path):
     """A zero-norm embedding neither fails the ANSI engine nor ranks
     above a real neighbor: its cosines are NULL in the brute-force
-    top-k and the verify drops its pairs. Vector 0 is a zero query
-    and vector 11 a zero corpus vector outside the query set."""
+    top-k and the verify drops its pairs, and the IVF top-k (whose
+    k-means keeps a zero centroid here) matches its DuckDB twin row
+    for row. Vector 0 is a zero query and vector 11 a zero corpus
+    vector outside the query set."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
     from dbt_eamples_spark.operators import dedup, similarity
 
     rng = random.Random(3)
@@ -320,6 +342,19 @@ def test_zero_norm_embedding_scores_null_in_queries(spark, tmp_path):
     got = [(r.vec_a, r.vec_b) for r in dedup._cosine_verify(v, cands).collect()]
     assert got == [(1, 2)]
 
+    ivf = sorted(tuple(r) for r in similarity.similarity_ivf_topk(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}/*.parquet')"
+    )
+    twin = con.execute(
+        "SELECT query_id, neighbor_id, cosine, rk FROM ("
+        f"{entrymod.oracle_sql()['similarity_ivf_topk']})"
+    ).fetchall()
+    assert ivf == sorted(twin)
+    assert {r[0] for r in ivf} == set(range(10))
+
 
 def test_local_top_ranks_null_cosine_last(spark):
     """The partition-local cut of the two-phase top-k ranks a NULL
@@ -331,3 +366,199 @@ def test_local_top_ranks_null_cosine_last(spark):
     df = spark.createDataFrame(rows, "query_id int, cosine double, neighbor_id bigint")
     (top,) = df.groupBy("query_id").agg(similarity._local_top(5)).collect()
     assert [t.neighbor_id for t in top.top] == [1, 2, 3, 4, 5]
+
+
+# ---- array kernels: basket self-pairs, n-gram windows ----------------------
+
+
+def ref_self_pairs(df, arr, a, b, op):
+    cmp = {"<": lambda s: s[a] < s[b], "!=": lambda s: s[a] != s[b]}[op]
+    pair = F.explode(
+        F.filter(
+            F.flatten(
+                F.transform(
+                    arr,
+                    lambda x: F.transform(
+                        arr, lambda y: F.struct(x.alias(a), y.alias(b))
+                    ),
+                )
+            ),
+            cmp,
+        )
+    )
+    return df.select(pair.alias("p")).select(f"p.{a}", f"p.{b}")
+
+
+BASKETS = [[], [7], [1, 2, 3, 5, 8], [4, 9], None]
+
+
+@pytest.mark.parametrize("op", ["<", "!="])
+@pytest.mark.parametrize("basket", BASKETS, ids=["empty", "one", "sorted", "two", "null"])
+def test_self_pairs(spark, basket, op):
+    """Each basket is its own frame, so the kernel's rows line up
+    with the reference's in explode order."""
+    df = spark.createDataFrame([(basket,)], "parts array<bigint>")
+    got = [tuple(r) for r in V.self_pairs(df, "parts", "src", "dst", op).collect()]
+    want = [tuple(r) for r in ref_self_pairs(df, "parts", "src", "dst", op).collect()]
+    assert got == want
+    n = len(basket or [])
+    assert len(got) == (n * (n - 1) // 2 if op == "<" else n * (n - 1))
+
+
+@pytest.fixture(scope="module")
+def token_rows(spark):
+    toks = [[], [""], ["a"], ["a", "b"], ["a", "b", "c"], ["a", "b", "a", "b", "c", "d"], None]
+    return spark.createDataFrame(list(enumerate(toks)), "id int, toks array<string>")
+
+
+def ref_ngrams_pad(n):
+    ids = F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(1)))
+    return F.transform(ids, lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, n)))
+
+
+def ref_ngrams_none(n, fn=lambda g: g):
+    t = F.col("toks")
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: fn(F.concat_ws(" ", F.slice(t, i, n))),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_ngrams_pad(token_rows, n):
+    """Documents shorter than n give their whole span as one gram."""
+    assert_kernel_equals_reference_collect(
+        token_rows, V.expr(V.ngrams_sql("toks", n, "pad")), ref_ngrams_pad(n)
+    )
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_ngrams_none(token_rows, n):
+    """Documents shorter than n give no gram."""
+    assert_kernel_equals_reference_collect(
+        token_rows, V.expr(V.ngrams_sql("toks", n, "none")), ref_ngrams_none(n)
+    )
+
+
+def test_ngrams_md5(token_rows):
+    assert_kernel_equals_reference_collect(
+        token_rows,
+        V.expr(V.ngrams_sql("toks", 3, "none", "md5")),
+        ref_ngrams_none(3, F.md5),
+    )
+
+
+def test_ngrams_over_expression(spark):
+    """The token operand may be an expression, as in text_ngram_topk."""
+    df = spark.createDataFrame(
+        [(0, "A b  c"), (1, "one"), (2, ""), (3, "x Y x y x")], "id int, text string"
+    )
+    t = F.split(F.lower(F.col("text")), r"\s+")
+    ref = F.when(
+        F.size(t) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - 1),
+            lambda i: F.concat_ws(" ", F.slice(t, i, 2)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    assert_kernel_equals_reference_collect(
+        df, V.expr(V.ngrams_sql(r"split(lower(text), '\\s+')", 2, "none")), ref
+    )
+
+
+def test_windows_char_grams_and_minima(spark):
+    """The winnowing fingerprint's two windows: char-k-gram hashes over
+    a string, then window minima over the hash array."""
+    k, w = 4, 3
+    df = spark.createDataFrame(
+        [(0, "abc"), (1, "abcd"), (2, "the quick brown fox"), (3, "")], "id int, norm string"
+    )
+    ref_g = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1))),
+        lambda i: F.conv(
+            F.substring(F.md5(F.substring(F.col("norm"), i, k)), 1, 15), 16, 10
+        ).cast("long"),
+    )
+    body = f"CAST(conv(substring(md5(substring(norm, i, {k})), 1, 15), 16, 10) AS BIGINT)"
+    got_g = V.expr(V.windows_sql("length(norm)", k, "pad", body))
+    assert_kernel_equals_reference_collect(df, got_g, ref_g)
+    g = df.select("id", ref_g.alias("g"))
+    ref_m = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size("g") - (w - 1), F.lit(1))),
+        lambda i: F.array_min(F.slice(F.col("g"), i, w)),
+    )
+    got_m = V.expr(V.windows_sql("size(g)", w, "pad", f"array_min(slice(g, i, {w}))"))
+    assert_kernel_equals_reference_collect(g, got_m, ref_m)
+
+
+# ---- moment kernels: Pearson r, fixed-point log-log slope ------------------
+
+
+def test_pearson(spark):
+    """Groups: correlated, anti-correlated, zero variance in x, zero
+    variance in y, and a single row — the last three have no r."""
+    rows = (
+        [("pos", x, 3 * x + (x % 3)) for x in range(1, 40)]
+        + [("neg", x, 10**7 - x * x) for x in range(1, 30)]
+        + [("flat_x", 5, y) for y in range(10)]
+        + [("flat_y", x, 9) for x in range(10)]
+        + [("one", 2, 3)]
+    )
+    df = spark.createDataFrame(rows, "g string, x bigint, y bigint")
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    x, y = F.col("x"), F.col("y")
+    mom = df.groupBy("g").agg(
+        F.count("*").alias("n"),
+        F.sum(dec(x)).alias("sx"),
+        F.sum(dec(y)).alias("sy"),
+        F.sum(dec(x * y)).alias("sxy"),
+        F.sum(dec(x * x)).alias("sxx"),
+        F.sum(dec(y * y)).alias("syy"),
+    )
+    n, sx, sy, sxy, sxx, syy = (
+        F.col(c).cast("double") for c in ("n", "sx", "sy", "sxy", "sxx", "syy")
+    )
+    denom = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+    ref = F.when(denom > 0, (n * sxy - sx * sy) / denom)
+    kernel = V.expr(V.pearson_sql("n", "sx", "sy", "sxy", "sxx", "syy"))
+    mom = mom.withColumnRenamed("g", "id")
+    assert_kernel_equals_reference_collect(mom, kernel, ref)
+    got = {r.id: r.r for r in mom.select("id", kernel.alias("r")).collect()}
+    assert got["flat_x"] is got["flat_y"] is got["one"] is None
+    assert got["pos"] > 0.99 and got["neg"] < -0.9
+
+
+def ref_loglog_fit(df, x, y):
+    x6 = F.round(F.round(F.log(F.col(x)), 6) * 1e6).cast("decimal(38,0)")
+    y6 = F.round(F.round(F.log(F.col(y)), 6) * 1e6).cast("decimal(38,0)")
+    folds = df.select(x6.alias("x"), y6.alias("y")).agg(
+        F.count("*").cast("decimal(38,0)").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    return folds.select("n", "sx", "sy", "sxy", "sxx", (num / den).alias("slope"))
+
+
+def test_loglog_fit(spark):
+    """A Zipf-shaped frame (rank, freq) and a degree distribution
+    (k, n_k) with an extra aggregate, each against the Column fold."""
+    zipf = spark.createDataFrame(
+        [(r, 10_000 // r + r % 7) for r in range(1, 201)], "rank int, freq bigint"
+    ).repartition(3)
+    degrees = spark.createDataFrame(
+        [(k, max(1, 5000 // (k * k))) for k in range(1, 60)], "k bigint, n_k bigint"
+    ).repartition(3)
+    cols = ["n", "sx", "sy", "sxy", "sxx", "slope"]
+    for df, x, y in ((zipf, "rank", "freq"), (degrees, "k", "n_k")):
+        got = V.loglog_fit(df, x, y, "min(k) AS lo" if x == "k" else "count(*) AS c")
+        (g,) = got.collect()
+        (w,) = ref_loglog_fit(df, x, y).collect()
+        assert [_hex(g[c]) for c in cols] == [_hex(w[c]) for c in cols]
+    assert g["lo"] == 1 and g["slope"] < 0
