@@ -39,9 +39,11 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from dbt_eamples_spark.catalog import (
     file_state,
+    parquet_read_schema,
     read_parquet,
     remember_schema,
     table_path,
@@ -103,10 +105,12 @@ def load_or_build(
     the winner's identical (same-fingerprint) artifact. Hits read the
     parquet back — at scale that read is the bucketed/pruned scan the
     index exists to provide."""
-    return _land(
-        spark, kind, fingerprint,
-        lambda tmp: build().write.mode("overwrite").parquet(tmp),
-    )
+    def write(tmp: str) -> StructType:
+        df = build()
+        df.write.mode("overwrite").parquet(tmp)
+        return parquet_read_schema(df.schema)
+
+    return _land(spark, kind, fingerprint, write)
 
 
 def publish(
@@ -124,31 +128,29 @@ def publish(
     src = getattr(df, "_artifact_generation", None)
     if src is None or src[0] != kind:
         return load_or_build(spark, kind, fingerprint, lambda: df)
-    return _land(
-        spark, kind, fingerprint,
-        lambda tmp: shutil.copytree(
-            artifact_path(*src), tmp, copy_function=os.link
-        ),
+    def link(tmp: str) -> StructType:
+        shutil.copytree(artifact_path(*src), tmp, copy_function=os.link)
         # the links are the source generation's own files, so its
-        # schema is the new generation's: the scan infers nothing
-        schema=df.schema,
-    )
+        # schema is the new generation's
+        return df.schema
+
+    return _land(spark, kind, fingerprint, link)
 
 
-def _land(
-    spark: SparkSession, kind: str, fingerprint: str, write, schema=None
-) -> DataFrame:
+def _land(spark: SparkSession, kind: str, fingerprint: str, write) -> DataFrame:
     """The publish-by-rename contract shared by :func:`load_or_build`
     and :func:`publish`: reuse a complete artifact, else ``write(tmp)``
-    a temp sibling and rename it into place. A caller that knows the
-    landed files' ``schema`` passes it so the scan does not infer it."""
+    a temp sibling and rename it into place. ``write`` returns the
+    schema a read of the files it landed infers, which is remembered
+    for them, so the scan of a fresh generation runs no inference
+    job."""
     path = artifact_path(kind, fingerprint)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         ARTIFACT_EVENTS.append((kind, "reuse"))
         _manifest_touch(kind, fingerprint, built=False)
         return _scan(spark, kind, fingerprint)
     tmp = f"{path}.build.{os.getpid()}.{time.time_ns()}"
-    write(tmp)
+    schema = write(tmp)
     published = True
     try:
         os.rename(tmp, path)
@@ -160,7 +162,7 @@ def _land(
         published = False
     ARTIFACT_EVENTS.append((kind, "build" if published else "reuse"))
     _manifest_touch(kind, fingerprint, built=published)
-    if published and schema is not None:
+    if published:
         remember_schema(spark, path, schema)
     return _scan(spark, kind, fingerprint)
 
@@ -320,6 +322,20 @@ def session_artifact(
         return keep(load_or_build_bucketed(spark, kind, fp, bucket_key, build))
 
     return _remember(spark, sf_dir, kind, tables, make)
+
+
+def seed_session_state(
+    spark: SparkSession, sf_dir: str, name: str, fingerprint: str, value
+) -> None:
+    """Hold ``value`` as :func:`session_state`'s ``name`` entry for the
+    source tables' state ``fingerprint`` (:func:`corpus_fingerprint`),
+    for a caller that knows that state's value without building it.
+    A use at that state is a hit; a use at any other state rebuilds."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    held = _SESSION.get(key)
+    if held is not None and held[1] is not value:
+        _release(held[1])
+    _SESSION[key] = (fingerprint, value)
 
 
 def _remember(spark: SparkSession, sf_dir: str, name: str, tables, make):

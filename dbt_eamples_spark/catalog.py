@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 TABLES = (
     "region",
@@ -98,7 +98,8 @@ def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
     """Record ``schema`` as what inference returns for ``path``'s
     current file state, evicting the path's superseded states. For
     callers that already hold the schema of exactly these files (a
-    generation republished by hard link)."""
+    generation republished by hard link, or files Spark just wrote:
+    :func:`parquet_read_schema`)."""
     key = _schema_key(spark, path)
     if key is not None:
         _remember(key, schema)
@@ -108,6 +109,27 @@ def _remember(key: tuple, schema: StructType) -> None:
     for k in [k for k in _PARQUET_SCHEMAS if k[:2] == key[:2]]:
         del _PARQUET_SCHEMAS[k]
     _PARQUET_SCHEMAS[key] = schema
+
+
+def parquet_read_schema(schema: StructType) -> StructType:
+    """The schema a parquet read infers for files Spark wrote from a
+    frame of ``schema``: Spark keeps its own schema in the footer and
+    reads it back with every field, array element and map value
+    nullable."""
+    return _as_nullable(schema)
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -676,42 +676,35 @@ def lsh_candidate_pairs(
 def _base_keys(keyed: DataFrame, tables: int, id_alias: str) -> DataFrame:
     """(id_alias, t, bucket): one row per table, bucket = element 1 of
     the probe array ``p{t}`` — the base (no-flip) key."""
-    return keyed.select(
-        F.col("vec_id").alias(id_alias),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        F.element_at(f"p{t}", 1).alias("bucket"),
-                    )
-                    for t in range(tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select(id_alias, "tb.t", "tb.bucket")
+    keys = ", ".join(
+        f"named_struct('t', {t}, 'bucket', element_at(p{t}, 1))"
+        for t in range(tables)
+    )
+    return V.select(keyed, f"vec_id AS {id_alias}", f"inline(array({keys}))")
 
 
 def _probe_pairs(keyed: DataFrame, tables: int) -> DataFrame:
     """Distinct (vec_a < vec_b) pairs of a keyed frame: base keys of
     one side equi-joined to every probe key of the other."""
-    from dbt_eamples_spark.operators.similarity import probe_key_pairs
+    from dbt_eamples_spark.operators.similarity import probe_key_pairs_sql
 
-    kb = keyed.select(
-        F.col("vec_id").alias("vec_b"),
-        F.explode(probe_key_pairs(tables)).alias("tb"),
-    ).select("vec_b", "tb.t", "tb.bucket")
-    return (
+    kb = V.select(keyed, "vec_id AS vec_b", f"inline({probe_key_pairs_sql(tables)})")
+    return V.select(
         _base_keys(keyed, tables, "vec_a")
         .join(kb, ["t", "bucket"])
-        .filter(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            F.least("vec_a", "vec_b").alias("pa"),
-            F.greatest("vec_a", "vec_b").alias("pb"),
-        )
-        .select(F.col("pa").alias("vec_a"), F.col("pb").alias("vec_b"))
-        .distinct()
-    )
+        .where("vec_a != vec_b"),
+        "least(vec_a, vec_b) AS vec_a",
+        "greatest(vec_a, vec_b) AS vec_b",
+    ).distinct()
+
+
+# the exact-cosine verify of a candidate pair, over the a-side vector
+# and norm (va, na) and the b-side's (vb, nb): the same float ops in
+# the same order as the oracle's dot/(na*nb)
+_VERIFY_COSINE_SQL = (
+    f"round(try_divide({V.dot_sql('va', 'vb')}, na * nb), 6) AS cosine"
+)
+_VERIFY_KEEP_SQL = f"cosine >= {COSINE_NEAR_DUP!r}D"
 
 
 def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
@@ -719,43 +712,27 @@ def _cosine_verify(v: DataFrame, cands: DataFrame) -> DataFrame:
     over ``v(vec_id, vec)``: (vec_a, vec_b, cosine) with cosine ≥
     COSINE_NEAR_DUP."""
     ids = (
-        cands.select(F.col("vec_a").alias("vec_id"))
-        .union(cands.select(F.col("vec_b").alias("vec_id")))
+        V.select(cands, "vec_a AS vec_id")
+        .union(V.select(cands, "vec_b AS vec_id"))
         .distinct()
     )
     # norms once per vector on the (small) broadcast side — the
-    # per-pair verify then pays a single 64-element fold; same float
-    # ops in the same order as the oracle's dot/(na*nb)
-    nrm = V.norm("vec")
-    cand_vecs = v.join(F.broadcast(ids), "vec_id").select(
-        "vec_id", "vec", nrm.alias("nrm")
+    # per-pair verify then pays a single 64-element fold
+    cand_vecs = V.select(
+        v.join(F.broadcast(ids), "vec_id"),
+        "vec_id", "vec", f"{V.norm_sql('vec')} AS nrm",
     )
-    a = cand_vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = cand_vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    dot = V.dot("va", "vb")
+    a = V.select(cand_vecs, "vec_id AS vec_a", "vec AS va", "nrm AS na")
+    b = V.select(cand_vecs, "vec_id AS vec_b", "vec AS vb", "nrm AS nb")
     # Catalyst substitutes the cosine alias into the filter and pushes
     # it into the join condition — benign here (unlike the
     # CollapseProject pitfall at `_shingles`): the fold runs once per
     # candidate in the join condition and is re-evaluated only for
     # the few rows that pass the threshold.
-    return (
-        cands.join(F.broadcast(a), "vec_a")
-        .join(F.broadcast(b), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                F.try_divide(dot, F.col("na") * F.col("nb")), 6
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= COSINE_NEAR_DUP)
-    )
+    return V.select(
+        cands.join(F.broadcast(a), "vec_a").join(F.broadcast(b), "vec_b"),
+        "vec_a", "vec_b", _VERIFY_COSINE_SQL,
+    ).where(_VERIFY_KEEP_SQL)
 
 
 def dedup_embedding_cosine(
@@ -800,10 +777,10 @@ def dedup_embedding_cosine(
         lsh_planes,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
-    v = emb.select(
+    v = V.select(
+        load_table(spark, sf_dir, "embeddings", parallelize=True),
         "vec_id",
-        V.as_double("embedding").alias("vec"),
+        f"{V.as_double_sql('embedding')} AS vec",
     )
     # Blocking stage (lsh_candidate_pairs): one dot pass — the probe
     # columns carry base bucket + flips and both join sides project
@@ -2465,8 +2442,10 @@ def cosine_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
     def build() -> DataFrame:
-        corpus = _standing_vecs(spark, sf_dir)
-        return _cosine_index_rows(corpus, lsh_planes(corpus.count()))
+        return _cosine_index_rows(
+            _standing_vecs(spark, sf_dir),
+            lsh_planes(standing_count(spark, sf_dir)),
+        )
 
     return load_or_build(
         spark,
@@ -2476,11 +2455,15 @@ def cosine_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _standing_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _standing_vecs(
+    spark: SparkSession, sf_dir: str, parallelize: bool = True
+) -> DataFrame:
     """(vec_id, vec) of the standing corpus, the rows the index holds."""
-    return load_table(spark, sf_dir, "embeddings", parallelize=True).select(
-        "vec_id", V.as_double("embedding").alias("vec")
-    ).filter(F.col("vec_id") % INCR_MOD != 0)
+    return V.select(
+        load_table(spark, sf_dir, "embeddings", parallelize=parallelize),
+        "vec_id",
+        f"{V.as_double_sql('embedding')} AS vec",
+    ).where(f"vec_id % {INCR_MOD} != 0")
 
 
 def _cosine_index_rows(corpus: DataFrame, nplanes: int) -> DataFrame:
@@ -2496,12 +2479,30 @@ def _cosine_index_rows(corpus: DataFrame, nplanes: int) -> DataFrame:
 
 def standing_count(spark: SparkSession, sf_dir: str) -> int:
     """Standing-corpus row count, which sizes ``lsh_planes`` — on the
-    RAW scan: no repartition shuffle for a scalar (r15)."""
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % INCR_MOD != 0)
-        .count()
+    RAW scan: no repartition shuffle for a scalar (r15). Held in the
+    session store for the table's current state, which
+    :func:`carry_standing_count` can seed without a scan."""
+    from dbt_eamples_spark.artifacts import session_state
+
+    return session_state(
+        spark, sf_dir, "standing_count", ("embeddings",),
+        lambda: load_table(spark, sf_dir, "embeddings")
+        .where(f"vec_id % {INCR_MOD} != 0")
+        .count(),
     )
+
+
+def carry_standing_count(
+    spark: SparkSession, sf_dir: str, fingerprint: str, n: int
+) -> None:
+    """Record ``n`` as :func:`standing_count` of the embeddings state
+    ``fingerprint`` (:func:`~dbt_eamples_spark.artifacts.corpus_fingerprint`):
+    an append that knows the standing rows it added knows the grown
+    count exactly. Any other rewrite of the table changes the
+    fingerprint, so the next call counts again."""
+    from dbt_eamples_spark.artifacts import seed_session_state
+
+    seed_session_state(spark, sf_dir, "standing_count", fingerprint, n)
 
 
 def cosine_delta_keys(vecs: DataFrame, nplanes: int) -> DataFrame:
@@ -2509,8 +2510,8 @@ def cosine_delta_keys(vecs: DataFrame, nplanes: int) -> DataFrame:
     ``p0..p{DEDUP_LSH_TABLES-1}`` at ``nplanes`` — the ONE keying of
     an embeddings delta. Element 1 of each array is the base bucket
     the index stores, the whole array the probe into it; so one
-    pinned keyed frame feeds the index append, the delta×base probe
-    and the delta×delta pairs."""
+    pinned keyed frame feeds the index append and both legs of
+    :func:`cosine_delta_pairs`."""
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
         DEDUP_PROBE_FLIPS,
@@ -2522,53 +2523,33 @@ def cosine_delta_keys(vecs: DataFrame, nplanes: int) -> DataFrame:
     )
 
 
-def cosine_base_index_apply_delta(
-    spark: SparkSession,
-    sf_dir: str,
-    delta_embeddings: DataFrame,
+def _cosine_index_delta(
+    spark: SparkSession, sf_dir: str, keyed: DataFrame, base_n: int,
+    delta_n: int,
 ) -> DataFrame:
-    """Delta-maintain the persisted hyperplane bucket index (round
-    10 — the last persisted index without a delta path): plane-dot
-    the ``delta_embeddings`` (vec_id, embedding) ONLY and append,
-    filtered with the same %INCR_MOD corpus convention the
-    from-scratch build applies (the ADVICE-r9 fingerprint→content
-    invariant). A thin wrapper over :func:`_cosine_index_delta`.
+    """Delta-maintain the persisted hyperplane bucket index: the
+    merged index for a delta keyed at ``lsh_planes(base_n)``
+    (:func:`cosine_delta_keys`); ``base_n`` / ``delta_n`` count the
+    standing rows of the corpus / of the delta. The delta's base keys
+    are appended, filtered with the same %INCR_MOD corpus convention
+    the from-scratch build applies (the fingerprint→content
+    invariant).
 
     RESIZE RULE: ``lsh_planes`` is sized by corpus count, so an
     append that pushes the corpus across a plane-count step CANNOT
     be expressed as an append — the bucket ids of every existing row
     change. When ``lsh_planes(base+delta) != lsh_planes(base)`` the
-    function rebuilds the whole index at the new plane count (the
-    FAISS-retrain analogue of an index resize: rare — plane steps
-    are ×2 in corpus size — and detected exactly, never silently
-    wrong). Both paths are pytest-locked row-identical to a
-    from-scratch build over the union."""
-    from dbt_eamples_spark.operators.similarity import lsh_planes
-
-    base_n = standing_count(spark, sf_dir)
-    keyed = cosine_delta_keys(
-        delta_embeddings.select(
-            "vec_id", V.as_double("embedding").alias("vec")
-        ),
-        lsh_planes(base_n),
-    )
-    delta_n = keyed.filter(F.col("vec_id") % INCR_MOD != 0).count()
-    return _cosine_index_delta(spark, sf_dir, keyed, base_n, delta_n)
-
-
-def _cosine_index_delta(
-    spark: SparkSession, sf_dir: str, keyed: DataFrame, base_n: int,
-    delta_n: int,
-) -> DataFrame:
-    """The merged index for a delta keyed at ``lsh_planes(base_n)``;
-    ``base_n`` / ``delta_n`` count the standing rows of the corpus /
-    of the delta."""
+    whole index is rebuilt at the new plane count (the FAISS-retrain
+    analogue of an index resize: rare — plane steps are ×2 in corpus
+    size — and detected exactly, never silently wrong). Both paths
+    are pytest-locked row-identical to a from-scratch build over the
+    union."""
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
         lsh_planes,
     )
 
-    d = keyed.filter(F.col("vec_id") % INCR_MOD != 0)
+    d = keyed.where(f"vec_id % {INCR_MOD} != 0")
     np_union = lsh_planes(base_n + delta_n)
     if np_union == lsh_planes(base_n):
         return cosine_base_index(spark, sf_dir).unionByName(
@@ -2600,80 +2581,82 @@ def dedup_incremental_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold and float contract as dedup_embedding_cosine."""
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
-    emb = load_table(
-        spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", V.as_double("embedding").alias("vec"))
+    delta = V.select(
+        load_table(spark, sf_dir, "embeddings", parallelize=True),
+        "vec_id",
+        f"{V.as_double_sql('embedding')} AS vec",
+    ).where(f"vec_id % {INCR_MOD} = 0")
     np_ = lsh_planes(standing_count(spark, sf_dir))  # index-build param
-    delta = emb.filter(F.col("vec_id") % INCR_MOD == 0)
-    return _cosine_delta_vs_base(spark, sf_dir, cosine_delta_keys(delta, np_))
+    return _base_leg(
+        cosine_delta_pairs(
+            spark, sf_dir, cosine_delta_keys(delta, np_), within=False
+        )
+    )
 
 
-def _cosine_delta_vs_base(
-    spark: SparkSession, sf_dir: str, keyed: DataFrame
+def cosine_delta_pairs(
+    spark: SparkSession, sf_dir: str, keyed: DataFrame, *,
+    within: bool = True,
 ) -> DataFrame:
-    """The delta×base probe shared by :func:`dedup_incremental_cosine`
-    (delta = the table's %INCR_MOD convention rows),
-    :func:`cosine_pairs_delta_new` and the ingest loop (delta = a
-    not-yet-appended batch), keyed by :func:`cosine_delta_keys` at
-    the index's plane count. The a-side verify vectors are drawn
-    from the delta (NOT the table — an ingest batch is probed before
-    its append), the b-side from the persisted index's standing
-    corpus. Same float expressions in the same order as the
-    pre-refactor inline body, so the driver-checked hash contract of
-    dedup_incremental_cosine is unchanged."""
+    """The near-dup probe of a delta keyed by :func:`cosine_delta_keys`
+    at the index's plane count, as ONE plan: the verified pairs
+    (leg, vec_a, vec_b, cosine), cosine ≥ COSINE_NEAR_DUP.
+
+    The delta's probe keys join the persisted :func:`cosine_base_index`
+    base keys (leg ``'base'``: vec_a the delta vector, vec_b the
+    corpus vector) together with, when ``within``, the delta's own
+    base keys (leg ``'within'``: both ends in the delta, canonical
+    vec_a < vec_b); one ``distinct`` dedupes both. The a-side of every
+    pair is a delta vector; the b-side is looked up in the standing
+    corpus ∪ the delta, which are disjoint — an ingest batch is
+    anti-joined against the corpus, and the convention delta is the
+    %INCR_MOD class the standing corpus leaves out. So a batch is
+    probed before its append, and the frame must be evaluated before
+    it. The candidates appear once in the plan: they are broadcast
+    into the b-side lookup instead of being pinned, so probing a
+    batch costs one action and no eager job. The verify is
+    dedup_embedding_cosine's float expression, in the same order."""
     from dbt_eamples_spark.operators.similarity import (
         DEDUP_LSH_TABLES,
-        probe_key_pairs,
+        probe_key_pairs_sql,
     )
 
-    emb = load_table(
-        spark, sf_dir, "embeddings", parallelize=True
-    ).select("vec_id", V.as_double("embedding").alias("vec"))
-    probe = keyed.select(
-        F.col("vec_id").alias("new_vec"),
-        F.explode(probe_key_pairs(DEDUP_LSH_TABLES)).alias("tb"),
-    ).select("new_vec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
-    index = cosine_base_index(spark, sf_dir)
-    cands = (
-        probe.join(index, ["t", "bucket"])
-        .select("new_vec", "corpus_vec")
-        .distinct()
-        .localCheckpoint(eager=True)
+    probe = V.select(
+        keyed, "vec_id AS vec_a", f"inline({probe_key_pairs_sql(DEDUP_LSH_TABLES)})"
     )
-    nrm = V.norm("vec")
-    # a-side vectors from the DELTA frame (for an ingest batch they
-    # are not in the table yet); b-side from the table — same rows /
-    # same float fold either way for the convention delta
-    a = keyed.join(
-        F.broadcast(cands.select(F.col("new_vec").alias("vec_id")).distinct()),
-        "vec_id",
-    ).select(
-        F.col("vec_id").alias("new_vec"),
-        F.col("vec").alias("va"),
-        nrm.alias("na"),
+    keys = V.select(
+        cosine_base_index(spark, sf_dir),
+        "'base' AS leg", "corpus_vec AS vec_b", "t", "bucket",
     )
-    b = emb.join(
-        F.broadcast(
-            cands.select(F.col("corpus_vec").alias("vec_id")).distinct()
+    vecs = _standing_vecs(spark, sf_dir, parallelize=False)
+    if within:
+        keys = keys.unionByName(V.select(
+            _base_keys(keyed, DEDUP_LSH_TABLES, "vec_b"),
+            "'within' AS leg", "vec_b", "t", "bucket",
+        ))
+        vecs = vecs.unionByName(keyed.select("vec_id", "vec"))
+    cands = V.select(
+        probe.join(keys, ["t", "bucket"]).where(
+            "leg = 'base' OR vec_a != vec_b"
         ),
-        "vec_id",
-    ).select(
-        F.col("vec_id").alias("corpus_vec"),
-        F.col("vec").alias("vb"),
-        nrm.alias("nb"),
-    )
-    dot = V.dot("va", "vb")
-    return (
-        cands.join(F.broadcast(a), "new_vec")
-        .join(F.broadcast(b), "corpus_vec")
-        .select(
-            "new_vec",
-            "corpus_vec",
-            F.round(
-                F.try_divide(dot, F.col("na") * F.col("nb")), 6
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= COSINE_NEAR_DUP)
+        "leg",
+        "IF(leg = 'base', vec_a, least(vec_a, vec_b)) AS vec_a",
+        "IF(leg = 'base', vec_b, greatest(vec_a, vec_b)) AS vec_b",
+    ).distinct()
+    # norms once per vector, before the joins
+    nrm = V.norm_sql("vec")
+    a = V.select(keyed, "vec_id AS vec_a", "vec AS va", f"{nrm} AS na")
+    b = V.select(vecs, "vec_id AS vec_b", "vec AS vb", f"{nrm} AS nb")
+    return V.select(
+        b.join(F.broadcast(cands), "vec_b").join(F.broadcast(a), "vec_a"),
+        "leg", "vec_a", "vec_b", _VERIFY_COSINE_SQL,
+    ).where(_VERIFY_KEEP_SQL)
+
+
+def _base_leg(pairs: DataFrame) -> DataFrame:
+    """The (new_vec, corpus_vec, cosine) rows of a base-leg probe."""
+    return V.select(
+        pairs, "vec_a AS new_vec", "vec_b AS corpus_vec", "cosine"
     )
 
 
@@ -2691,14 +2674,13 @@ def cosine_pairs_delta_new(
     ``lsh_planes`` of the standing convention-base count); exact
     cosine verifies candidates only. Output (new_vec, corpus_vec,
     cosine) — :func:`dedup_incremental_cosine`'s contract
-    generalized to an arbitrary delta frame. Within-batch pairs are
-    the separate :func:`cosine_pairs_delta_within` leg (different
-    schema: both sides new). Same new-ids-only contract (and
+    generalized to an arbitrary delta frame; the base leg of
+    :func:`cosine_delta_pairs`. Same new-ids-only contract (and
     ValueError guard) as :func:`ngram_pairs_apply_delta`."""
     from dbt_eamples_spark.operators.similarity import lsh_planes
 
-    d = delta_embeddings.select(
-        "vec_id", V.as_double("embedding").alias("vec")
+    d = V.select(
+        delta_embeddings, "vec_id", f"{V.as_double_sql('embedding')} AS vec"
     )
     if not assume_new_ids:
         overlap = (
@@ -2717,30 +2699,4 @@ def cosine_pairs_delta_new(
     # pinned: delta-sized; probed and verified against the PRE-append
     # corpus state, must survive the append
     keyed = cosine_delta_keys(d, np_).localCheckpoint(eager=True)
-    return _cosine_delta_vs_base(spark, sf_dir, keyed)
-
-
-def cosine_pairs_delta_within(
-    spark: SparkSession, delta_embeddings: DataFrame, nplanes: int
-) -> DataFrame:
-    """LSH self-pairs WITHIN an ingest batch — the delta x delta leg
-    of the embedding ingest probe (delta x base being
-    :func:`cosine_pairs_delta_new`): :func:`lsh_candidate_pairs`
-    blocking over the batch alone, then dedup_embedding_cosine's
-    exact-cosine verify. Output (vec_a, vec_b, cosine), vec_a <
-    vec_b. Cost is batch-sized (plane dots) + collision-bounded
-    (verify), never corpus-touching."""
-    v = delta_embeddings.select(
-        "vec_id", V.as_double("embedding").alias("vec")
-    )
-    return _cosine_delta_within(
-        cosine_delta_keys(v, nplanes).localCheckpoint(eager=True)
-    )
-
-
-def _cosine_delta_within(keyed: DataFrame) -> DataFrame:
-    """Verified within-delta pairs of a PINNED keyed delta frame."""
-    from dbt_eamples_spark.operators.similarity import DEDUP_LSH_TABLES
-
-    cands = _probe_pairs(keyed, DEDUP_LSH_TABLES)
-    return _cosine_verify(keyed, cands.localCheckpoint(eager=True))
+    return _base_leg(cosine_delta_pairs(spark, sf_dir, keyed, within=False))

@@ -569,16 +569,22 @@ def with_lsh_probes(df: DataFrame, vec_col: str, tables: int, flips: int,
     return dots.select(*df.columns, *[_probe_col(t) for t in range(tables)])
 
 
-def probe_key_pairs(tables: int, prefix: str = "p"):
+def probe_key_pairs_sql(tables: int, prefix: str = "p") -> str:
     """Flattened array of (t, bucket) structs over the probe columns
-    ``{prefix}0..{prefix}{tables-1}`` — feed to ``F.explode`` to get
-    one join key per probe. One SQL text: each table id is a
-    literal in its own transform."""
+    ``{prefix}0..{prefix}{tables-1}`` — feed to ``explode`` (or
+    ``inline``, for the t and bucket columns directly) to get one
+    join key per probe. Each table id is a literal in its own
+    transform."""
     tagged = ", ".join(
         f"transform({prefix}{t}, b -> named_struct('t', {t}, 'bucket', b))"
         for t in range(tables)
     )
-    return V.expr(f"flatten(array({tagged}))")
+    return f"flatten(array({tagged}))"
+
+
+def probe_key_pairs(tables: int, prefix: str = "p"):
+    """:func:`probe_key_pairs_sql` parsed to a Column."""
+    return V.expr(probe_key_pairs_sql(tables, prefix))
 
 
 def similarity_lsh_topk(

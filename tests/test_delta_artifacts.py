@@ -530,6 +530,21 @@ class TestTriangleCrossoverPolicy:
             G.triangle_credits_apply_delta(spark, base_dir, small)
 
 
+def _cosine_index_delta(spark, base_dir, delta):
+    """The merged cosine_base_index of ``base_dir``'s corpus plus the
+    (vec_id, embedding) ``delta``, keyed the way the ingest loop keys
+    a batch: at the plane count of the standing corpus."""
+    from dbt_eamples_spark.operators.similarity import lsh_planes
+
+    base_n = D.standing_count(spark, base_dir)
+    keyed = D.cosine_delta_keys(
+        delta.select("vec_id", vecsql.as_double("embedding").alias("vec")),
+        lsh_planes(base_n),
+    )
+    delta_n = keyed.filter(F.col("vec_id") % D.INCR_MOD != 0).count()
+    return D._cosine_index_delta(spark, base_dir, keyed, base_n, delta_n)
+
+
 class TestCosineIndexDelta:
     """Round 10: the hyperplane bucket index joins the append family
     — with the resize rule (lsh_planes is corpus-count-sized, so an
@@ -550,9 +565,7 @@ class TestCosineIndexDelta:
         os.makedirs(base_dir, exist_ok=True)
         base.write.parquet(os.path.join(base_dir, "embeddings.parquet"))
         merged = _ctr(
-            D.cosine_base_index_apply_delta(
-                spark, base_dir, delta
-            ).collect()
+            _cosine_index_delta(spark, base_dir, delta).collect()
         )
         full = _ctr(D.cosine_base_index(spark, sf_dir).collect())
         assert merged == full and len(full) > 0
@@ -590,7 +603,7 @@ class TestCosineIndexDelta:
         )
         assert lsh_planes(900) != lsh_planes(1260)  # the step is real
         merged = _ctr(
-            D.cosine_base_index_apply_delta(
+            _cosine_index_delta(
                 spark, base_dir,
                 spark.createDataFrame(delta_rows, schema),
             ).collect()
@@ -601,9 +614,7 @@ class TestCosineIndexDelta:
     def test_empty_delta_identity(self, spark, sf_dir, art_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         merged = _ctr(
-            D.cosine_base_index_apply_delta(
-                spark, sf_dir, emb.limit(0)
-            ).collect()
+            _cosine_index_delta(spark, sf_dir, emb.limit(0)).collect()
         )
         assert merged == _ctr(
             D.cosine_base_index(spark, sf_dir).collect()

@@ -243,7 +243,7 @@ class TestIngestPipeline:
 
 class TestEmbeddingsIngest:
     """The embeddings-side twin (VERDICT r10 #2): same two-phase
-    shape around cosine_base_index_apply_delta, probe ==
+    shape around the cosine_base_index delta, probe ==
     batch-restricted dedup_incremental_cosine."""
 
     def _setup(self, spark, sf_dir, tmp_path):

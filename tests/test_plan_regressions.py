@@ -521,14 +521,21 @@ class TestJobBudgets:
     matter how small its data — so CI locks them."""
 
     # a steady embeddings ingest batch (base artifacts warm) at fixture
-    # scale: the standing corpus counted once; the batch keyed, pinned
-    # and counted once; the two probe legs; the IVF assignment and its
-    # one occupancy collect; the append; two Spark-written publishes
-    # (the unchanged quantizer and occupancy reference are linked).
-    # Reads of files whose schema is already known infer nothing: the
-    # remaining schema inferences are the appended corpus and the two
-    # Spark-written publishes.
-    STEADY_EMBEDDINGS_BATCH_JOBS = 37
+    # scale, measured 18: the batch keyed and pinned (3) and counted
+    # (2); the quantizer's centroid collect (1), the pinned IVF
+    # assignment (1) and its occupancy collect (2); both probe legs in
+    # one action (6: the probe-key broadcast, the candidates' distinct,
+    # the candidate and batch-vector broadcasts, the leg count's
+    # shuffle and its collect); the append (1); two Spark-written
+    # publishes (2; the unchanged quantizer and occupancy reference
+    # are linked). The standing count is carried from the previous
+    # batch, and every schema the loop reads it already knows (the
+    # appended corpus and each publish), so neither runs a job.
+    STEADY_EMBEDDINGS_BATCH_JOBS = 18
+    # the founding batch of the same fixture, which also builds the
+    # base index, the quantizer and the occupancy reference (measured
+    # 42)
+    FOUNDING_EMBEDDINGS_BATCH_JOBS = 46
 
     @staticmethod
     def _jobs(spark, group, fn):
@@ -584,9 +591,11 @@ class TestJobBudgets:
         "graph_degree_powerlaw": 140,
         "multimodal_meta": 290,
         # the two LSH-probe queries; with_lsh_probes writes its aliases
-        # into the SQL text (measured 1,219 / 775; 1,662 / 998 when it
-        # aliased each plane-dot Column)
-        "dedup_embedding_cosine": 1340,
+        # into the SQL text (measured 270 / 775; 1,662 / 998 when it
+        # aliased each plane-dot Column, and dedup_embedding_cosine
+        # 1,219 while its key, pair and verify projections were Column
+        # builders)
+        "dedup_embedding_cosine": 300,
         "similarity_lsh_topk": 855,
     }
 
@@ -652,4 +661,11 @@ class TestJobBudgets:
         assert jobs <= self.STEADY_EMBEDDINGS_BATCH_JOBS, (
             f"steady embeddings batch ran {jobs} Spark jobs (budget "
             f"{self.STEADY_EMBEDDINGS_BATCH_JOBS})"
+        )
+
+    def test_founding_embeddings_batch(self, embeddings_ingest_replay):
+        jobs = embeddings_ingest_replay["jobs"][0]
+        assert jobs <= self.FOUNDING_EMBEDDINGS_BATCH_JOBS, (
+            f"founding embeddings batch ran {jobs} Spark jobs (budget "
+            f"{self.FOUNDING_EMBEDDINGS_BATCH_JOBS})"
         )
