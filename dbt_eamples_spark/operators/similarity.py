@@ -30,7 +30,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_eamples_spark.catalog import load_table
@@ -2788,25 +2790,23 @@ def similarity_rerank_recall_eval(
 IVF_RETRAIN_PSI = 0.25
 
 
+def ivf_cell(cents: list) -> Column:
+    """The ``cell`` of a (vec_id, vec, ...) row: its nearest of the
+    centroid values ``cents`` (:func:`_cent_vals`) — the add() path of
+    a real IVF index. A per-row function of the FROZEN quantizer: a
+    vector's cell never depends on other vectors, which is exactly
+    what makes the incrementally-maintained index row-identical to
+    re-adding the whole corpus against the same quantizer (the pytest
+    lock in tests/test_delta_artifacts.py). A narrow literal argmin
+    (r15; identity argument at vecsql.nearest_cells), consumed
+    through a Generate, not element_at — see the kernel."""
+    return F.explode(V.nearest_cells("vec", cents, 1)).alias("cell")
+
+
 def _assign_cells(vecs: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, cell) nearest-centroid assignment — the add() path
-    of a real IVF index. A per-row function of the FROZEN broadcast
-    centroid set: a vector's cell never depends on other vectors,
-    which is exactly what makes the incrementally-maintained index
-    row-identical to re-adding the whole corpus against the same
-    quantizer (the pytest lock in tests/test_delta_artifacts.py)."""
-    # narrow literal argmin (r15) — the frozen quantizer is ≤ ncells
-    # rows of persisted model state; collecting it costs one tiny
-    # job, versus the cross-join + row_number window that shuffled
-    # |vecs|×ncells rows per call (identity argument at
-    # vecsql.nearest_cells)
-    cents = _cent_vals(cent)
-    return vecs.select(
-        "vec_id",
-        F.explode(
-            V.nearest_cells("vec", cents, 1)
-        ).alias("cell"),  # Generate, not element_at — see the kernel
-    )
+    """(vec_id, cell) of ``vecs`` under the centroid frame ``cent``
+    (collected: ≤ ncells rows of model state, one tiny job)."""
+    return vecs.select("vec_id", ivf_cell(_cent_vals(cent)))
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2891,7 +2891,9 @@ def ivf_occupancy_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever under exactly the slow-staleness scenario the trigger
     exists to detect; the reference must be PINNED at train time so
     drift ACCUMULATES against it). ≤ ncells rows — bounded model
-    state, same class as the centroid frame."""
+    state, same class as the centroid frame. A delta pass reads its
+    counts from :func:`ivf_state`, which collects this frame only
+    when the entry is rebuilt; an append republishes it by link."""
     from dbt_eamples_spark.artifacts import (
         corpus_fingerprint,
         load_or_build,
@@ -2910,6 +2912,82 @@ def ivf_occupancy_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_fingerprint(sf_dir, "embeddings"),
         build,
     )
+
+
+class IvfState(NamedTuple):
+    """The persisted quantizer's model state as driver values:
+    ``cents`` the centroid values of :func:`ivf_centroids`
+    (:func:`_cent_vals`), ``ref`` the train-time per-cell counts of
+    :func:`ivf_occupancy_ref` and ``union`` the per-cell counts of
+    :func:`ivf_assign_index`, as {cell: n} maps over ≤ ncells cells.
+    Held in the session store and shared, so never mutated."""
+
+    cents: list
+    ref: dict
+    union: dict
+
+
+def ivf_state(spark: SparkSession, sf_dir: str) -> IvfState:
+    """The :class:`IvfState` of the stored IVF artifacts, held in the
+    session store per embeddings state. A miss reads them (building
+    any the store lacks): one collect of the centroids and one action
+    for both count maps, 3 jobs. An ingest batch seeds the entry for
+    the state its append leaves (:func:`carry_ivf_state`), so the next
+    batch reads none of them; any other rewrite of the table changes
+    the fingerprint, and the next use rebuilds."""
+    from dbt_eamples_spark.artifacts import session_state
+
+    def build() -> IvfState:
+        cents = _cent_vals(ivf_centroids(spark, sf_dir))
+        occ = (
+            ivf_occupancy_ref(spark, sf_dir)
+            .select("cell", "n", F.lit(True).alias("ref"))
+            .unionByName(
+                ivf_assign_index(spark, sf_dir)
+                .groupBy("cell")
+                .agg(F.count("*").alias("n"))
+                .select("cell", "n", F.lit(False).alias("ref"))
+            )
+            .collect()
+        )
+        return IvfState(
+            cents,
+            {r.cell: r.n for r in occ if r.ref},
+            {r.cell: r.n for r in occ if not r.ref},
+        )
+
+    return session_state(spark, sf_dir, "ivf_state", ("embeddings",), build)
+
+
+def carry_ivf_state(
+    spark: SparkSession, sf_dir: str, fingerprint: str, state: IvfState
+) -> None:
+    """Record ``state`` as :func:`ivf_state` of the embeddings state
+    ``fingerprint``: a batch that appended the delta it planned with
+    :func:`_ivf_delta` knows the state of the artifacts it publishes
+    there (dedup.carry_standing_count's rule)."""
+    from dbt_eamples_spark.artifacts import seed_session_state
+
+    seed_session_state(spark, sf_dir, "ivf_state", fingerprint, state)
+
+
+def ivf_delta_counts(cells: DataFrame) -> tuple[int, int, dict]:
+    """``(n, n_excluded, counts)`` of a delta (vec_id, cell, ...) from
+    ONE aggregate: its row count, its %INCR_MOD convention rows (which
+    the index leaves out; they group under cell -1, which no quantizer
+    has) and the per-cell counts of the rest. Rows with a NULL
+    ``cell`` (a delta no quantizer assigned) count in ``n`` only."""
+    from dbt_eamples_spark.operators.dedup import INCR_MOD
+
+    counts = dict(
+        V.select(cells, f"IF(vec_id % {INCR_MOD} = 0, -1, cell) AS cell")
+        .groupBy("cell")
+        .count()
+        .collect()
+    )
+    n = sum(counts.values())
+    counts.pop(None, None)
+    return n, counts.pop(-1, 0), counts
 
 
 def _occupancy_psi(base_counts: dict, union_counts: dict) -> float:
@@ -2969,81 +3047,87 @@ def ivf_assign_apply_delta(
     append); retrain == a cold from-scratch build over the union
     corpus. The %INCR_MOD convention rows of the delta are excluded
     (fingerprint→content invariant) and COUNTED in the report, per
-    the no-silent-caps rule (ADVICE r11 on the cosine twin)."""
-    from dbt_eamples_spark.operators.dedup import INCR_MOD
-
-    d_all = delta_embeddings.select(
-        "vec_id", V.as_double("embedding").alias("vec")
-    )
-    n_excluded = d_all.filter(F.col("vec_id") % INCR_MOD == 0).count()
-    cent, merged, occ_ref, report = _ivf_delta(spark, sf_dir, d_all)
+    the no-silent-caps rule (ADVICE r11 on the cosine twin). The
+    delta is assigned and counted as the ingest loop does it: cells
+    in one pinned projection, every count from one aggregate."""
+    cells = V.select(
+        delta_embeddings, "vec_id", f"{V.as_double_sql('embedding')} AS vec"
+    ).select(
+        "*", ivf_cell(ivf_state(spark, sf_dir).cents)
+    ).localCheckpoint(eager=True)  # pinned: counted, then merged
+    _, n_excluded, counts = ivf_delta_counts(cells)
+    cent, merged, occ_ref, report, _ = _ivf_delta(spark, sf_dir, cells, counts)
     report["convention_excluded"] = n_excluded
     return cent, merged, occ_ref, report
 
 
 def _ivf_delta(
-    spark: SparkSession, sf_dir: str, delta_vecs: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
-    """:func:`ivf_assign_apply_delta` over a (vec_id, vec, ...) delta,
-    without the publish; on the append path the quantizer and the
-    occupancy reference come back as the stored scans they were read
-    as, so :func:`artifacts.publish` republishes them by link."""
+    spark: SparkSession, sf_dir: str, cells: DataFrame, counts: dict
+) -> tuple[DataFrame, DataFrame, DataFrame, dict, IvfState]:
+    """:func:`ivf_assign_apply_delta` without the assignment and the
+    publish: ``cells`` is the pinned delta (vec_id, vec, cell, ...),
+    assigned with :func:`ivf_cell` against :func:`ivf_state`'s
+    centroids, and ``counts`` its per-cell standing counts
+    (:func:`ivf_delta_counts`). Returns ``(centroids, assignments,
+    occupancy_ref, report, state)``; ``state`` is the
+    :class:`IvfState` of the returned artifacts, for the caller that
+    appends the delta to carry (:func:`carry_ivf_state`).
+
+    The PSI's current side is the entry's union counts plus the
+    delta's — what a recount of the merged index would give — so the
+    append path runs no job: the quantizer and the occupancy
+    reference come back as the stored scans they were read as, which
+    :func:`artifacts.publish` republishes by link, and the assignments
+    are the stored index plus a projection of ``cells``."""
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
-    d = delta_vecs.select("vec_id", "vec").filter(F.col("vec_id") % INCR_MOD != 0)
-    cent = ivf_centroids(spark, sf_dir)
-    base_assign = ivf_assign_index(spark, sf_dir)
-    occ_ref = ivf_occupancy_ref(spark, sf_dir)
-    # pinned: delta-sized, consumed by the occupancy collect AND the
-    # merged frame (and the merged frame again at publish time)
-    delta_assign = _assign_cells(d, cent).localCheckpoint(eager=True)
-    merged = base_assign.unionByName(delta_assign)
-
-    # occupancy drift: per-cell counts are ≤ ncells rows — bounded
-    # model-state collects, the dq_distribution_drift PSI recipe,
-    # both sides in ONE job. The reference side is the TRAIN-TIME
-    # distribution, not the per-append index (ADVICE r12 — see
-    # ivf_assign_apply_delta); the current side is the union's.
-    occ = (
-        occ_ref.select("cell", "n", F.lit(True).alias("ref"))
-        .unionByName(
-            merged.groupBy("cell")
-            .agg(F.count("*").alias("n"))
-            .select("cell", "n", F.lit(False).alias("ref"))
-        )
-        .collect()
-    )
-    ref_counts = {r.cell: r.n for r in occ if r.ref}
-    union_counts = {r.cell: r.n for r in occ if not r.ref}
-    psi = _occupancy_psi(ref_counts, union_counts)
+    st = ivf_state(spark, sf_dir)
+    union = dict(st.union)
+    for cell, n in counts.items():
+        union[cell] = union.get(cell, 0) + n
+    # the reference side is the TRAIN-TIME distribution, not the
+    # per-append index (ADVICE r12 — see ivf_assign_apply_delta)
+    psi = _occupancy_psi(st.ref, union)
     report = {"occupancy_psi": round(psi, 6)}
     report["retrained"] = psi > IVF_RETRAIN_PSI
+    d = cells.where(f"vec_id % {INCR_MOD} != 0")
+    if not report["retrained"]:
+        return (
+            ivf_centroids(spark, sf_dir),
+            ivf_assign_index(spark, sf_dir).unionByName(
+                d.select("vec_id", "cell")
+            ),
+            ivf_occupancy_ref(spark, sf_dir),
+            report,
+            IvfState(st.cents, st.ref, union),
+        )
 
-    if report["retrained"]:
-        # retrain: new quantizer on the union standing corpus, full
-        # reassignment. Pinned eagerly — the scan reads the LIVE
-        # embeddings table and must survive the ingest append.
-        emb = load_table(
-            spark, sf_dir, "embeddings", parallelize=True
-        ).select(
-            "vec_id", V.as_double("embedding").alias("vec")
-        )
-        union_base = emb.filter(
-            F.col("vec_id") % INCR_MOD != 0
-        ).unionByName(d)
-        cent = _kmeans_centroids(union_base, NCENTROIDS)
-        # _kmeans_centroids already checkpoints the centroid frame
-        merged = _assign_cells(union_base, cent).localCheckpoint(
-            eager=True
-        )
-        # re-anchor the drift reference at the retrained assignment
-        # — the next append's PSI measures drift since THIS retrain
-        occ_ref = (
-            merged.groupBy("cell")
-            .agg(F.count("*").alias("n"))
-            .localCheckpoint(eager=True)
-        )
-    return cent, merged, occ_ref, report
+    # retrain: new quantizer on the union standing corpus, full
+    # reassignment. Pinned eagerly — the scan reads the LIVE
+    # embeddings table and must survive the ingest append.
+    emb = load_table(
+        spark, sf_dir, "embeddings", parallelize=True
+    ).select(
+        "vec_id", V.as_double("embedding").alias("vec")
+    )
+    union_base = emb.filter(
+        F.col("vec_id") % INCR_MOD != 0
+    ).unionByName(d.select("vec_id", "vec"))
+    # _kmeans_centroids already checkpoints the centroid frame
+    cent = _kmeans_centroids(union_base, NCENTROIDS)
+    cents = _cent_vals(cent)
+    merged = union_base.select("vec_id", ivf_cell(cents)).localCheckpoint(
+        eager=True
+    )
+    # re-anchor the drift reference at the retrained assignment — the
+    # next append's PSI measures drift since THIS retrain
+    occ_ref = (
+        merged.groupBy("cell")
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    ref = {r.cell: r.n for r in occ_ref.collect()}
+    return cent, merged, occ_ref, report, IvfState(cents, ref, ref)
 
 
 def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3052,16 +3136,17 @@ def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     %INCR_MOD == 0 delta class assigned to the frozen cells exactly
     as :func:`ivf_assign_apply_delta`'s append path would — the
     search a query running between two ingest batches actually
-    sees. Same probe/score/rank stages as similarity_ivf_topk."""
+    sees. Same probe/score/rank stages as similarity_ivf_topk; the
+    quantizer's values come from :func:`ivf_state`."""
     from dbt_eamples_spark.operators.dedup import INCR_MOD
 
     emb = load_table(
         spark, sf_dir, "embeddings", parallelize=True
     ).select("vec_id", V.as_double("embedding").alias("vec"))
-    cent = ivf_centroids(spark, sf_dir)
+    cents = ivf_state(spark, sf_dir).cents
     delta = emb.filter(F.col("vec_id") % INCR_MOD == 0)
     assign = ivf_assign_index(spark, sf_dir).unionByName(
-        _assign_cells(delta, cent)
+        delta.select("vec_id", ivf_cell(cents))
     )
     # attach vectors to assignments (the lean-index join; bucketed
     # co-location removes it at scale — ivf_assign_index docstring)
@@ -3077,7 +3162,7 @@ def _ivf_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "qvec",
         F.explode(
-            V.nearest_cells("qvec", _cent_vals(cent), NPROBE)
+            V.nearest_cells("qvec", cents, NPROBE)
         ).alias("bucket"),
     )
     scored = (

@@ -33,16 +33,6 @@ def with_audit_col(df: DataFrame, ts: dt.datetime | None = None) -> DataFrame:
     return df.withColumn(AUDIT_COL, col)
 
 
-def append_with_audit(
-    df: DataFrame, path: str, ts: dt.datetime | None = None
-) -> None:
-    """Append rows + audit column to a parquet sink path (the
-    ``append_data_to_table`` semantics). Parquet append is atomic
-    per-task; exactly-once on retry needs the anti-join guard in
-    streaming.incremental."""
-    with_audit_col(df, ts).write.mode("append").parquet(path)
-
-
 def append_with_audit_col_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: the appended frame with a FIXED audit
     timestamp (current_timestamp() can't hash-match an oracle)."""

@@ -29,25 +29,29 @@ both stable across the append), appends, fingerprints, and only
 then publishes.
 
 The embeddings loop makes ONE delta pass per batch: the batch is
-keyed, pinned and counted once, and every plan and the probe read
-that frame; both probe legs run as one action; an artifact the batch
+keyed, assigned its IVF cells and pinned once, every count comes
+from one aggregate over that frame, and every plan and the probe
+read it; both probe legs run as one action; an artifact the batch
 leaves unchanged (the IVF quantizer and its occupancy reference
 between retrains) is republished by hard link, not rewritten. What a
-batch already knows is handed to the next instead of recomputed: the
-grown standing count (in the session store, under the new corpus
-fingerprint) and the schemas of the files it wrote (the appended
-corpus and every publish). Parquet reads go through
+batch already knows is handed to the next instead of recomputed, in
+the session store under the new corpus fingerprint: the grown
+standing count and the IVF state (the quantizer's centroid values,
+its train-time reference counts and the grown per-cell counts, from
+which the next batch's occupancy drift follows); and, in the schema
+memo, the schemas of the files it wrote (the appended corpus and
+every publish). Parquet reads go through
 :func:`~dbt_eamples_spark.catalog.read_parquet`, so a scan of files
 whose schema is already known runs no inference job. A steady
-100-vector batch runs 18 Spark jobs at fixture scale.
+100-vector batch runs 14 Spark jobs at fixture scale.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dbt_eamples_spark.catalog import (
@@ -56,6 +60,9 @@ from dbt_eamples_spark.catalog import (
     remember_schema,
     table_path,
 )
+
+if TYPE_CHECKING:
+    from dbt_eamples_spark.operators.similarity import IvfState
 
 # every document-family artifact kind the composer maintains, in
 # publish order (upstream artifacts first, purely for readability —
@@ -337,36 +344,44 @@ EMBEDDING_ARTIFACT_KINDS = [
 
 def plan_embedding_artifact_deltas(
     spark: SparkSession, corpus_dir: str, keyed: DataFrame, base_n: int,
-    delta_n: int,
-) -> tuple[dict[str, DataFrame], dict]:
+    cell_counts: dict,
+) -> tuple[dict[str, DataFrame], dict, IvfState]:
     """Phase 1 of the embeddings loop: the merged frame for every
     persisted embedding-side artifact, planned against the CURRENT
-    (pre-append) embeddings state; returns ``(frames, info)`` where
-    ``info`` carries the IVF maintenance telemetry
-    (``occupancy_psi``/``ivf_retrained``) for the batch report.
-    ``keyed`` is the batch's pinned keyed delta (see
-    :func:`ingest_embeddings_batch`); ``base_n`` / ``delta_n`` count
-    the standing rows of the corpus / the batch. Each kernel handles
-    its own rebuild rule — ``cosine_base_index`` the lsh_planes
-    resize step, the IVF pair the occupancy-drift retrain trigger
-    (both rebuild paths eagerly checkpointed; the append paths read
-    the pinned delta plus on-disk artifact scans, all stable across
-    the append)."""
+    (pre-append) embeddings state; returns ``(frames, info, ivf)``
+    where ``info`` carries the IVF maintenance telemetry
+    (``occupancy_psi``/``ivf_retrained``) for the batch report and
+    ``ivf`` the :class:`~dbt_eamples_spark.operators.similarity.IvfState`
+    of the IVF artifacts to publish, for the batch to carry past its
+    append. ``keyed`` is the batch's pinned keyed delta, with its IVF
+    ``cell`` (see :func:`ingest_embeddings_batch`); ``base_n`` counts
+    the standing rows of the corpus and ``cell_counts`` those of the
+    batch per cell. Each kernel
+    handles its own rebuild rule — ``cosine_base_index`` the
+    lsh_planes resize step, the IVF pair the occupancy-drift retrain
+    trigger (both rebuild paths eagerly checkpointed). A steady batch
+    runs no job here: the append paths read the pinned delta, the
+    session-held IVF state and on-disk artifact scans, all stable
+    across the append."""
     from dbt_eamples_spark.operators import dedup as D
     from dbt_eamples_spark.operators.similarity import _ivf_delta
 
-    cent, assign, occ_ref, ivf = _ivf_delta(spark, corpus_dir, keyed)
+    cent, assign, occ_ref, report, ivf = _ivf_delta(
+        spark, corpus_dir, keyed, cell_counts
+    )
     frames = {
         "cosine_base_index": D._cosine_index_delta(
-            spark, corpus_dir, keyed, base_n, delta_n
+            spark, corpus_dir, keyed, base_n, sum(cell_counts.values())
         ),
         "ivf_centroids": cent,
         "ivf_assign_index": assign,
         "ivf_occupancy_ref": occ_ref,
     }
-    return frames, {
-        "occupancy_psi": ivf["occupancy_psi"], "ivf_retrained": ivf["retrained"]
+    info = {
+        "occupancy_psi": report["occupancy_psi"],
+        "ivf_retrained": report["retrained"],
     }
+    return frames, info, ivf
 
 
 def ingest_embeddings_batch(
@@ -392,14 +407,20 @@ def ingest_embeddings_batch(
     two-phase shape as the document loop: plan + probe against the
     pre-append state, append, fingerprint, publish.
 
-    ONE delta pass: the standing corpus count is the one the previous
-    batch carried (counted only when the table changed some other
-    way); the batch is converted, LSH-keyed at ``lsh_planes(base_n)``
-    and pinned once
-    (:func:`~dbt_eamples_spark.operators.dedup.cosine_delta_keys`) and
-    counted by one aggregate; the index append, both probe legs and
-    the IVF assignment all read that frame. A steady batch runs 18
-    Spark jobs at fixture scale (locked in test_plan_regressions.py).
+    ONE delta pass: the standing corpus count and the IVF state
+    (:func:`~dbt_eamples_spark.operators.similarity.ivf_state`) are the
+    ones the previous batch carried (rebuilt only when the table
+    changed some other way); the batch is converted, LSH-keyed at
+    ``lsh_planes(base_n)``
+    (:func:`~dbt_eamples_spark.operators.dedup.cosine_delta_keys`),
+    assigned its IVF cell against the carried centroid values and
+    pinned once, and one aggregate gives its row count, its
+    convention rows and its per-cell counts
+    (:func:`~dbt_eamples_spark.operators.similarity.ivf_delta_counts`);
+    the index append, both probe legs, the IVF assignment and the
+    occupancy drift all read that frame or those counts. A steady
+    batch runs 14 Spark jobs at fixture scale (locked in
+    test_plan_regressions.py).
 
     ``convention_excluded`` in the report counts appended vectors
     with ``vec_id % INCR_MOD == 0`` — the %INCR_MOD corpus convention
@@ -408,8 +429,8 @@ def ingest_embeddings_batch(
     them arriving later are not reported as near-dup pairs."""
     from dbt_eamples_spark.artifacts import corpus_fingerprint
     from dbt_eamples_spark.operators import dedup as D
+    from dbt_eamples_spark.operators import similarity as S
     from dbt_eamples_spark.operators import vecsql
-    from dbt_eamples_spark.operators.similarity import lsh_planes
 
     emb_path = table_path(corpus_dir, "embeddings")
     corpus = read_parquet(spark, emb_path)
@@ -422,12 +443,17 @@ def ingest_embeddings_batch(
         .dropDuplicates(["vec_id"])
         .join(corpus.select("vec_id"), "vec_id", "left_anti")
         .withColumn("vec", vecsql.as_double("embedding")),
-        lsh_planes(base_n),
-    ).localCheckpoint(eager=True)  # pinned: read by every plan, the
-    # probe and the append — and must survive the append
-    n, n_excluded = keyed.agg(
-        F.count("*"), F.count(F.when(F.col("vec_id") % D.INCR_MOD == 0, 1))
-    ).first()
+        S.lsh_planes(base_n),
+    )
+    if maintain_artifacts:
+        # each row's cell under the persisted quantizer, whose values
+        # the session holds (carried by the previous batch)
+        keyed = keyed.select("*", S.ivf_cell(S.ivf_state(spark, corpus_dir).cents))
+    keyed = keyed.localCheckpoint(eager=True)  # pinned: read by every
+    # plan, the probe and the append — and must survive the append
+    n, n_excluded, cell_counts = S.ivf_delta_counts(
+        keyed if maintain_artifacts else vecsql.select(keyed, "vec_id", "NULL AS cell")
+    )
     if n == 0:
         report = {
             "rows_appended": 0,
@@ -453,8 +479,8 @@ def ingest_embeddings_batch(
     info: dict = {}
     n_pairs = n_within = 0
     if maintain_artifacts:
-        frames, info = plan_embedding_artifact_deltas(
-            spark, corpus_dir, keyed, base_n, n - n_excluded
+        frames, info, ivf = plan_embedding_artifact_deltas(
+            spark, corpus_dir, keyed, base_n, cell_counts
         )
         # both probe legs in one action
         legs = dict(
@@ -485,6 +511,8 @@ def ingest_embeddings_batch(
     D.carry_standing_count(spark, corpus_dir, fp_union, base_n + n - n_excluded)
     published: list[str] = []
     if maintain_artifacts:
+        # and the state of the IVF artifacts published below
+        S.carry_ivf_state(spark, corpus_dir, fp_union, ivf)
         published = publish_artifacts(spark, frames, fp_union)
     if gc_max_total_bytes is not None:
         report.update(run_housekeeping(

@@ -8,8 +8,9 @@ idempotence, streaming and retrain suites stay in the slow lane
 (tests/test_ingest_pipeline.py); the plane-count resize through the
 loop is the slow test after it. The tests below those check what a
 batch does instead of recomputing: the one-action probe against the
-two probe legs it replaced, the standing count carried to the next
-batch, and the schemas remembered for the files the loops write."""
+two probe legs it replaced, the standing count and the IVF state
+carried to the next batch, and the schemas remembered for the files
+the loops write."""
 
 from __future__ import annotations
 
@@ -394,6 +395,97 @@ def test_carried_count_falls_back_after_rewrite(spark, sf_dir, tmp_path):
     ).parquet(path)
     assert ingest(emb.filter(F.col("vec_id") % 10 == 8))
     assert not ingest(emb.filter(F.col("vec_id") % 10 == 9))
+
+
+# ---- the carried IVF state ---------------------------------------------------
+
+
+def _assert_carried_ivf_state(spark, corpus_dir):
+    """The session holds the IVF state of the corpus's current state,
+    and it equals fresh reads of the IVF artifacts published there."""
+    fp = A.corpus_fingerprint(corpus_dir, "embeddings")
+    n = len(A.SESSION_EVENTS)
+    st = S.ivf_state(spark, corpus_dir)
+    assert A.SESSION_EVENTS[n:] == [("ivf_state", "hit")]
+
+    def stored(kind):
+        return spark.read.parquet(A.artifact_path(kind, fp))
+
+    assert st.cents == S._cent_vals(stored("ivf_centroids"))
+    assert st.ref == {r.cell: r.n for r in stored("ivf_occupancy_ref").collect()}
+    assert st.union == dict(
+        stored("ivf_assign_index").groupBy("cell").count().collect()
+    )
+    return st
+
+
+def test_carried_ivf_state_falls_back_after_rewrite(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each batch carries the IVF state of the artifacts it publishes
+    into the session store under the new corpus fingerprint; the next
+    batch reads it without a job. A rewrite of the table between two
+    batches changes the fingerprint, so the next batch rebuilds the
+    entry from the stored artifacts."""
+    from dbt_eamples_spark.catalog import load_table
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
+    corpus_dir = str(tmp_path / "corpus")
+    path = os.path.join(corpus_dir, "embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb.filter(
+        (F.col("vec_id") % 10 >= 1) & (F.col("vec_id") % 10 <= 7)
+    ).write.parquet(path)
+
+    def ingest(batch):
+        n = len(A.SESSION_EVENTS)
+        r = I.ingest_embeddings_batch(
+            spark, batch, corpus_dir, maintain_artifacts=True
+        )
+        assert not r["ivf_retrained"]
+        built = ("ivf_state", "build") in A.SESSION_EVENTS[n:]
+        _assert_carried_ivf_state(spark, corpus_dir)
+        return built
+
+    A.clear_session_state()
+    assert ingest(emb.filter(F.col("vec_id") % 10 == 8))
+    assert not ingest(emb.filter(F.col("vec_id") % 10 == 9))
+    # rewrite the corpus without its vec_id % 10 == 1 rows
+    kept = spark.read.parquet(path).filter(F.col("vec_id") % 10 != 1)
+    spark.createDataFrame(kept.collect(), kept.schema).write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert ingest(emb.filter(F.col("vec_id") % 10 == 0))
+
+
+def test_carried_ivf_state_after_retrain(spark, tmp_path, monkeypatch):
+    """A batch that drifts the occupancy past the trigger retrains the
+    quantizer; the state it carries is the retrained one, with the
+    reference re-anchored at the retrained assignment."""
+    def spread(lo, hi):
+        return [
+            (i, [float(((i * 37 + j * 11) % 97) - 48) / 48.0 for j in range(8)], 0)
+            for i in range(lo, hi)
+        ]
+
+    def clustered(lo, hi):
+        return [(i, [1.0 + 0.001 * float(i % 7)] + [0.01] * 7, 0) for i in range(lo, hi)]
+
+    schema = "vec_id long, embedding array<float>, label int"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
+    corpus_dir = str(tmp_path / "corpus")
+    spark.createDataFrame(spread(0, 200), schema).write.parquet(
+        os.path.join(corpus_dir, "embeddings.parquet")
+    )
+    founding = S.ivf_state(spark, corpus_dir)
+    r = I.ingest_embeddings_batch(
+        spark, spark.createDataFrame(clustered(200, 600), schema), corpus_dir,
+        maintain_artifacts=True,
+    )
+    assert r["ivf_retrained"]
+    st = _assert_carried_ivf_state(spark, corpus_dir)
+    assert st.ref == st.union != founding.ref
+    assert st.cents != founding.cents
 
 
 # ---- schemas the loops remember instead of inferring ------------------------

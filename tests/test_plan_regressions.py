@@ -521,20 +521,22 @@ class TestJobBudgets:
     matter how small its data — so CI locks them."""
 
     # a steady embeddings ingest batch (base artifacts warm) at fixture
-    # scale, measured 18: the batch keyed and pinned (3) and counted
-    # (2); the quantizer's centroid collect (1), the pinned IVF
-    # assignment (1) and its occupancy collect (2); both probe legs in
-    # one action (6: the probe-key broadcast, the candidates' distinct,
-    # the candidate and batch-vector broadcasts, the leg count's
-    # shuffle and its collect); the append (1); two Spark-written
-    # publishes (2; the unchanged quantizer and occupancy reference
-    # are linked). The standing count is carried from the previous
-    # batch, and every schema the loop reads it already knows (the
-    # appended corpus and each publish), so neither runs a job.
-    STEADY_EMBEDDINGS_BATCH_JOBS = 18
+    # scale, measured 14: the batch keyed, assigned its IVF cells and
+    # pinned (3: the corpus-id broadcast of the anti-join, the
+    # dropDuplicates shuffle, the pin); one aggregate for its row,
+    # convention and per-cell counts (2); both probe legs in one
+    # action (6: the probe-key broadcast, the candidates' distinct, the
+    # candidate and batch-vector broadcasts, the leg count's shuffle
+    # and its collect); the append (1); two Spark-written publishes
+    # (2; the unchanged quantizer and occupancy reference are linked).
+    # The standing count and the IVF state (centroid values, reference
+    # and union per-cell counts) are carried from the previous batch,
+    # and every schema the loop reads it already knows (the appended
+    # corpus and each publish), so none of them runs a job.
+    STEADY_EMBEDDINGS_BATCH_JOBS = 14
     # the founding batch of the same fixture, which also builds the
     # base index, the quantizer and the occupancy reference (measured
-    # 42)
+    # 41)
     FOUNDING_EMBEDDINGS_BATCH_JOBS = 46
 
     @staticmethod
@@ -574,6 +576,9 @@ class TestJobBudgets:
         "dedup_minhash": 3,
         "similarity_topk": 0,
         "embedding_norm_stats": 0,
+        # the quantizer's values are the session-held IVF state (2
+        # centroid collects per construction before)
+        "similarity_ivf_delta_recall_eval": 0,
     }
 
     # py4j commands sent while constructing each curation query on a
@@ -662,6 +667,50 @@ class TestJobBudgets:
             f"steady embeddings batch ran {jobs} Spark jobs (budget "
             f"{self.STEADY_EMBEDDINGS_BATCH_JOBS})"
         )
+
+    def test_steady_embedding_plan_runs_no_job(
+        self, spark, embeddings_ingest_replay, monkeypatch
+    ):
+        """Planning every embedding artifact for a steady batch that
+        neither resizes the index nor retrains the quantizer reads the
+        pinned batch, the session-held IVF state and stored scans."""
+        import os
+
+        from dbt_eamples_spark import artifacts as A
+        from dbt_eamples_spark.operators import dedup as D
+        from dbt_eamples_spark.operators import similarity as S
+        from dbt_eamples_spark.operators import vecsql
+        from dbt_eamples_spark.streaming.ingest import (
+            plan_embedding_artifact_deltas,
+        )
+
+        rep = embeddings_ingest_replay
+        corpus_dir = rep["corpus_dir"]
+        monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", rep["store"])
+        base_n = D.standing_count(spark, corpus_dir)
+        # a batch of new ids: the corpus's vec_id % 10 == 3 vectors
+        batch = vecsql.select(
+            spark.read.parquet(os.path.join(corpus_dir, "embeddings.parquet")),
+            "vec_id + 100000 AS vec_id", "embedding",
+            f"{vecsql.as_double_sql('embedding')} AS vec",
+        ).where("vec_id % 10 = 3")
+        keyed = D.cosine_delta_keys(batch, S.lsh_planes(base_n)).select(
+            "*", S.ivf_cell(S.ivf_state(spark, corpus_dir).cents)
+        ).localCheckpoint(eager=True)
+        n, n_excluded, counts = S.ivf_delta_counts(keyed)
+        assert n > 0 and n_excluded == 0
+        assert S.lsh_planes(base_n + n) == S.lsh_planes(base_n)
+        out = {}
+        events = len(A.SESSION_EVENTS)
+        jobs = self._jobs(
+            spark, "plan_steady_embeddings",
+            lambda: out.update(plan=plan_embedding_artifact_deltas(
+                spark, corpus_dir, keyed, base_n, counts
+            )),
+        )
+        assert not out["plan"][1]["ivf_retrained"]
+        assert ("ivf_state", "hit") in A.SESSION_EVENTS[events:]
+        assert jobs == 0, f"planning a steady embeddings batch ran {jobs} Spark jobs"
 
     def test_founding_embeddings_batch(self, embeddings_ingest_replay):
         jobs = embeddings_ingest_replay["jobs"][0]

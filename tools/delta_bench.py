@@ -194,8 +194,9 @@ def main() -> None:
     # ---- IVF assignments (round 12): base = 92% of vectors;
     # deltas 2%/8%. Rebuild = raw train+assign over the standing
     # corpus (what a non-incremental pipeline pays per fingerprint);
-    # delta = ivf_assign_apply_delta's append path incl. its PSI
-    # occupancy collects — the REAL batch cost, not just the plan ----
+    # delta = ivf_assign_apply_delta's append path: the pinned cell
+    # assignment and its one count aggregate, the quantizer's state
+    # session-held after the warm-up below — the REAL batch cost ----
     from dbt_eamples_spark.operators import similarity as V
     from dbt_eamples_spark.operators import vecsql
 
